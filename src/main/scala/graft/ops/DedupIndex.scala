@@ -175,7 +175,7 @@ final class DurableMinHashIndex(
       // The EXPLICIT partition count keeps the write tasks parallel: AQE
       // coalesces a bare repartition(col) of a small batch to ONE task,
       // which then opens every touched bucket's writer serially (measured
-      // ~1.0 s vs 0.37 s for a KB-sized 64-bucket append — WriteProbe);
+      // in round 19: ~1.0 s vs 0.37 s for a KB-sized 64-bucket append);
       // hashing on id_bucket still lands each bucket in exactly one task.
       shingled.withColumn("id_bucket", idBucket(col("id")))
         .repartition(storeWriteParallelism, col("id_bucket"))

@@ -438,19 +438,16 @@ object Layout {
     // completeness, not just existence: targeting is decided FROM the
     // stats, so an unsnapshotted append would silently shelter doomed rows
     Manifest.requireComplete(spark, path)
-    val f = Manifest.files(spark, path)
-    val total = f.count().toInt
-    val pickedRows = f
-      .filter(col(s"max_$keyCol") >= lo && col(s"min_$keyCol") <= hi)
-      .select(col("file"), col("n_rows")).collect()
-    if (pickedRows.isEmpty) return DeleteResult(0, total, 0L) // metadata no-op
-    val picked = pickedRows.map(_.getString(0)).toIndexedSeq
+    val plan = FilePlanner.plan(Manifest.files(spark, path), path, "deleteRange",
+      FilePlanner.between(keyCol, lo, hi), Seq(col("n_rows")))
+    val total = plan.total
+    if (plan.rows.isEmpty) return DeleteResult(0, total, 0L) // metadata no-op
+    val picked = plan.files
     // n_rows counts PHYSICAL rows: with a deletion vector present the
     // visible pre-delete count comes from the (DV-applied) picked read.
-    lazy val pickedVisible = readPickedPinned(spark, path, picked).count()
     val rowsBefore =
-      if (Manifest.currentDv(spark, path).isEmpty) pickedRows.map(_.getLong(1)).sum
-      else pickedVisible
+      if (Manifest.currentDv(spark, path).isEmpty) plan.rows.map(_.getLong(2)).sum
+      else readPickedPinned(spark, path, picked).count()
     if (isHivePartitioned(fs, path)) {
       // Per-partition COW: stage survivors in hive layout, commit by
       // FILE-LEVEL moves — untouched partitions are never planned, listed
@@ -514,11 +511,10 @@ object Layout {
       Manifest.requireLongStats(spark, path, keyCol)
       Manifest.requireComplete(spark, path)
       val latest = Manifest.latestSnapshotId(spark, path).get
-      val f = Manifest.files(spark, path)
-      val total = f.count().toInt
-      val picked = f
-        .filter(col(s"max_$keyCol") >= lo && col(s"min_$keyCol") <= hi)
-        .select("file").collect().map(_.getString(0)).toIndexedSeq
+      val plan = FilePlanner.plan(Manifest.files(spark, path), path,
+        "deleteRangeDV", FilePlanner.between(keyCol, lo, hi))
+      val total = plan.total
+      val picked = plan.files
       if (picked.isEmpty) return DeleteResult(0, total, 0L) // metadata no-op
       // Doomed positions: the residual predicate over the picked files,
       // with the EXISTING vector already applied (already-deleted rows
@@ -1751,8 +1747,8 @@ object Layout {
           require(keys.contains(keyCol),
             s"manifest has no stats for $keyCol (has: ${keys.mkString(", ")})")
           Manifest.requireLongStats(spark, path, keyCol)
-          f.filter(col(s"max_$keyCol") >= lo && col(s"min_$keyCol") <= hi)
-            .select("file").collect().map(_.getString(0)).toIndexedSeq
+          FilePlanner.plan(f, path, "overwriteWhere",
+            FilePlanner.between(keyCol, lo, hi)).files
       }
       val stage = path + (if (partitioned) PartStageSuffix else "__delnew")
       FsMaint.deleteRecursively(fs, new Path(stage))

@@ -86,21 +86,30 @@ object Manifest {
     */
   private[graft] var maxPlannedFiles: Int = 10000000
 
-  /** Collect a single-string-column frame of file paths under the
-    * [[maxPlannedFiles]] cap — pruning/filtering stays a distributed job;
-    * only the FINAL path list lands on the driver, and an over-cap plan
-    * fails typed with the recovery (compact) in the message.
+  /** Collect a per-file frame under the [[maxPlannedFiles]] cap —
+    * pruning/filtering stays a distributed job; only the FINAL rows land on
+    * the driver, and an over-cap plan fails typed with the recovery
+    * (compact) in the message.
     */
-  private def plannedPaths(df: DataFrame, table: String,
-                           what: String): IndexedSeq[String] = {
-    val rows = df.limit(maxPlannedFiles + 1).collect()
+  private[ops] def plannedRows(df: DataFrame, table: String,
+                               what: String): IndexedSeq[org.apache.spark.sql.Row] =
+    capped(df.limit(maxPlannedFiles + 1).collect().toIndexedSeq, table, what)
+
+  /** Planned rows past [[maxPlannedFiles]] fail typed. */
+  private[ops] def capped[T](rows: IndexedSeq[T], table: String,
+                             what: String): IndexedSeq[T] = {
     if (rows.length > maxPlannedFiles)
       throw new IllegalStateException(
         s"$what on $table plans more than $maxPlannedFiles files — the " +
           "file-count debt has outgrown driver-side planning; compact the " +
           "table (Layout.compactTable) or raise Manifest.maxPlannedFiles")
-    rows.map(_.getString(0)).toIndexedSeq
+    rows
   }
+
+  /** [[plannedRows]] of a single-string-column frame of file paths. */
+  private def plannedPaths(df: DataFrame, table: String,
+                           what: String): IndexedSeq[String] =
+    plannedRows(df, table, what).map(_.getString(0))
 
   private def fsOf(spark: SparkSession, table: String) =
     new Path(table).getFileSystem(spark.sessionState.newHadoopConf())
@@ -192,7 +201,12 @@ object Manifest {
       spark.createDataFrame(java.util.Arrays.asList(e.rows: _*), e.schema)
     snapCache.synchronized {
       val hit = snapCache.get(dir)
-      if (hit != null && hit.sig == sig) return localDF(hit)
+      if (hit != null) {
+        if (hit.sig == sig) return localDF(hit)
+        // The path's meaning changed (vacuum + recreate reusing ids): the
+        // stale entry must stop counting against the budget right away.
+        snapCache.remove(dir)
+      }
     }
     val df = spark.read.parquet(dir)
     val seenBefore = snapCache.synchronized {
@@ -204,6 +218,10 @@ object Manifest {
       val rows = df.collect()
       val memBytes = math.max(dataBytes,
         org.apache.spark.util.SizeEstimator.estimate(rows))
+      // An entry past the whole budget would pin more heap than the budget
+      // claims (eviction never drops the entry just inserted): serve it
+      // uncached.
+      if (memBytes > snapCacheTotalBytes) return df
       val entry = SnapEntry(sig, memBytes, df.schema, rows)
       snapCache.synchronized {
         snapCache.remove(dir)
@@ -232,16 +250,28 @@ object Manifest {
     * the staged-rewrite row count a COW commit already computed in its
     * stats scan, so callers never pay a second read pass over the staged
     * files to learn it. Path identity is the scheme-less absolute form
-    * (snapshot entries are URL-encoded `input_file_name` strings).
+    * (snapshot entries are URL-encoded `input_file_name` strings). A path
+    * the snapshot does not describe is legitimate only when it holds no
+    * rows (an empty stage still writes one schema-only file, which the
+    * stats scan never sees); one holding rows would silently lower the sum
+    * — and inflate every count derived from it — so it fails typed.
     */
-  private[ops] def rowsOfFiles(spark: SparkSession, table: String, id: Int,
-                               paths: Seq[String]): Long = {
+  private[graft] def rowsOfFiles(spark: SparkSession, table: String, id: Int,
+                                 paths: Seq[String]): Long = {
     if (paths.isEmpty) return 0L
-    val want = paths.map(p => decodePath(p).toUri.getPath).toSet
-    snapshotDF(spark, table, id).select("file", "n_rows").collect()
-      .iterator
-      .filter(r => want(decodePath(r.getString(0)).toUri.getPath))
-      .map(_.getLong(1)).sum
+    def norm(p: String) = decodePath(p).toUri.getPath
+    val want = paths.map(norm).toSet
+    val matched = snapshotDF(spark, table, id).select("file", "n_rows").collect()
+      .map(r => norm(r.getString(0)) -> r.getLong(1)).filter(e => want(e._1))
+    val seen = matched.map(_._1).toSet
+    val unmatched = paths.filterNot(p => seen(norm(p)))
+    if (unmatched.nonEmpty &&
+        spark.read.parquet(unmatched.map(escapeGlob): _*).count() > 0)
+      throw new IllegalStateException(
+        s"snapshot-$id under $table has no entry for ${unmatched.length} " +
+          s"staged file(s) holding rows (${unmatched.mkString(", ")}) — " +
+          "their row count is unknown, so the survivor sum would be wrong")
+    matched.iterator.map(_._2).sum
   }
 
   private def trashDir(table: String) = new Path(table, "_graft_trash")
@@ -263,9 +293,9 @@ object Manifest {
 
   /** The column [[statsOf]] aggregates for `c`: the normalized long for
     * orderable keys; the RAW string for STRING keys — string min/max order
-    * in binary UTF-8 (Spark's own string comparison), consumed by the SQL
-    * plan-time file skipper ([[graft.sources]]), [[scanRangeString]], and
-    * the bloom builders — never by the long-domain range surfaces, which
+    * in binary UTF-8 (Spark's own string comparison), consumed by
+    * [[FilePlanner]] (the SQL scans and [[scanRangeString]]) and the bloom
+    * builders — never by the long-domain range surfaces, which
     * refuse typed on string-stat columns ([[requireLongStatsIn]]).
     */
   private def statOrStringCol(c: String, dt: DataType): Column = dt match {
@@ -2212,16 +2242,17 @@ object Manifest {
       require(f.columns.contains(s"min_$c"),
         s"manifest snapshot has no stats for column $c")
       requireLongStatsIn(f, c, "scanBox/scanRange") }
-    val all = f.count().toInt
-    val overlap = preds.map { case (c, lo, hi) =>
-      col(s"max_$c") >= lo && col(s"min_$c") <= hi }.reduce(_ && _)
-    val picked = plannedPaths(f.filter(overlap).select("file"), table, "scanBox")
+    val plan = FilePlanner.plan(f, table, "scanBox", boxOf(preds))
     val base = readFiles(spark, table,
-      resolveForRead(spark, table, picked, useTrash), schema, physical, dv)
+      resolveForRead(spark, table, plan.files, useTrash), schema, physical, dv)
     val residual = preds.map { case (c, lo, hi) =>
       statCol(c, base.schema(c).dataType).between(lo, hi) }.reduce(_ && _)
-    (base.filter(residual), picked.length, all)
+    (base.filter(residual), plan.rows.length, plan.total)
   }
+
+  /** A box's per-column ranges as planner conjuncts. */
+  private def boxOf(preds: Seq[(String, Long, Long)]) =
+    preds.flatMap { case (c, lo, hi) => FilePlanner.between(c, lo, hi) }
 
   /** 1-D convenience form of [[scanBox]]. */
   def scanRange(spark: SparkSession, table: String, keyCol: String,
@@ -2243,15 +2274,13 @@ object Manifest {
       s"manifest snapshot has no stats for column $keyCol")
     require(f.schema(s"min_$keyCol").dataType == StringType,
       s"column `$keyCol` carries long-normalized stats — use scanRange")
-    val all = f.count().toInt
-    val picked = plannedPaths(
-      f.filter(col(s"max_$keyCol") >= lo && col(s"min_$keyCol") <= hi)
-        .select("file"), table, "scanRangeString")
+    val plan = FilePlanner.plan(f, table, "scanRangeString",
+      FilePlanner.betweenStrings(keyCol, lo, hi))
     val base = readFiles(spark, table,
-      resolveForRead(spark, table, picked, useTrash = false),
+      resolveForRead(spark, table, plan.files, useTrash = false),
       storedSchema(spark, table, id), physicalNames(spark, table, id),
       dvEntries(spark, table, id))
-    (base.filter(col(keyCol).between(lo, hi)), picked.length, all)
+    (base.filter(col(keyCol).between(lo, hi)), plan.rows.length, plan.total)
   }
 
   /** A point-lookup scan's skipping evidence: `filesRead` after bloom
@@ -2287,34 +2316,15 @@ object Manifest {
     require(f.columns.contains(s"min_$keyCol"),
       s"manifest snapshot has no stats for column $keyCol")
     requireLongStatsIn(f, keyCol, "scanKeys")
-    val total = f.count().toInt
-    val mn = col(s"min_$keyCol"); val mx = col(s"max_$keyCol")
-    val inRange = values.map(v => mn <= v && mx >= v).reduce(_ || _)
-    val vs = values.toArray // closure-captured; bounded (an IN list)
-    val (picked, rangeCandidates) =
-      if (f.columns.contains(s"bloom_$keyCol")) {
-        import spark.implicits._
-        val flagged = f.filter(inRange)
-          .select(col("file"), col(s"bloom_$keyCol")).as[(String, Array[Byte])]
-          .map { case (path, sketch) =>
-            (path, sketch != null && {
-              val bf = BloomFilter.readFrom(sketch)
-              vs.exists(bf.mightContainLong)
-            })
-          }.collect()
-        (flagged.collect { case (p, true) => p }.toIndexedSeq, flagged.length)
-      } else {
-        val cand = f.filter(inRange).select("file")
-          .collect().map(_.getString(0)).toIndexedSeq
-        (cand, cand.length)
-      }
+    val plan = FilePlanner.plan(f, table, "scanKeys", FilePlanner.in(keyCol, values))
     val base = readFiles(spark, table,
-      resolveForRead(spark, table, picked, useTrash = false),
+      resolveForRead(spark, table, plan.files, useTrash = false),
       storedSchema(spark, table, id), physicalNames(spark, table, id),
       dvEntries(spark, table, id))
     val residual =
       statCol(keyCol, base.schema(keyCol).dataType).isInCollection(values)
-    KeyScan(base.filter(residual), picked.length, rangeCandidates, total)
+    KeyScan(base.filter(residual), plan.rows.length, plan.rangeCandidates,
+      plan.total)
   }
 
   /** STRING-key point/IN-list scan — the UUID/URL lookup case: string
@@ -2336,28 +2346,14 @@ object Manifest {
     require(f.columns.contains(s"bloom_$keyCol"),
       s"manifest snapshot has no bloom sketch for column $keyCol — string keys " +
         "carry no range stats; build one with createWithBloom")
-    val total = f.count().toInt
-    val hashes = values.map { v =>
-      new org.apache.spark.sql.catalyst.expressions.XxHash64(
-        Seq(org.apache.spark.sql.catalyst.expressions.Literal(
-          org.apache.spark.unsafe.types.UTF8String.fromString(v), StringType)))
-        .eval(null).asInstanceOf[Long]
-    }.toArray
-    import spark.implicits._
-    val flagged = f.select(col("file"), col(s"bloom_$keyCol")).as[(String, Array[Byte])]
-      .map { case (path, sketch) =>
-        (path, sketch != null && {
-          val bf = BloomFilter.readFrom(sketch)
-          hashes.exists(bf.mightContainLong)
-        })
-      }.collect()
-    val picked = flagged.collect { case (p, true) => p }.toIndexedSeq
+    val plan = FilePlanner.plan(f, table, "scanKeysString",
+      FilePlanner.inStrings(keyCol, values))
     val base = readFiles(spark, table,
-      resolveForRead(spark, table, picked, useTrash = false),
+      resolveForRead(spark, table, plan.files, useTrash = false),
       storedSchema(spark, table, id), physicalNames(spark, table, id),
       dvEntries(spark, table, id))
     KeyScan(base.filter(col(keyCol).isInCollection(values)),
-      picked.length, flagged.length, total)
+      plan.rows.length, plan.rangeCandidates, plan.total)
   }
 
   /** Metadata-accelerated range COUNT: files whose key range is FULLY
@@ -2392,19 +2388,15 @@ object Manifest {
       require(f.columns.contains(s"cnt_$c"),
         s"manifest snapshot predates per-key counts — re-run Manifest.create")
     }
-    val all = f.count().toInt
-    val overlap = preds.map { case (c, lo, hi) =>
-      col(s"max_$c") >= lo && col(s"min_$c") <= hi }.reduce(_ && _)
-    val contained = preds.map { case (c, lo, hi) =>
-      col(s"min_$c") >= lo && col(s"max_$c") <= hi }.reduce(_ && _)
     val noNulls = preds.map { case (c, _, _) =>
       col(s"cnt_$c") === col("n_rows") }.reduce(_ && _)
-    val rows = f.filter(overlap)
-      .select(col("file"), (contained && noNulls).as("meta"), col("n_rows"))
-      .collect()
-    requireFresh(spark, table, rows.map(_.getString(0)).toIndexedSeq)
-    val metaCount = rows.iterator.filter(_.getBoolean(1)).map(_.getLong(2)).sum
-    val scan = rows.iterator.filterNot(_.getBoolean(1)).map(_.getString(0)).toIndexedSeq
+    val plan = FilePlanner.plan(f, table, "countBox", boxOf(preds),
+      Seq(noNulls, col("n_rows")))
+    requireFresh(spark, table, plan.files)
+    val (meta, boundary) =
+      plan.rows.partition(r => r.getBoolean(1) && r.getBoolean(2))
+    val metaCount = meta.map(_.getLong(3)).sum
+    val scan = boundary.map(_.getString(0))
     val scanCount =
       if (scan.isEmpty) 0L
       else boundaryRead(table) {
@@ -2414,7 +2406,7 @@ object Manifest {
           statCol(c, base.schema(c).dataType).between(lo, hi) }.reduce(_ && _))
           .count()
       }
-    (metaCount + scanCount, scan.length, all)
+    (metaCount + scanCount, scan.length, plan.total)
   }
 
   /** Metadata-only global MIN/MAX of a profiled key (normalized long
@@ -2432,10 +2424,8 @@ object Manifest {
     require(f.columns.contains(s"min_$keyCol"),
       s"manifest snapshot has no stats for column $keyCol")
     requireLongStatsIn(f, keyCol, "minMax")
-    requireFresh(spark, table,
-      f.select("file").collect().map(_.getString(0)).toIndexedSeq)
-    val r = f.agg(min(col(s"min_$keyCol")), max(col(s"max_$keyCol"))).head()
-    if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1)))
+    requireFresh(spark, table, plannedPaths(f.select("file"), table, "minMax"))
+    FilePlanner.bounds(f, keyCol)
   }
 
   def countRange(spark: SparkSession, table: String, keyCol: String,
@@ -2446,24 +2436,18 @@ object Manifest {
     requireLongStatsIn(f, keyCol, "countRange")
     require(f.columns.contains(s"cnt_$keyCol"),
       s"manifest snapshot predates per-key counts — re-run Manifest.create")
-    val all = f.count().toInt
-    val mn = col(s"min_$keyCol"); val mx = col(s"max_$keyCol")
-    val rows = f.filter(mx >= lo && mn <= hi)
-      .select(col("file"), (mn >= lo && mx <= hi).as("inside"),
-        col(s"cnt_$keyCol"))
-      .collect()
-    requireFresh(spark, table, rows.map(_.getString(0)).toIndexedSeq)
+    val plan = FilePlanner.plan(f, table, "countRange",
+      FilePlanner.between(keyCol, lo, hi), Seq(col(s"cnt_$keyCol")))
+    requireFresh(spark, table, plan.files)
     // A deletion vector invalidates the metadata count (cnt_<c> counts
     // PHYSICAL rows): every overlapping file becomes a boundary file,
     // counted through the scan with the DV applied — correct, just not
     // metadata-only.
     val dvCnt = currentDv(spark, table)
-    val metaCount =
-      if (dvCnt.isDefined) 0L
-      else rows.iterator.filter(_.getBoolean(1)).map(_.getLong(2)).sum
-    val boundary =
-      (if (dvCnt.isDefined) rows.iterator else rows.iterator.filterNot(_.getBoolean(1)))
-        .map(_.getString(0)).toIndexedSeq
+    val (inside, outside) =
+      plan.rows.partition(r => dvCnt.isEmpty && r.getBoolean(1))
+    val metaCount = inside.map(_.getLong(2)).sum
+    val boundary = outside.map(_.getString(0))
     val boundaryCount =
       if (boundary.isEmpty) 0L
       else boundaryRead(table) {
@@ -2472,7 +2456,7 @@ object Manifest {
         base.filter(statCol(keyCol, base.schema(keyCol).dataType).between(lo, hi))
           .count()
       }
-    (metaCount + boundaryCount, boundary.length, all)
+    (metaCount + boundaryCount, boundary.length, plan.total)
   }
 
   /** Rows in files ADDED after snapshot `sinceId` (latest ∖ since, by file

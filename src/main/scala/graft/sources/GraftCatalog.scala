@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.ops.Manifest
+import graft.ops.{FilePlanner, Manifest}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
@@ -91,80 +91,22 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog {
     // alone collide across partition dirs, and trash-resolved paths still
     // match (the trash layout preserves the k=v/ segments).
     val snapFrame = Manifest.snapshotDF(spark, path, id)
-    // ONE collect serves both plan-time handoffs: exact byte lengths for
-    // the descriptor index, and per-file [min, max] key stats for
-    // SQL-plan-time FILE SKIPPING (GraftStatsSkip) — rows ∝ file count,
-    // values are longs; bloom sketches are never collected.
-    val statKeys = snapFrame.schema.fieldNames.toSeq
-      .collect { case f if f.startsWith("min_") => f.drop(4) }
-      .filter(k => snapFrame.columns.contains(s"max_$k"))
-    val hasBytes = snapFrame.columns.contains("n_bytes")
-    val selCols = Seq("file") ++ (if (hasBytes) Seq("n_bytes") else Nil) ++
-      statKeys.flatMap(k => Seq(s"min_$k", s"max_$k"))
-    val rows = snapFrame.selectExpr(selCols.map(c => s"`$c`"): _*).collect()
-    val statBase = if (hasBytes) 2 else 1
     val sizes: Option[Map[String, Long]] =
-      if (!hasBytes || rows.isEmpty || rows.exists(_.isNullAt(1))) None
-      else Some(rows.map(r =>
-        GraftPathKey.of(path, Manifest.decodePath(r.getString(0))) ->
-          r.getLong(1)).toMap)
-    // A stats column is LONG-normalized (integral/date/timestamp keys) or
-    // STRING (string keys carry binary-UTF-8 min/max) — branch by the
-    // snapshot column's own type.
-    val statIsString: Map[String, Boolean] = statKeys.map(k =>
-      k -> (snapFrame.schema(s"min_$k").dataType ==
-        org.apache.spark.sql.types.StringType)).toMap
-    val fileStats: Option[GraftStatsSkip.FileStats] =
-      if (statKeys.isEmpty || rows.isEmpty) None
-      else Some(rows.map { r =>
-        val st = statKeys.zipWithIndex.map { case (k, i) =>
-          val o = statBase + 2 * i
-          val bound: GraftStatsSkip.Bound =
-            if (statIsString(k)) GraftStatsSkip.StrBounds(
-              if (r.isNullAt(o)) None else Some(r.getString(o)),
-              if (r.isNullAt(o + 1)) None else Some(r.getString(o + 1)))
-            else GraftStatsSkip.LongBounds(
-              if (r.isNullAt(o)) None else Some(r.getLong(o)),
-              if (r.isNullAt(o + 1)) None else Some(r.getLong(o + 1)))
-          k -> bound
-        }.toMap
-        GraftPathKey.of(path, Manifest.decodePath(r.getString(0))) -> st
-      }.toMap)
-    // Bloom-sketch plan-time probe: `=`/`IN` conjuncts on bloom-profiled
-    // columns drop files whose sketch refutes every probe value — the SQL
-    // analogue of Manifest.scanKeys/scanKeysString. The sketches are NEVER
-    // collected wholesale (per-file sketches are KBs each — GBs at 100 TB
-    // file counts): each (column, values) probe is one distributed
-    // file-count-sized job over the snapshot's bloom column, collecting
-    // only the surviving file keys, cached for the plan's repeated
-    // listFiles calls.
-    val bloomCols: Set[String] = snapFrame.schema.fieldNames
-      .collect { case f if f.startsWith("bloom_") => f.drop(6) }.toSet
-    val bloomProbe: Option[GraftStatsSkip.BloomProbe] =
-      if (bloomCols.isEmpty) None
-      else Some {
-        val cache = scala.collection.concurrent.TrieMap
-          .empty[(String, Seq[Long]), Set[String]]
-        (c: String, vs: Seq[Long]) =>
-          if (!bloomCols(c)) None
-          else Some(cache.getOrElseUpdate((c, vs), {
-            import spark.implicits._
-            val arr = vs.toArray
-            snapFrame
-              .select(org.apache.spark.sql.functions.col("file"),
-                org.apache.spark.sql.functions.col(s"bloom_$c"))
-              .as[(String, Array[Byte])]
-              .map { case (f, sketch) =>
-                (f, sketch != null && {
-                  val bf = org.apache.spark.util.sketch.BloomFilter
-                    .readFrom(sketch)
-                  arr.exists(bf.mightContainLong)
-                })
-              }.collect()
-              .collect { case (f, true) =>
-                GraftPathKey.of(path, Manifest.decodePath(f)) }.toSet
-          }))
+      if (!snapFrame.columns.contains("n_bytes")) None
+      else {
+        val rows = snapFrame.select("file", "n_bytes").collect()
+        if (rows.isEmpty || rows.exists(_.isNullAt(1))) None
+        else Some(rows.map(r =>
+          GraftPathKey.of(path, Manifest.decodePath(r.getString(0))) ->
+            r.getLong(1)).toMap)
       }
+    // SQL-plan-time FILE SKIPPING: the scan's pushed data filters pick files
+    // through the same planner the Scala path uses (min/max stats plus one
+    // distributed bloom probe over the snapshot frame — sketches are never
+    // collected), keyed like the descriptors.
+    val pick = (filters: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
+      FilePlanner.pick(snapFrame, path, filters).map(_.iterator.map(f =>
+        GraftPathKey.of(path, Manifest.decodePath(f))).toSet)
     // Rename indirection: files carry PHYSICAL column names; the served
     // table reports the snapshot's LOGICAL names and the scan layer
     // translates (GraftRenamedTable / RenamingScanBuilder).
@@ -178,12 +120,11 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog {
       // The LATEST view is writable: INSERT INTO / DELETE FROM (and MERGE
       // INTO via the extension rule) route to the engine's COW machinery.
       new GraftMutableTable(s"$catalogName.$path@v$id", spark,
-        files.toIndexedSeq, path, physSchema, renames, sizes, dvPaths,
-        fileStats, bloomProbe)
+        files.toIndexedSeq, path, physSchema, renames, sizes, dvPaths, pick)
     else {
       val base = new GraftParquetTable(s"$catalogName.$path@v$id", spark,
         CaseInsensitiveStringMap.empty(), files.toIndexedSeq, path, physSchema,
-        sizes, dvPaths, fileStats, bloomProbe)
+        sizes, dvPaths, pick)
       if (renames.isEmpty) base else new GraftRenamedTable(base, renames)
     }
   }

@@ -57,8 +57,8 @@ final class GraftMutableTable(
     val renames: Map[String, String] = Map.empty,
     fileSizes: Option[Map[String, Long]] = None,
     val dvPaths: Option[Seq[String]] = None,
-    fileStats: Option[GraftStatsSkip.FileStats] = None,
-    bloomProbe: Option[GraftStatsSkip.BloomProbe] = None)
+    pick: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
+      Option[Set[String]] = _ => None)
   extends org.apache.spark.sql.connector.catalog.Table
   with org.apache.spark.sql.connector.catalog.SupportsRead
   with org.apache.spark.sql.connector.catalog.SupportsWrite
@@ -77,7 +77,7 @@ final class GraftMutableTable(
   // [[GraftRenamedTable]].
   private[sources] val readDelegate = new GraftParquetTable(tableName, spark,
     CaseInsensitiveStringMap.empty(), files, tableRoot, userSchema, fileSizes,
-    dvPaths, fileStats, bloomProbe)
+    dvPaths, pick)
   private val invRenames = renames.map(_.swap)
 
   override def name(): String = tableName

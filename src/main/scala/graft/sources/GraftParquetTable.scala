@@ -3,9 +3,9 @@ package graft.sources
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, ExprId, Expression, GenericInternalRow}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
-import org.apache.spark.sql.execution.datasources.{FileFormat, FileStatusCache, PartitionPath, PartitionSpec, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.{FileFormat, FileStatusCache, PartitionDirectory, PartitionPath, PartitionSpec, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetUtils}
 import org.apache.spark.sql.execution.datasources.v2.FileTable
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
@@ -13,6 +13,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
 /** A read-only v2 parquet table over an EXACT file list — what the SQL
@@ -34,8 +35,7 @@ class GraftParquetTable(
     userSchema: Option[StructType],
     fileSizes: Option[Map[String, Long]] = None,
     val dvPaths: Option[Seq[String]] = None,
-    fileStats: Option[GraftStatsSkip.FileStats] = None,
-    bloomProbe: Option[GraftStatsSkip.BloomProbe] = None)
+    pick: Seq[Expression] => Option[Set[String]] = _ => None)
   extends FileTable(spark, opts, files, userSchema) {
 
   override def name(): String = tableName
@@ -133,11 +133,9 @@ class GraftParquetTable(
     fileSizes match {
       case Some(m) if paths.forall(p => m.contains(key(p))) =>
         new GraftDescriptorFileIndex(spark,
-          paths.map(p => p -> m(key(p))), partitionSpecOf(), fileStats, key,
-          bloomProbe)
+          paths.map(p => p -> m(key(p))), partitionSpecOf(), pick, key)
       case _ =>
-        new GraftExactFileIndex(spark, paths, partitionSpecOf(), fileStats,
-          key, bloomProbe)
+        new GraftExactFileIndex(spark, paths, partitionSpecOf(), pick, key)
     }
   }
 }
@@ -178,7 +176,6 @@ private[sources] final class RenamingScanBuilder(
   extends org.apache.spark.sql.connector.read.ScanBuilder
   with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns
   with org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters {
-  import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression}
   private val inv = renames.map(_.swap)
   private def toPhys(e: Expression): Expression = e.transform {
     case a: AttributeReference if renames.contains(a.name) =>
@@ -221,6 +218,39 @@ private[sources] final class RenamingScan(
     }
 }
 
+/** Manifest-stats FILE SKIPPING for the catalog's file indexes: `pick`
+  * hands a scan's pushed data filters to the shared planner
+  * ([[graft.ops.FilePlanner]]) and gets back the keys ([[GraftPathKey]]) of
+  * the files that can match — None when nothing constrains — so a
+  * `SELECT ... WHERE key BETWEEN lo AND hi` PLANS only the overlapping
+  * files, by exactly the rules the Scala path prunes with. Applied after
+  * partition pruning; memoized per filter set, since one plan lists files
+  * more than once — keyed by column NAME, because one statement can scan
+  * the table through several relations whose attribute ids differ. The DV
+  * read rewrite keeps the same index, so merge-on-read SQL scans skip
+  * identically.
+  */
+private[sources] trait PlannedListing extends PartitioningAwareFileIndex {
+  protected def pick: Seq[Expression] => Option[Set[String]]
+  protected def keyOf: Path => String
+  private val picked = TrieMap.empty[Seq[Expression], Option[Set[String]]]
+
+  override def listFiles(partitionFilters: Seq[Expression],
+                         dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+    val base = super.listFiles(partitionFilters, dataFilters)
+    val byName = dataFilters.map(_.transform {
+      case a: AttributeReference => a.withExprId(ExprId(0)) })
+    picked.getOrElseUpdate(byName, pick(dataFilters)).fold(base) { keep =>
+      base.flatMap { pd =>
+        val kept = pd.files.filter(f => keep(keyOf(f.getPath)))
+        if (kept.isEmpty) None
+        else if (kept.length == pd.files.length) Some(pd)
+        else Some(pd.copy(files = kept))
+      }
+    }
+  }
+}
+
 /** A [[PartitioningAwareFileIndex]] over caller-supplied (path, length)
   * DESCRIPTORS — zero filesystem calls at plan time. The manifest's
   * distributed pruning already knows every surviving file's exact byte
@@ -231,22 +261,10 @@ private[sources] final class RenamingScan(
   */
 private[graft] final class GraftDescriptorFileIndex(
     spark: SparkSession, entries: Seq[(Path, Long)], spec: PartitionSpec,
-    fileStats: Option[GraftStatsSkip.FileStats] = None,
-    statKeyOf: Path => String = _.getName,
-    bloomProbe: Option[GraftStatsSkip.BloomProbe] = None)
+    protected val pick: Seq[Expression] => Option[Set[String]] = _ => None,
+    protected val keyOf: Path => String = _.getName)
   extends PartitioningAwareFileIndex(spark, Map.empty, None,
-    FileStatusCache.getOrCreate(spark)) {
-
-  // Manifest-stats FILE SKIPPING: pushed data filters prune the planned
-  // files by per-file [min, max] overlap (GraftStatsSkip) — the SQL-path
-  // analogue of Manifest.scanBox, applied AFTER partition pruning.
-  override def listFiles(partitionFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-                         dataFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : Seq[org.apache.spark.sql.execution.datasources.PartitionDirectory] = {
-    val base = super.listFiles(partitionFilters, dataFilters)
-    fileStats.fold(base)(
-      GraftStatsSkip.prune(base, dataFilters, _, statKeyOf, bloomProbe))
-  }
+    FileStatusCache.getOrCreate(spark)) with PlannedListing {
 
   // FileStatus paths are FS-QUALIFIED at construction (scheme + authority
   // — pure string work against the cached FileSystem object, zero RPCs).
@@ -287,20 +305,10 @@ private[graft] final class GraftDescriptorFileIndex(
   */
 private[sources] final class GraftExactFileIndex(
     spark: SparkSession, filePaths: Seq[Path], spec: PartitionSpec,
-    fileStats: Option[GraftStatsSkip.FileStats] = None,
-    statKeyOf: Path => String = _.getName,
-    bloomProbe: Option[GraftStatsSkip.BloomProbe] = None)
+    protected val pick: Seq[Expression] => Option[Set[String]] = _ => None,
+    protected val keyOf: Path => String = _.getName)
   extends PartitioningAwareFileIndex(spark, Map.empty, None,
-    FileStatusCache.getOrCreate(spark)) {
-
-  // Same stats-based file skipping as GraftDescriptorFileIndex.
-  override def listFiles(partitionFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-                         dataFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : Seq[org.apache.spark.sql.execution.datasources.PartitionDirectory] = {
-    val base = super.listFiles(partitionFilters, dataFilters)
-    fileStats.fold(base)(
-      GraftStatsSkip.prune(base, dataFilters, _, statKeyOf, bloomProbe))
-  }
+    FileStatusCache.getOrCreate(spark)) with PlannedListing {
 
   private val byParent: Map[Path, Array[FileStatus]] =
     filePaths.groupBy(_.getParent).map { case (parent, paths) =>

@@ -1004,4 +1004,30 @@ class ManifestSpec extends SparkSpec {
     assert(Manifest.latestSnapshotId(spark, stage).contains(id))
     assert(Manifest.files(spark, stage).count() == nFiles)
   }
+
+  test("rowsOfFiles fails typed on a staged path the snapshot does not describe") {
+    val stage = stageClustered("manifest_rows_of", 4)
+    val id = Manifest.create(spark, stage, "doc_id")
+    val entries = Manifest.files(spark, stage).select("file").collect()
+      .map(_.getString(0)).toSeq
+    assert(Manifest.rowsOfFiles(spark, stage, id, entries) ==
+      spark.read.parquet(stage).count())
+    val fs = new Path(stage).getFileSystem(spark.sessionState.newHadoopConf())
+    def partFile(dir: String): String = fs.listStatus(new Path(dir))
+      .map(_.getPath.toString).filter(_.contains("part-")).head
+    // A schema-only file (what an empty stage writes) carries no stats row
+    // and no rows: legitimately unmatched, it adds nothing.
+    val empty = tmpDir("manifest_rows_of_empty") + "/e"
+    spark.read.parquet(stage).limit(0).coalesce(1).write.parquet(empty)
+    assert(Manifest.rowsOfFiles(spark, stage, id, entries.take(1) :+ partFile(empty)) ==
+      Manifest.rowsOfFiles(spark, stage, id, entries.take(1)))
+    // An unmatched file HOLDING rows would silently lower the survivor sum
+    // (inflating a COW delete's count): typed refusal naming the path.
+    val stray = tmpDir("manifest_rows_of_stray") + "/s"
+    spark.read.parquet(stage).limit(5).coalesce(1).write.parquet(stray)
+    val e = intercept[IllegalStateException] {
+      Manifest.rowsOfFiles(spark, stage, id, entries :+ partFile(stray))
+    }
+    assert(e.getMessage.contains(new Path(partFile(stray)).getName), e.getMessage)
+  }
 }

@@ -52,4 +52,42 @@ class SnapshotCacheSpec extends SparkSpec {
       "single-read snapshot must not be admitted")
     assert(rows2.nonEmpty)
   }
+
+  test("a signature change drops the stale entry at once") {
+    val stage = tmpDir("snapcache_sig") + "/documents"
+    spark.read.parquet(s"$sf001/documents.parquet")
+      .repartition(2).write.parquet(stage)
+    val id = Manifest.create(spark, stage, "doc_id")
+    Manifest.clearSnapshotCache()
+    Manifest.snapshotDF(spark, stage, id): Unit
+    Manifest.snapshotDF(spark, stage, id): Unit
+    assert(Manifest.snapshotCacheSize == 1)
+    // Change the dir's listing signature (a recreated snapshot reusing the
+    // id looks like this): the old entry must stop counting right away,
+    // not linger until the new signature is admitted.
+    val dir = new org.apache.hadoop.fs.Path(s"$stage/_graft_manifest/snapshot-$id")
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.create(new org.apache.hadoop.fs.Path(dir, "_touched")).close()
+    val rows = Manifest.snapshotDF(spark, stage, id).count()
+    assert(Manifest.snapshotCacheSize == 0,
+      "a signature-mismatch hit must remove the stale entry")
+    assert(rows == Manifest.files(spark, stage).count())
+  }
+
+  test("an entry larger than the whole budget is served uncached") {
+    val stage = tmpDir("snapcache_big") + "/documents"
+    spark.read.parquet(s"$sf001/documents.parquet")
+      .repartition(4).write.parquet(stage)
+    val id = Manifest.create(spark, stage, "doc_id")
+    Manifest.clearSnapshotCache()
+    val prev = Manifest.snapCacheTotalBytes
+    Manifest.snapCacheTotalBytes = 1L
+    try {
+      val first = Manifest.snapshotDF(spark, stage, id).orderBy("file").collect()
+      val second = Manifest.snapshotDF(spark, stage, id).orderBy("file").collect()
+      assert(Manifest.snapshotCacheSize == 0,
+        "an entry past snapCacheTotalBytes must never be admitted")
+      assert(first.sameElements(second))
+    } finally Manifest.snapCacheTotalBytes = prev
+  }
 }

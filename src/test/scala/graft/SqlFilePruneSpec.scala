@@ -4,10 +4,10 @@ import graft.functions.Hashing
 import graft.ops.{Layout, Manifest}
 import org.apache.spark.sql.functions._
 
-/** SQL-plan-time FILE SKIPPING (GraftStatsSkip): the catalog threads each
-  * snapshot's per-file [min, max] stats into its file index, so a pushed
-  * range/equality predicate prunes FILES at `listFiles` — the SQL analogue
-  * of `Manifest.scanRange`, on both the DSv2 scan and the V1 scan the DV
+/** SQL-plan-time FILE SKIPPING: the catalog's file index hands pushed
+  * data filters to the shared planner (`graft.ops.FilePlanner`), so a
+  * pushed range/equality predicate prunes FILES at `listFiles` — the same
+  * pruning as `Manifest.scanRange`, on both the DSv2 scan and the V1 scan the DV
   * read rewrite swaps in. Without it every snapshot file plans and only
   * row-group stats save the day — a full-listing plan at 100 TB.
   */
