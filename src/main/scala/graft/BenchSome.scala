@@ -30,6 +30,8 @@ object BenchSome {
       graft.queries.SourceQueries.prestage(spark, sfDir)
     } catch { case _: Throwable => () }
     val calib = Bench.calibrate(spark)
+    // Warm-up: the first scan pays JIT and page-cache cost; only the
+    // second is the printed calib_scan_sec baseline.
     Bench.calibrateScan(spark, sfDir): Unit
     val calibScan = Bench.calibrateScan(spark, sfDir)
     println(f"""{"calib_sec":$calib%.3f,"calib_scan_sec":$calibScan%.3f}""")
@@ -38,16 +40,19 @@ object BenchSome {
     args.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query: $name"))
+      var failed = false
       val samples = (1 to repeats).map { _ =>
         val t0 = System.nanoTime()
         try {
           val df = fn(spark, sfDir)
           df.count()
           graft.ops.Caching.release(df)
-        } catch { case e: Throwable => println(s"ERR $name: $e") }
+        } catch { case e: Throwable => failed = true; println(s"ERR $name: $e") }
         (System.nanoTime() - t0) / 1e9
       }.sorted
-      println(f"""{"query":"$name","sec":${samples.head}%.3f,"spread":${samples(samples.length / 2) - samples.head}%.3f}""")
+      // A fast failure must not read as a speedup in an A/B comparison.
+      val err = if (failed) ""","err":true""" else ""
+      println(f"""{"query":"$name","sec":${samples.head}%.3f,"spread":${samples(samples.length / 2) - samples.head}%.3f$err}""")
     }
     spark.stop()
   }

@@ -30,23 +30,25 @@ private[graft] object FsMaint {
     * A directory vanishing mid-walk (concurrent maintenance) is treated as
     * empty, matching the iterator semantics this replaces. Returns false
     * iff the walk was aborted by `visit`.
+    *
+    * Depth-first in listing order, with an explicit stack of open listings
+    * instead of recursion: a deep tree costs heap, never the thread stack.
     */
   def walkFiles(fs: FileSystem, dir: Path)(visit: FileStatus => Boolean): Boolean = {
-    def statuses(d: Path): Array[FileStatus] =
-      try fs.listStatus(d)
-      catch { case _: java.io.FileNotFoundException => Array.empty }
-    def rec(d: Path): Boolean = {
-      val sts = statuses(d)
-      var i = 0
-      while (i < sts.length) {
-        val st = sts(i)
-        if (st.isDirectory) { if (!rec(st.getPath)) return false }
+    def statuses(d: Path): Iterator[FileStatus] =
+      try fs.listStatus(d).iterator
+      catch { case _: java.io.FileNotFoundException => Iterator.empty }
+    val open = scala.collection.mutable.Stack(statuses(dir))
+    while (open.nonEmpty) {
+      val it = open.top
+      if (!it.hasNext) open.pop()
+      else {
+        val st = it.next()
+        if (st.isDirectory) open.push(statuses(st.getPath))
         else if (!visit(st)) return false
-        i += 1
       }
-      true
     }
-    rec(dir)
+    true
   }
 
   /** Non-empty data files under `dir`, recursively (metadata-only). */

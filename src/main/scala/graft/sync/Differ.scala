@@ -219,6 +219,15 @@ object Differ {
     s"$root/${tag}_${java.util.UUID.randomUUID().toString.take(12)}"
   }
 
+  /** Write `df` to the scratch parquet `path` and re-read it with `df`'s own
+    * schema: an inferring re-read would launch a one-task footer job per
+    * spill just to learn the schema that was just written.
+    */
+  private[sync] def spill(df: DataFrame, path: String): DataFrame = {
+    df.write.parquet(path)
+    df.sparkSession.read.schema(df.schema).parquet(path)
+  }
+
   private[sync] def rmScratch(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
@@ -279,11 +288,8 @@ object Differ {
           .unionByName(delta.insertKeys.withColumn("__leg", lit("k"))))
       val keys =
         if (dryRun) legsPlan.localCheckpoint(false)
-        else {
-          describeJobs(spark, s"sync: $table diff-leg spill")(
-            legsPlan.write.parquet(s"$scratch/keys"))
-          spark.read.parquet(s"$scratch/keys")
-        }
+        else describeJobs(spark, s"sync: $table diff-leg spill")(
+          spill(legsPlan, s"$scratch/keys"))
       try {
       val spilledInsKeys = keys.filter(col("__leg") === "k").select(delta.keyCols.map(col): _*)
       val delTarget = keys.select(delta.keyCols.map(col): _*).distinct()
@@ -299,8 +305,7 @@ object Differ {
       // from, and on JDBC the in-place deletes would race their own source
       // scan. The spill is the restart point.
       val spilledParts = partDeletes.map { case (pc, values) =>
-        values.coalesce(1).write.parquet(s"$scratch/parts")
-        (pc, broadcast(spark.read.parquet(s"$scratch/parts")))
+        (pc, broadcast(spill(values.coalesce(1), s"$scratch/parts")))
       }
 
       // Job 2 — J3 keyed fetch of full insert rows. The key count is KNOWN
@@ -309,22 +314,20 @@ object Differ {
       val keyList = if (nInsKeys <= BroadcastKeyMax) broadcast(spilledInsKeys) else spilledInsKeys
       val insertPlan = keyedFetch.flatMap(f => f(spilledInsKeys, nInsKeys))
         .getOrElse(delta.source.join(keyList, delta.keyCols, "left_semi"))
-      val nIns = describeJobs(spark, s"sync: $table insert fetch") {
-        if (nInsKeys == 0) 0L
+      val (nIns, insertSpill) = describeJobs(spark, s"sync: $table insert fetch") {
+        if (nInsKeys == 0) (0L, None)
         // Dry-run count over the narrow map when the diff materialized one:
         // same key multiplicity as the source, no wide re-scan.
-        else if (dryRun) delta.narrowSource
+        else if (dryRun) (delta.narrowSource
           .map(_.join(keyList, delta.keyCols, "left_semi").count())
-          .getOrElse(insertPlan.count())
+          .getOrElse(insertPlan.count()), None)
         else {
-          insertPlan.write.parquet(s"$scratch/inserts")
-          spark.read.parquet(s"$scratch/inserts").count()
+          val spilled = spill(insertPlan, s"$scratch/inserts")
+          (spilled.count(), Some(spilled))
         }
       }
-      val spilledInserts =
-        if (nIns == 0 || dryRun)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], delta.source.schema)
-        else spark.read.parquet(s"$scratch/inserts")
+      val spilledInserts = insertSpill.filter(_ => nIns > 0).getOrElse(
+        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], delta.source.schema))
 
       if (!dryRun && (nDel > 0 || nIns > 0 || spilledParts.nonEmpty)) {
         // Same size-informed hint for the store's delete anti-join: without

@@ -158,8 +158,7 @@ final class PartitionedStore(val spark: SparkSession, prefix: String,
     // Spill: the rewrite reads the very partitions it replaces.
     val scratch = Differ.newScratchDir(spark, None, s"pcow_$table")
     try {
-      rewritten.write.parquet(s"$scratch/rw")
-      val rw = spark.read.parquet(s"$scratch/rw")
+      val rw = Differ.spill(rewritten, s"$scratch/rw")
       val present = collectPartValues(table, rw.select(col(pc))).toSet
       if (present.nonEmpty) withDynamicOverwrite {
         rw.select(tableCols.map(col): _*).write.mode(SaveMode.Overwrite)

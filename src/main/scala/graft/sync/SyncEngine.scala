@@ -3,6 +3,7 @@ package graft.sync
 import graft.functions.Hashing
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.FooterSchema
 
 import scala.collection.mutable
 import scala.concurrent.{Await, ExecutionContext, Future}
@@ -561,8 +562,7 @@ final class SyncEngine(master: TableStore, slave: TableStore,
     val dataCols = changes.columns.toSeq.filterNot(_ == opCol)
     val scratch = Differ.newScratchDir(spark, config.scratchDir, s"cdc_$table")
     try {
-      changes.write.parquet(s"$scratch/changes")
-      val spilled = spark.read.parquet(s"$scratch/changes")
+      val spilled = Differ.spill(changes, s"$scratch/changes")
       // ONE delta-sized aggregate computes fp(deleted) and fp(inserted).
       val zero = Hashing.MultisetFp(0L, BigInt(0), 0L)
       val byOp = Hashing.multisetFpByGroup(spilled, opCol, dataCols, config.legacyNullSkip)
@@ -867,7 +867,11 @@ final class SyncEngine(master: TableStore, slave: TableStore,
     // back to the full grouped scan.
     val sFpRaw = partFpSnapshot.get(table)
         .filter { case (_, fl) => config.maintainFingerprints && fl == pushedMode } match {
-      case Some((path, _)) => master.spark.read.parquet(path)
+      case Some((path, _)) =>
+        // The snapshot may predate this process (stateDir resume), so its
+        // schema comes from its own footer, read on the driver.
+        val reader = master.spark.read
+        FooterSchema.of(master.spark, path).fold(reader)(reader.schema).parquet(path)
       case None => pushed match {
         case Some((_, (_, sh))) =>
           Hashing.partitionFingerprintsOfHashes(sh, partCol, "row_hash")

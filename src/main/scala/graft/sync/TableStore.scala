@@ -2,6 +2,7 @@ package graft.sync
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.FooterSchema
 import org.apache.spark.sql.types.StructType
 
 /** Storage abstraction the sync engine runs against (SURVEY §7.1).
@@ -18,7 +19,11 @@ trait TableStore {
   def list(): Seq[String]
   /** Full scan (S5). */
   def read(table: String): DataFrame
-  /** Schema scan (S2/S4). */
+  /** Schema scan (S2/S4). The default analyzes a [[read]]; stores that
+    * know the schema from metadata answer without building a DataFrame —
+    * a parquet [[FileStore]] reads one footer on the driver and launches
+    * no Spark job.
+    */
   def schemaOf(table: String): StructType = read(table).schema
   /** DDL sink: drop (S12; `DatabaseConnection.php:95-100`). */
   def drop(table: String): Unit
@@ -131,6 +136,15 @@ trait CopyOnWriteStore extends TableStore {
   * anything with a directory-based reader/writer). CSV/JSON default to
   * header+schema inference on read; pass explicit `options` to pin types
   * for production use.
+  *
+  * Parquet without reader options: `read` and `schemaOf` launch no Spark
+  * job. The schema comes from the footer of the table's first data file
+  * (by sorted path), read on the driver — the same file and result as
+  * Spark's non-merging inference, which would run a one-task job for it on
+  * every read. Spark infers as before when `spark.sql.parquet.mergeSchema`
+  * is on, when the table directory has subdirectories (hive partitions) or
+  * `_metadata`/`_common_metadata` summary files, when it has no data file
+  * (Spark's own error surfaces), and for any other format or any options.
   */
 class FileStore(val spark: SparkSession, dir: String,
                 format: String = "parquet",
@@ -149,8 +163,22 @@ class FileStore(val spark: SparkSession, dir: String,
       .map(_.getName.stripSuffix(s".$format")).sorted.toSeq
   }
 
-  override def read(table: String): DataFrame =
-    spark.read.format(format).options(defaultOptions ++ options).load(path(table))
+  /** Schema from one parquet footer read on the driver, when it is the
+    * schema Spark's inference would return (plain parquet, no reader
+    * options; see [[org.apache.spark.sql.graftshim.FooterSchema]] for the
+    * other fallbacks). `None` = let Spark infer.
+    */
+  private def footerSchema(table: String): Option[StructType] =
+    if (format == "parquet" && options.isEmpty) FooterSchema.of(spark, path(table))
+    else None
+
+  override def read(table: String): DataFrame = {
+    val reader = spark.read.format(format).options(defaultOptions ++ options)
+    footerSchema(table).fold(reader)(reader.schema).load(path(table))
+  }
+
+  override def schemaOf(table: String): StructType =
+    footerSchema(table).map(FooterSchema.nullable).getOrElse(read(table).schema)
 
   override def tablePath(table: String): Option[String] =
     if (format == "parquet") Some(path(table)) else None

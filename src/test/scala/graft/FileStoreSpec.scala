@@ -2,7 +2,12 @@ package graft
 
 import graft.functions.Hashing
 import graft.sync._
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.FooterSchema
+import org.apache.spark.sql.types._
+
+import java.nio.file.{Files, Paths}
 
 /** FileStore across formats: the same sync engine DAG runs against CSV and
   * JSON table directories (the store trait is the only format-aware layer).
@@ -50,5 +55,117 @@ class FileStoreSpec extends SparkSpec {
       d.select(col("id").cast("long"), col("name"), col("v").cast("double"))
     assert(Hashing.tableFingerprint(canon(ss.read("t")), cols) ==
       Hashing.tableFingerprint(canon(ms.read("t")), cols))
+  }
+
+  // ---- Parquet schema without an inference job --------------------------
+
+  /** Every type family the sync stores carry, with a non-nullable column
+    * and field metadata (inference reads both back from the footer). */
+  private def wideDf: DataFrame = {
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false,
+        new MetadataBuilder().putString("comment", "key").build()),
+      StructField("b", ByteType), StructField("s", ShortType), StructField("i", IntegerType),
+      StructField("f", FloatType), StructField("d", DoubleType),
+      StructField("dec", DecimalType(12, 2)), StructField("wide", DecimalType(38, 0)),
+      StructField("name", StringType), StructField("bin", BinaryType),
+      StructField("flag", BooleanType), StructField("day", DateType),
+      StructField("ts", TimestampType), StructField("ntz", TimestampNTZType),
+      StructField("arr", ArrayType(IntegerType)),
+      StructField("m", MapType(StringType, IntegerType)),
+      StructField("st", StructType(Seq(StructField("a", IntegerType, nullable = false),
+        StructField("z", StringType))))))
+    val rows = (1 to 6).map { n =>
+      Row(n.toLong, n.toByte, n.toShort, n, n.toFloat, n.toDouble,
+        java.math.BigDecimal.valueOf(n * 100L + 1, 2), new java.math.BigDecimal(n),
+        s"r$n", Array[Byte](n.toByte), n % 2 == 0,
+        java.sql.Date.valueOf(s"2024-01-0$n"), java.sql.Timestamp.valueOf(s"2024-01-0$n 10:00:00"),
+        java.time.LocalDateTime.of(2024, 1, n, 10, 0), Seq(n, n + 1), Map(s"k$n" -> n), Row(n, s"z$n"))
+    }
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+  }
+
+  /** The store's read and schemaOf agree with plain inference over `dir`. */
+  private def assertInferred(store: FileStore, t: String, dir: String): StructType = {
+    val inferred = spark.read.parquet(dir).schema
+    assert(store.read(t).schema == inferred)
+    assert(store.schemaOf(t) == inferred)
+    inferred
+  }
+
+  private def withConf[T](k: String, v: String)(body: => T): T = {
+    val prev = spark.conf.getOption(k)
+    spark.conf.set(k, v)
+    try body finally prev.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  }
+
+  /** A store dir whose sorted-first data file has the old two-column
+    * schema and whose later files add a column. */
+  private def evolvedDir(tag: String): (ParquetStore, String) = {
+    val base = tmpDir(tag)
+    val dir = s"$base/t.parquet"
+    Files.createDirectories(Paths.get(dir))
+    def put(df: DataFrame, name: String): Unit = {
+      val staged = s"$base/staged_$name"
+      df.coalesce(1).write.parquet(staged)
+      val part = new java.io.File(staged).listFiles().find(_.getName.startsWith("part-")).get
+      Files.move(part.toPath, Paths.get(dir, name))
+    }
+    put(Seq((1L, "a")).toDF("id", "name"), "part-00000-old.parquet")
+    put(Seq((2L, "b", 2.5)).toDF("id", "name", "v"), "part-00001-new.parquet")
+    put(Seq((3L, "c", 3.5)).toDF("id", "name", "v"), "part-00002-new.parquet")
+    (new ParquetStore(spark, base), dir)
+  }
+
+  test("ParquetStore: a multi-file table's schema comes from one footer, equal to inference") {
+    val base = tmpDir("footer_multi")
+    val store = new ParquetStore(spark, base)
+    store.overwrite("t", wideDf)
+    val dir = s"$base/t.parquet"
+    assert(new java.io.File(dir).list().count(_.startsWith("part-")) == 3)
+    val inferred = assertInferred(store, "t", dir)
+    assert(FooterSchema.of(spark, dir).map(FooterSchema.nullable).contains(inferred))
+    assert(store.read("t").orderBy("id").toJSON.collect().toSeq ==
+      spark.read.parquet(dir).orderBy("id").toJSON.collect().toSeq)
+  }
+
+  test("ParquetStore: the sorted-first file decides the schema, as in inference") {
+    val (store, dir) = evolvedDir("footer_first")
+    val inferred = assertInferred(store, "t", dir)
+    assert(inferred.fieldNames.toSeq == Seq("id", "name"))
+    assert(FooterSchema.of(spark, dir).isDefined)
+    assert(store.read("t").count() == 3)
+  }
+
+  test("ParquetStore: hive partitions, summary files and mergeSchema fall back to inference") {
+    val base = tmpDir("footer_hive")
+    val store = new ParquetStore(spark, base)
+    val dir = s"$base/t.parquet"
+    df.withColumn("p", col("id") % 2).write.partitionBy("p").parquet(dir)
+    assert(assertInferred(store, "t", dir).fieldNames.contains("p"))
+    assert(FooterSchema.of(spark, dir).isEmpty)
+
+    // A summary file next to the data: inference prefers it over any part.
+    val (evolved, edir) = evolvedDir("footer_summary")
+    Files.copy(Paths.get(edir, "part-00001-new.parquet"), Paths.get(edir, "_common_metadata"))
+    assert(assertInferred(evolved, "t", edir).fieldNames.contains("v"))
+    assert(FooterSchema.of(spark, edir).isEmpty)
+
+    val (merged, mdir) = evolvedDir("footer_merge")
+    withConf("spark.sql.parquet.mergeSchema", "true") {
+      assert(assertInferred(merged, "t", mdir).fieldNames.toSeq == Seq("id", "name", "v"))
+      assert(FooterSchema.of(spark, mdir).isEmpty)
+    }
+  }
+
+  test("ParquetStore: a missing or empty table fails as inference does") {
+    val base = tmpDir("footer_missing")
+    val store = new ParquetStore(spark, base)
+    intercept[AnalysisException](store.read("nope"))
+    intercept[AnalysisException](store.schemaOf("nope"))
+    Files.createDirectories(Paths.get(s"$base/empty.parquet"))
+    assert(FooterSchema.of(spark, s"$base/empty.parquet").isEmpty)
+    intercept[AnalysisException](store.read("empty"))
+    intercept[AnalysisException](store.schemaOf("empty"))
   }
 }

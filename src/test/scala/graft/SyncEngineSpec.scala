@@ -206,6 +206,43 @@ class SyncEngineSpec extends SparkSpec {
     spark.sparkContext.statusTracker.getJobIdsForGroup(tag).length
   }
 
+  test("a parquet sync cycle launches only sync:-tagged Spark jobs (no schema inference)") {
+    val (md, sd, ms, ss) = mkStores("tagged")
+    write(md, "quiet", custDf)
+    write(sd, "quiet", custDf.orderBy(desc("id")))
+    write(md, "churned", custDf)
+    write(sd, "churned", custDf.filter($"id" =!= 2L)
+      .withColumn("bal", when($"id" === 3L, lit(99.0)).otherwise($"bal")))
+    val engine = new SyncEngine(ms, ss, SyncConfig(
+      primaryKeys = Map("quiet" -> Seq("id"), "churned" -> Seq("id"))))
+    // Jobs are scoped by a local property the engine's table-pool threads
+    // inherit; a marker job afterwards drains the listener queue in order.
+    val scope = "graft.test.scope"
+    val untagged = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(scope))).foreach {
+          case "cycle" =>
+            val desc = e.properties.getProperty("spark.job.description")
+            if (desc == null || !desc.startsWith("sync:")) untagged.add(String.valueOf(desc))
+          case _ => drained.countDown()
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val actions = try {
+      spark.sparkContext.setLocalProperty(scope, "cycle")
+      val a = try engine.syncDatabase() finally spark.sparkContext.setLocalProperty(scope, "marker")
+      try spark.range(1).count() finally spark.sparkContext.setLocalProperty(scope, null)
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      a
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(actions.toSet == Set(SyncAction.Skip("quiet", "already in sync"),
+      SyncAction.ApplyDelta("churned", 1, 2)))
+    assert(fp(ss.read("churned")) == fp(ms.read("churned")))
+    assert(untagged.isEmpty, s"untagged jobs: ${untagged.toArray.mkString(", ")}")
+  }
+
   /** read()-counting store wrapper: read calls proxy for table scans. */
   private class Counting(inner: ParquetStore) extends TableStore {
     val reads = new java.util.concurrent.atomic.AtomicInteger
