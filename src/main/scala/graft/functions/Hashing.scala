@@ -121,30 +121,43 @@ object Hashing {
 
   /** Order-insensitive A1 fingerprints of two ALREADY-COMPUTED fast-hash
     * maps ([[fastHashMap]] output) — (count, xor+sum of h1, xor of h2) per
-    * side — in ONE job (a union of the two narrow maps under a side tag,
-    * grouped once): the gate over materialized maps costs one narrow
-    * aggregate and one scheduling round trip, no table scan of its own,
-    * which is what lets the engine's unpartitioned cascade hand the same
-    * maps to the gate and the diff legs. A side with zero rows yields the
-    * empty fingerprint.
+    * side — in ONE Spark job: each partition of the side-tagged union folds
+    * its rows into four longs per side, and the driver merges the folds.
+    * The plan has no exchange, so AQE adds no query stages: when the maps
+    * are `persist()`ed, the same job scans both tables, builds both caches
+    * and folds them (a `groupBy` aggregate would add a cache stage per
+    * map, a shuffle-map job and a result job). The sum wraps mod 2^64,
+    * which is exactly what the rendered fingerprint keeps. A side with zero
+    * rows yields the empty fingerprint `0:0:0:0`.
     */
   def fastMapFingerprints(mh: DataFrame, sh: DataFrame): (String, String) = {
-    def tag(df: DataFrame, t: String) =
-      df.select(lit(t).as("__side"), col("h1"), col("h2"))
-    val rows = tag(mh, "m").unionByName(tag(sh, "s")).groupBy("__side").agg(
-        count(lit(1)),
-        coalesce(expr("bit_xor(h1)"), lit(0L)),
-        pmod(coalesce(sum(col("h1").cast(DecimalType(38, 0))),
-          lit(0).cast(DecimalType(38, 0))), lit(TwoPow64)),
-        coalesce(expr("bit_xor(h2)"), lit(0L)))
-      .collect().map(r => r.getString(0) -> fingerprintOf(r, 1)).toMap
-    val empty = "0:0:0:0"
-    (rows.getOrElse("m", empty), rows.getOrElse("s", empty))
+    def tag(df: DataFrame, side: Int) =
+      df.select(lit(side).as("__side"), col("h1"), col("h2"))
+    val qe = tag(mh, 0).unionByName(tag(sh, 1)).queryExecution
+    // Per side s: acc(4s) count, acc(4s+1) xor h1, acc(4s+2) sum h1,
+    // acc(4s+3) xor h2 (xxhash64 values, never NULL).
+    val folds = org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe) {
+      qe.toRdd.mapPartitions { rows =>
+        val acc = new Array[Long](8)
+        rows.foreach { r =>
+          val o = 4 * r.getInt(0)
+          acc(o) += 1
+          acc(o + 1) ^= r.getLong(1)
+          acc(o + 2) += r.getLong(1)
+          acc(o + 3) ^= r.getLong(2)
+        }
+        Iterator.single(acc)
+      }.collect()
+    }
+    // Counts and sums (even slots) add, xors (odd slots) xor.
+    val acc = folds.reduceOption((a, b) =>
+      Array.tabulate(8)(i => if (i % 2 == 0) a(i) + b(i) else a(i) ^ b(i)))
+      .getOrElse(new Array[Long](8))
+    def render(o: Int) =
+      s"${acc(o)}:${java.lang.Long.toHexString(acc(o + 1))}:" +
+        s"${java.lang.Long.toUnsignedString(acc(o + 2), 16)}:${java.lang.Long.toHexString(acc(o + 3))}"
+    (render(0), render(4))
   }
-
-  private def fingerprintOf(row: org.apache.spark.sql.Row, off: Int): String =
-    s"${row.getLong(off)}:${java.lang.Long.toHexString(row.getLong(off + 1))}:" +
-      s"${row.getDecimal(off + 2).toBigInteger.toString(16)}:${java.lang.Long.toHexString(row.getLong(off + 3))}"
 
   /** Per-partition-value fingerprints (reference A2,
     * `TableConnection.php:510-547`) — ONE grouped aggregate job for all

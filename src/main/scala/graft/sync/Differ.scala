@@ -1,8 +1,11 @@
 package graft.sync
 
 import graft.functions.Hashing
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
+
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
 
 /** The delta needed to converge slave → master.
   * `deletes`: key tuples to remove from slave (reference J2,
@@ -194,8 +197,9 @@ object Differ {
     * tables (`main.php:27-59`): the materialized delta is the engine's
     * restart point, never driver memory.
     */
-  /** @return (rows deleted, rows inserted) — counted from the spilled delta,
-    *         so the diff plans execute exactly once.
+  /** @return (rows deleted, rows inserted) — counted as the delta spills
+    *         (observed on the spill writes of a mutating run), so the diff
+    *         plans execute exactly once and no job re-counts a spill.
     */
   /** Insert-key lists below this row count are broadcast for the J3 keyed
     * fetch (a key row is ~tens of bytes; 1M keys ≈ a ~100 MB hashed relation
@@ -227,6 +231,26 @@ object Differ {
     df.write.parquet(path)
     df.sparkSession.read.schema(df.schema).parquet(path)
   }
+
+  /** Upper bound on the wait for a write's observed metrics. They reach
+    * the driver through Spark's asynchronous query-execution listener, and
+    * `Observation.get` would wait forever if that delivery never came.
+    */
+  private val ObservedMetricsTimeout = Duration(5, "min")
+
+  /** The metrics row `obs` observed on a write that has returned. Throws
+    * `IllegalStateException` naming `table` when it does not arrive within
+    * `timeout`; callers read it before any slave mutation, so the cycle
+    * fails for this table and the next one retries.
+    */
+  private[graft] def observed(obs: Observation, table: String,
+                              timeout: Duration = ObservedMetricsTimeout): Row =
+    try Await.result(obs.future, timeout)
+    catch {
+      case _: java.util.concurrent.TimeoutException =>
+        throw new IllegalStateException(
+          s"sync of $table: the delta spill's row counts did not arrive within $timeout")
+    }
 
   private[sync] def rmScratch(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(dir)
@@ -267,38 +291,48 @@ object Differ {
       scratchUsed = true; newScratchDir(spark, scratchDir, s"delta_$table")
     }
     try {
-      // Job 1 — ONE tagged materialization of both NARROW key sets ('d' =
-      // rows whose content must leave the slave, J2; 'k' = keys of rows to
-      // copy, J1); no wide rows move yet. The keyed-delete target is d ∪ k
-      // (C7: clear incoming keys before insert), derived below from the
-      // spilled frames; the AUDITED delete count stays the J2 leg alone,
-      // matching the reference's deleteExcessRows accounting.
+      // ONE tagged materialization of both NARROW key sets ('d' = rows
+      // whose content must leave the slave, J2; 'k' = keys of rows to copy,
+      // J1); no wide rows move yet. The keyed-delete target is d ∪ k (C7:
+      // clear incoming keys before insert), derived below from the spilled
+      // frames; the AUDITED delete count stays the J2 leg alone, matching
+      // the reference's deleteExcessRows accounting.
       //
       // Mutating runs spill to scratch parquet — the durable restart point
-      // BEFORE any slave write. A dry run mutates nothing, so its legs only
-      // need the single-execution guarantee, not durability: a LAZY local
-      // checkpoint (populated by the leg-count job below) skips the write +
-      // re-list round trip while still freezing a true snapshot — lineage
-      // is truncated, so a lost block fails the audit loudly instead of
+      // BEFORE any slave write — and read both leg counts off the spill
+      // write itself (an Observation), so no job re-reads the spilled keys.
+      // A dry run mutates nothing, so its legs only need the single-
+      // execution guarantee, not durability: a LAZY local checkpoint
+      // (populated by the leg-count job below) skips the write + re-list
+      // round trip while still freezing a true snapshot — lineage is
+      // truncated, so a lost block fails the audit loudly instead of
       // silently recomputing a leg against a source a concurrent writer may
       // have moved since (plain persist() would hand the J3 count and the
       // leg counts views of two different instants in that case).
       val legsPlan = delta.spillLegs.getOrElse(
         delta.deletes.withColumn("__leg", lit("d"))
           .unionByName(delta.insertKeys.withColumn("__leg", lit("k"))))
+      val legObs = Observation()
       val keys =
         if (dryRun) legsPlan.localCheckpoint(false)
         else describeJobs(spark, s"sync: $table diff-leg spill")(
-          spill(legsPlan, s"$scratch/keys"))
+          spill(legsPlan.observe(legObs,
+            count(when(col("__leg") === "d", 1)).as("d"),
+            count(when(col("__leg") === "k", 1)).as("k")), s"$scratch/keys"))
       try {
       val spilledInsKeys = keys.filter(col("__leg") === "k").select(delta.keyCols.map(col): _*)
       val delTarget = keys.select(delta.keyCols.map(col): _*).distinct()
-      // Both leg counts in ONE pass over the spilled keys (two .count()s
-      // were two jobs over the same small files).
-      val legCounts = describeJobs(spark, s"sync: $table leg counts")(
-        keys.groupBy("__leg").count().collect())
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val (nDel, nInsKeys) = (legCounts.getOrElse("d", 0L), legCounts.getOrElse("k", 0L))
+      val (nDel, nInsKeys) =
+        if (dryRun) {
+          // Both leg counts in ONE pass; this job fills the checkpoint.
+          val legCounts = describeJobs(spark, s"sync: $table leg counts")(
+            keys.groupBy("__leg").count().collect())
+            .map(r => r.getString(0) -> r.getLong(1)).toMap
+          (legCounts.getOrElse("d", 0L), legCounts.getOrElse("k", 0L))
+        } else {
+          val r = observed(legObs, table)
+          (r.getLong(0), r.getLong(1))
+        }
 
       // Spill the excess-partition value list too (tiny): the store apply
       // below mutates the very files its lazy plan would re-derive the list
@@ -308,9 +342,10 @@ object Differ {
         (pc, broadcast(spill(values.coalesce(1), s"$scratch/parts")))
       }
 
-      // Job 2 — J3 keyed fetch of full insert rows. The key count is KNOWN
-      // now, so broadcast explicitly when small: AQE alone would launch the
-      // source's full by-key shuffle before discovering the key side is tiny.
+      // J3 keyed fetch of full insert rows. The key count is KNOWN now, so
+      // broadcast explicitly when small: AQE alone would launch the
+      // source's full by-key shuffle before discovering the key side is
+      // tiny. A mutating run counts the rows off the spill write.
       val keyList = if (nInsKeys <= BroadcastKeyMax) broadcast(spilledInsKeys) else spilledInsKeys
       val insertPlan = keyedFetch.flatMap(f => f(spilledInsKeys, nInsKeys))
         .getOrElse(delta.source.join(keyList, delta.keyCols, "left_semi"))
@@ -322,8 +357,9 @@ object Differ {
           .map(_.join(keyList, delta.keyCols, "left_semi").count())
           .getOrElse(insertPlan.count()), None)
         else {
-          val spilled = spill(insertPlan, s"$scratch/inserts")
-          (spilled.count(), Some(spilled))
+          val insObs = Observation()
+          val spilled = spill(insertPlan.observe(insObs, count(lit(1))), s"$scratch/inserts")
+          (observed(insObs, table).getLong(0), Some(spilled))
         }
       }
       val spilledInserts = insertSpill.filter(_ => nIns > 0).getOrElse(

@@ -60,8 +60,9 @@ final case class SyncConfig(
       * `Synchronizer.php:73-92`). Spark parallelizes *within* jobs; this only
       * overlaps small-table jobs to keep the scheduler busy.
       *
-      * Scale note (10k+ tables): per CLEAN table the cascade costs two tiny
-      * fingerprint jobs (the A1 short-circuit), so the bound is driver
+      * Scale note (10k+ tables): per CLEAN keyed table the cascade costs
+      * one fused-gate job (the A1 short-circuit; no-PK and legacy-hash
+      * tables pay one fingerprint aggregate per side), so the bound is driver
       * round-trips, not data. Raise this toward the driver's core count to
       * overlap them (each thread holds at most one in-flight Spark job);
       * catalog-backed stores additionally pay one metastore round-trip per
@@ -202,24 +203,29 @@ final class SyncEngine(master: TableStore, slave: TableStore,
     val missing = masterTables.diff(slaveTables)
     val shared = masterTables.intersect(slaveTables)
 
+    // Per-table failures are recorded and tolerated — one bad table must
+    // not kill the database sync (the reference wraps every child command
+    // in `|| true`, Synchronizer.php:77).
+    def tolerant(t: String)(body: => SyncAction): SyncAction =
+      try body
+      catch { case e: Exception => record(Skip(t, s"failed: ${e.getMessage}")) }
+
     excess.foreach { t =>
-      if (!config.dryRun) slave.drop(t)
-      record(DropTable(t))
+      tolerant(t) {
+        if (!config.dryRun) slave.drop(t)
+        record(DropTable(t))
+      }
     }
-    missing.foreach { t => copyTable(t) }
+    missing.foreach(t => tolerant(t)(copyTable(t)))
 
     // C6: overlap independent per-table jobs from the driver. Each job's
     // tasks already fan out across executors; this hides scheduling gaps of
-    // many small tables. Per-table failures are recorded and tolerated —
-    // one bad table must not kill the database sync (the reference wraps
-    // every child command in `|| true`, Synchronizer.php:77).
+    // many small tables.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, config.tableParallelism))
     try {
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val futures = shared.map(t => Future(
-        try syncTable(t)
-        catch { case e: Exception => record(Skip(t, s"failed: ${e.getMessage}")) }))
+      val futures = shared.map(t => Future(tolerant(t)(syncTable(t))))
       Await.result(Future.sequence(futures), Duration.Inf)
     } finally pool.shutdown()
     auditLog
@@ -466,8 +472,8 @@ final class SyncEngine(master: TableStore, slave: TableStore,
     // behavior is the point there, and a no-PK table has no diff to fuse.
     keyColsOf(table) match {
       case Some(keys) if keys.nonEmpty && !config.legacyNullSkip =>
-        // Lazy persist, not eager checkpoint: the fused gate aggregate below
-        // scans both sides in ONE job and populates both caches as it goes —
+        // Lazy persist, not eager checkpoint: the fused gate's one job scans
+        // both sides, populates both caches as it goes and folds them —
         // an eager checkpoint per side paid two extra scheduling barriers
         // for the same materialization.
         val mh = Hashing.fastHashMap(m, keys, cols).persist()

@@ -56,22 +56,36 @@ class DifferSpec extends SparkSpec {
   test("dry-run insert count over narrowSource equals the wide-source count (duplicate keys)") {
     // fastDiffMaps hands its narrow map to Delta.narrowSource so dry runs
     // never re-scan the wide source; the counts must agree even when a key
-    // maps to MULTIPLE source rows (the semi-join fetch is per-row).
+    // maps to MULTIPLE source rows (the semi-join fetch is per-row). A
+    // mutating apply over the same inputs counts off its spill writes and
+    // must report the same (deleted, inserted).
     val m = Seq((1L, "a", 10.0), (1L, "a2", 11.0), (2L, "b", 20.0), (3L, "c", 30.0))
       .toDF("k", "s", "v")
     val s = Seq((2L, "b", 20.0)).toDF("k", "s", "v")
     val mh = graft.functions.Hashing.fastHashMap(m, Seq("k"), m.columns.toSeq)
     val sh = graft.functions.Hashing.fastHashMap(s, Seq("k"), s.columns.toSeq)
-    val delta = Differ.fastDiffMaps(mh, sh, m, Seq("k"))
-    assert(delta.narrowSource.isDefined)
-    val store = new graft.sync.ParquetStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_narrow_dry").toString)
-    store.overwrite("t", s)
-    val (nDel, nIns) = Differ.applyDelta(store, "t", delta, dryRun = true)
-    // Both k=1 rows + the k=3 row must be counted (3 wide rows, 2 keys).
-    assert(nDel == 0L && nIns == 3L)
-    // And the slave was untouched (dry run).
-    assert(store.read("t").count() == 1L)
+    Seq[(String, () => graft.sync.Delta)](
+      "fastDiffMaps" -> (() => Differ.fastDiffMaps(mh, sh, m, Seq("k"))),
+      "fastKeyDiffMaps" -> (() => Differ.fastKeyDiffMaps(mh, sh, m, Seq("k")))
+    ).foreach { case (name, delta) =>
+      assert(delta().narrowSource.isDefined, name)
+      val store = new graft.sync.ParquetStore(spark,
+        java.nio.file.Files.createTempDirectory("graft_narrow_dry").toString)
+      store.overwrite("t", s)
+      val dry = Differ.applyDelta(store, "t", delta(), dryRun = true)
+      // Both k=1 rows + the k=3 row must be counted (3 wide rows, 2 keys).
+      assert(dry == ((0L, 3L)), name)
+      // And the slave was untouched (dry run).
+      assert(store.read("t").count() == 1L, name)
+      assert(Differ.applyDelta(store, "t", delta()) == dry, name)
+      assert(store.read("t").exceptAll(m).isEmpty && m.exceptAll(store.read("t")).isEmpty, name)
+    }
+  }
+
+  test("observed spill counts: a metrics row that never arrives fails typed, naming the table") {
+    val e = intercept[IllegalStateException](Differ.observed(
+      org.apache.spark.sql.Observation(), "orders", scala.concurrent.duration.Duration(50, "ms")))
+    assert(e.getMessage.contains("orders"), e.getMessage)
   }
 
   test("composite keys: comma-containing string keys round-trip (reference F7 bug fixed)") {

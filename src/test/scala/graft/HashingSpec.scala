@@ -1,7 +1,9 @@
 package graft
 
 import graft.functions.Hashing
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DecimalType, StringType}
 
 class HashingSpec extends SparkSpec {
   import spark.implicits._
@@ -94,5 +96,63 @@ class HashingSpec extends SparkSpec {
       deltaCol = "__d", beforeHash = "__hb", afterHash = "__hi")
     val after = Seq((1, "a"), (2, "B"), (3, "c"), (4, "D"), (5, "e")).toDF("k", "v")
     assert(maintained == Hashing.multisetFp(after, cols))
+  }
+
+  /** The groupBy aggregate `fastMapFingerprints` replaced, kept as the
+    * reference its one-job fold must reproduce byte for byte.
+    */
+  private def groupByMapFingerprints(mh: DataFrame, sh: DataFrame): (String, String) = {
+    def tag(df: DataFrame, t: String) = df.select(lit(t).as("__side"), col("h1"), col("h2"))
+    val d38 = DecimalType(38, 0)
+    val rows = tag(mh, "m").unionByName(tag(sh, "s")).groupBy("__side").agg(
+        count(lit(1)),
+        coalesce(expr("bit_xor(h1)"), lit(0L)),
+        pmod(coalesce(sum(col("h1").cast(d38)), lit(0).cast(d38)),
+          lit(BigDecimal("18446744073709551616"))),
+        coalesce(expr("bit_xor(h2)"), lit(0L)))
+      .collect().map(r => r.getString(0) ->
+        (s"${r.getLong(1)}:${java.lang.Long.toHexString(r.getLong(2))}:" +
+          s"${r.getDecimal(3).toBigInteger.toString(16)}:${java.lang.Long.toHexString(r.getLong(4))}"))
+      .toMap
+    (rows.getOrElse("m", "0:0:0:0"), rows.getOrElse("s", "0:0:0:0"))
+  }
+
+  private def assertSameAsGroupBy(mh: DataFrame, sh: DataFrame): (String, String) = {
+    val got = Hashing.fastMapFingerprints(mh, sh)
+    assert(got == groupByMapFingerprints(mh, sh))
+    got
+  }
+
+  test("fastMapFingerprints equals the groupBy aggregate: multi-partition fast-hash maps") {
+    val base = spark.range(0, 3000).select(col("id"), (col("id") % 7).as("v"),
+      concat(lit("r"), col("id").cast(StringType)).as("s"))
+    val m = base.repartition(5)
+    val s = base.filter(col("id") % 11 =!= 0)
+      .withColumn("v", when(col("id") === 5L, lit(99L)).otherwise(col("v"))).repartition(3)
+    val cols = Seq("id", "v", "s")
+    val mh = Hashing.fastHashMap(m, Seq("id"), cols)
+    val sh = Hashing.fastHashMap(s, Seq("id"), cols)
+    val (mFp, sFp) = assertSameAsGroupBy(mh, sh)
+    assert(mFp != sFp && mFp.startsWith("3000:"))
+    val (a, b) = assertSameAsGroupBy(mh, Hashing.fastHashMap(base.repartition(2), Seq("id"), cols))
+    assert(a == b, "same multiset, different partitioning")
+  }
+
+  test("fastMapFingerprints: h1 sums wrap past 2^64 in both directions as the aggregate's pmod") {
+    val hi = (0 until 40).map(i => (i.toLong, Long.MaxValue - i, Long.MinValue + i))
+    val lo = (0 until 40).map(i => (i.toLong, Long.MinValue + i, Long.MaxValue - i))
+    val mh = hi.toDF("k", "h1", "h2").repartition(4)
+    val sh = (lo ++ Seq((99L, -1L, 0L))).toDF("k", "h1", "h2").repartition(3)
+    val (mFp, sFp) = assertSameAsGroupBy(mh, sh)
+    assert(mFp.startsWith("40:") && sFp.startsWith("41:"))
+  }
+
+  test("fastMapFingerprints: one side empty, both sides empty") {
+    val mh = Hashing.fastHashMap(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), Seq("k"), Seq("k", "v"))
+      .repartition(3)
+    val empty = mh.filter(lit(false))
+    assert(assertSameAsGroupBy(mh, empty)._2 == "0:0:0:0")
+    assert(assertSameAsGroupBy(empty, mh)._1 == "0:0:0:0")
+    assert(assertSameAsGroupBy(empty, empty) == (("0:0:0:0", "0:0:0:0")))
   }
 }

@@ -131,13 +131,18 @@ class SyncEngineSpec extends SparkSpec {
     write(md, "bad", custDf)
     val badDir = new java.io.File(s"$sd/bad.parquet"); badDir.mkdirs()
     java.nio.file.Files.writeString(badDir.toPath.resolve("part-0.parquet"), "not parquet")
+    // corrupt MASTER table absent on the slave: its full copy throws
+    val badMDir = new java.io.File(s"$md/badm.parquet"); badMDir.mkdirs()
+    java.nio.file.Files.writeString(badMDir.toPath.resolve("part-0.parquet"), "not parquet")
     val engine = new SyncEngine(ms, ss, SyncConfig(primaryKeys = Map("good" -> Seq("id"))))
     engine.syncDatabase()
     assert(fp(ss.read("good")) == fp(ms.read("good")), "good table must converge")
-    assert(engine.auditLog.exists {
-      case SyncAction.Skip("bad", r) => r.startsWith("failed:")
-      case _ => false
-    }, s"bad table failure must be recorded: ${engine.auditLog}")
+    Seq("bad", "badm").foreach { t =>
+      assert(engine.auditLog.exists {
+        case SyncAction.Skip(`t`, r) => r.startsWith("failed:")
+        case _ => false
+      }, s"$t table failure must be recorded: ${engine.auditLog}")
+    }
   }
 
   test("audit log file: every action appended as a JSON line (S15)") {
@@ -170,7 +175,7 @@ class SyncEngineSpec extends SparkSpec {
 
   test("C1 scale guard: 100 tables complete and audit correctly through the pool") {
     // The driver-side orchestration cost is what bounds a 10k-table sync:
-    // per CLEAN table the cascade is two tiny fingerprint jobs (the A1
+    // per CLEAN table the cascade is one tiny fused-gate job (the A1
     // short-circuit), and the pool overlaps them. 100 tables — 90 clean,
     // 5 dirty, 5 missing — must finish with exactly one audit action each
     // and converge the dirty/missing ones.
@@ -218,14 +223,13 @@ class SyncEngineSpec extends SparkSpec {
     // Jobs are scoped by a local property the engine's table-pool threads
     // inherit; a marker job afterwards drains the listener queue in order.
     val scope = "graft.test.scope"
-    val untagged = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val drained = new java.util.concurrent.CountDownLatch(1)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         Option(e.properties).flatMap(p => Option(p.getProperty(scope))).foreach {
           case "cycle" =>
-            val desc = e.properties.getProperty("spark.job.description")
-            if (desc == null || !desc.startsWith("sync:")) untagged.add(String.valueOf(desc))
+            descs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
           case _ => drained.countDown()
         }
     }
@@ -240,7 +244,15 @@ class SyncEngineSpec extends SparkSpec {
     assert(actions.toSet == Set(SyncAction.Skip("quiet", "already in sync"),
       SyncAction.ApplyDelta("churned", 1, 2)))
     assert(fp(ss.read("churned")) == fp(ms.read("churned")))
-    assert(untagged.isEmpty, s"untagged jobs: ${untagged.toArray.mkString(", ")}")
+    val jobs = descs.toArray(Array.empty[String]).toSeq
+    val untagged = jobs.filterNot(_.startsWith("sync:"))
+    assert(untagged.isEmpty, s"untagged jobs: ${untagged.mkString(", ")}")
+    // The gate is one job per table (no cache stages, no shuffle), and a
+    // mutating cycle reads its leg counts off the spill write.
+    val perTag = jobs.groupBy(identity).view.mapValues(_.size).toMap
+    assert(perTag.get("sync: quiet fused-gate").contains(1) &&
+      perTag.get("sync: churned fused-gate").contains(1), s"jobs per tag: $perTag")
+    assert(!jobs.exists(_.endsWith(" leg counts")), s"jobs per tag: $perTag")
   }
 
   /** read()-counting store wrapper: read calls proxy for table scans. */
