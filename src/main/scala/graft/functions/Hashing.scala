@@ -48,10 +48,6 @@ object Hashing {
   def rowHash(df: DataFrame, cols: Seq[String], legacyNullSkip: Boolean = false): Column =
     md5(concat_ws(Sep, canonCols(df, cols, legacyNullSkip): _*))
 
-  /** 64-bit row hash for scale paths (xxhash64 is codegen'd and cheap). */
-  def rowHash64(df: DataFrame, cols: Seq[String]): Column =
-    xxhash64(concat_ws(Sep, canonCols(df, cols, legacyNullSkip = false): _*))
-
   /** Fast content hash: seeded xxhash64 over the RAW column values — no
     * string canonicalization (casting timestamps/doubles to string dominates
     * the md5 path's cost). Spark's hash fold *skips* nulls (the very
@@ -77,9 +73,10 @@ object Hashing {
       :+ fastRowHash(df, dataCols, 1).as("h1")
       :+ fastRowHash(df, dataCols, 2).as("h2"): _*)
 
-  /** Key + row-hash projection — the engine's central IR (reference spills
-    * this to `master_hashes`/`slave_hashes` side tables, `main.php:27-59`;
-    * here the DataFrame *is* the out-of-core structure, Tungsten spills).
+  /** Key + md5 row-hash projection — the reference's hash side table
+    * (`master_hashes`/`slave_hashes`, `main.php:27-59`) in its MySQL-parity
+    * form. The sync cascade reduces it to the [[fastHashMap]] pair shape
+    * when it runs in legacy mode ([[graft.sync.Differ.hashMaps]]).
     */
   def hashMap(df: DataFrame, keyCols: Seq[String], dataCols: Seq[String],
               legacyNullSkip: Boolean = false): DataFrame =
@@ -101,9 +98,6 @@ object Hashing {
     pmod(coalesce(sum(col("__h64").cast(DecimalType(38, 0))), lit(0).cast(DecimalType(38, 0))),
       lit(TwoPow64)).as("fp_sum"))
 
-  /** Whole-table fingerprint (reference A1, `TableConnection.php:464-501`) as
-    * a single stable string. Equal multisets of rows ⇔ equal fingerprints.
-    */
   /** Per-row 64-bit hash feeding the multiset fingerprints: the fast raw-
     * value hash normally; the md5-canonical chain when legacy reference
     * semantics are requested.
@@ -112,6 +106,11 @@ object Hashing {
     if (legacyNullSkip) xxhash64(rowHash(df, cols, legacyNullSkip = true))
     else fastRowHash(df, cols, seed = 42)
 
+  /** Whole-table fingerprint (reference A1, `TableConnection.php:464-501`) as
+    * a single stable string. Equal multisets of rows ⇔ equal fingerprints.
+    * One aggregate over the table; the sync cascade gates on
+    * [[fastMapFingerprints]] over its hash maps instead.
+    */
   def tableFingerprint(df: DataFrame, cols: Seq[String],
                        legacyNullSkip: Boolean = false): String = {
     val row = df.select(fingerprintRowHash(df, cols, legacyNullSkip).as("__h64"))
@@ -119,9 +118,10 @@ object Hashing {
     s"${row.getLong(0)}:${java.lang.Long.toHexString(row.getLong(1))}:${row.getDecimal(2).toBigInteger.toString(16)}"
   }
 
-  /** Order-insensitive A1 fingerprints of two ALREADY-COMPUTED fast-hash
-    * maps ([[fastHashMap]] output) — (count, xor+sum of h1, xor of h2) per
-    * side — in ONE Spark job: each partition of the side-tagged union folds
+  /** Order-insensitive A1 fingerprints of two ALREADY-COMPUTED hash-pair
+    * maps (frames with `h1`/`h2` columns: [[fastHashMap]] output or any map
+    * of [[graft.sync.Differ.hashMaps]]) — (count, xor+sum of h1, xor of h2)
+    * per side — in ONE Spark job: each partition of the side-tagged union folds
     * its rows into four longs per side, and the driver merges the folds.
     * The plan has no exchange, so AQE adds no query stages: when the maps
     * are `persist()`ed, the same job scans both tables, builds both caches
@@ -169,15 +169,6 @@ object Hashing {
       .groupBy(partCol)
       .agg(fingerprintAggs.head, fingerprintAggs.tail: _*)
 
-  /** Exact, order-canonical fingerprint: md5 of the row-hashes sorted and
-    * concatenated. Byte-stable across engines (DuckDB:
-    * `md5(string_agg(h,'' ORDER BY h))`) — use for oracle checks and small
-    * tables only; the digest is O(table) on the driver, unlike the multiset
-    * fingerprint above. Sort and hashing run distributed; the driver streams
-    * the sorted hashes through an incremental MD5 (a single-task
-    * `sort_array(collect_list(...))` concat was ~3× slower and built the
-    * whole concatenated string in one executor).
-    */
   /** Order-insensitive multiset fingerprint over the md5 row-hash as ONE
     * stable string `"count:sum:xor"` (sum/xor of the hash's first 15 hex
     * digits as a 60-bit integer; sum in decimal(38,0) — exact to 10^12+
@@ -321,6 +312,15 @@ object Hashing {
     */
   val ExactFingerprintMaxRows = 10000000L
 
+  /** Exact, order-canonical fingerprint: md5 of the row-hashes sorted and
+    * concatenated. Byte-stable across engines (DuckDB:
+    * `md5(string_agg(h,'' ORDER BY h))`) — use for oracle checks and small
+    * tables only; the digest is O(table) on the driver, unlike the multiset
+    * fingerprints. Sort and hashing run distributed; the driver streams
+    * the sorted hashes through an incremental MD5 (a single-task
+    * `sort_array(collect_list(...))` concat was ~3× slower and built the
+    * whole concatenated string in one executor).
+    */
   def exactFingerprint(df: DataFrame, cols: Seq[String],
                        legacyNullSkip: Boolean = false,
                        maxRows: Long = ExactFingerprintMaxRows): DataFrame = {

@@ -2,22 +2,6 @@ package graft.sync
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
-/** Bucketed catalog-table store: each table is a managed Spark table
-  * clustered AND sorted by its declared bucket keys
-  * (`bucketBy(numBuckets, keys).sortBy(keys)`).
-  *
-  * This is the co-located layout for a RECURRING sync at 100 TB: the
-  * key-aware diff's full-outer join (and every other equi-join/aggregation
-  * on the bucket keys) reads both sides pre-partitioned, so the per-run plan
-  * carries zero table-sized shuffle exchanges — the shuffle is paid once at
-  * write time instead of on every sync cycle. Master and slave must share
-  * `numBuckets` for the exchange to be elided on both sides.
-  *
-  * Tables are namespaced `<prefix>_<name>` in the session catalog; writes
-  * stage to `<name>__stage` then swap via a metadata-only rename, so an
-  * overwrite may consume a plan that reads the table being replaced (the
-  * same stage-then-swap contract as [[FileStore]]).
-  */
 /** Shared plumbing for catalog-table stores. */
 private[sync] object CatalogStores {
   /** The in-memory catalog dies with the process but its warehouse
@@ -34,33 +18,35 @@ private[sync] object CatalogStores {
       if (fs.exists(p)) { fs.delete(p, true); () }
     }
 
-  /** Metadata-only change token for a catalog table: md5 over the sorted
-    * recursive (path, length, mtime) listing of the table's resolved
-    * location. Hadoop FS API, so one LIST round-trip works identically on
-    * local fs, HDFS, and object stores — no data read, no Spark job. The
-    * token feeds [[SyncConfig.maintainFingerprints]]'s zero-job skip, which
+  /** Metadata-only change token for a catalog table: the listing token
+    * ([[TableStore.listingToken]]) of the table's resolved location. It
+    * feeds [[SyncConfig.maintainFingerprints]]'s zero-job skip, which
     * matters most for exactly these stores (the co-located recurring-sync
     * layout).
     */
-  def changeToken(spark: SparkSession, name: String): Option[String] = {
-    if (!spark.catalog.tableExists(name)) return Some("__absent__")
-    val loc = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(name)).location
-    val p = new org.apache.hadoop.fs.Path(loc)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return Some("__absent__")
-    val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-    graft.ops.FsMaint.walkFiles(fs, p) { f =>
-      entries += s"${f.getPath}|${f.getLen}|${f.getModificationTime}"
-      true
-    }
-    val digest = java.security.MessageDigest.getInstance("MD5")
-    entries.sorted.foreach(e =>
-      digest.update(e.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-    Some(digest.digest().map(b => f"$b%02x").mkString)
-  }
+  def changeToken(spark: SparkSession, name: String): Option[String] =
+    if (!spark.catalog.tableExists(name)) Some("__absent__")
+    else Some(TableStore.listingToken(spark, new org.apache.hadoop.fs.Path(
+      spark.sessionState.catalog
+        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(name)).location)))
 }
 
+/** Bucketed catalog-table store: each table is a managed Spark table
+  * clustered AND sorted by its declared bucket keys
+  * (`bucketBy(numBuckets, keys).sortBy(keys)`).
+  *
+  * This is the co-located layout for a RECURRING sync at 100 TB: the
+  * key-aware diff's full-outer join (and every other equi-join/aggregation
+  * on the bucket keys) reads both sides pre-partitioned, so the per-run plan
+  * carries zero table-sized shuffle exchanges — the shuffle is paid once at
+  * write time instead of on every sync cycle. Master and slave must share
+  * `numBuckets` for the exchange to be elided on both sides.
+  *
+  * Tables are namespaced `<prefix>_<name>` in the session catalog; writes
+  * stage to `<name>__stage` then swap via a metadata-only rename, so an
+  * overwrite may consume a plan that reads the table being replaced (the
+  * same stage-then-swap contract as [[FileStore]]).
+  */
 final class BucketedStore(val spark: SparkSession, prefix: String,
                           bucketKeys: Map[String, Seq[String]],
                           numBuckets: Int = 8) extends CopyOnWriteStore {

@@ -7,12 +7,18 @@ import org.apache.spark.sql.functions._
 import scala.concurrent.Await
 import scala.concurrent.duration.Duration
 
-/** The delta needed to converge slave → master.
-  * `deletes`: key tuples to remove from slave (reference J2,
-  * `Synchronizer.php:531-583`); `insertKeys`: key tuples whose full rows must
-  * be copied from `source` (J1, `Synchronizer.php:446-524`). Application
-  * order is delete-then-insert — an invariant, because an updated row appears
-  * in both sets (C7 guard, `Synchronizer.php:495-501`).
+/** The delta needed to converge slave → master, as ONE legs frame:
+  * `(key…, __leg)` where `__leg = 'd'` marks key tuples to remove from the
+  * slave (reference J2, `Synchronizer.php:531-583`) and `'k'` marks keys
+  * whose full rows must be copied from `source` (J1,
+  * `Synchronizer.php:446-524`). Application order is delete-then-insert —
+  * an invariant, because an updated row appears in both legs (C7 guard,
+  * `Synchronizer.php:495-501`). [[Differ.applyDelta]] spills `legs` in one
+  * execution, so the diff plan runs once for both legs.
+  *
+  * `narrowSource` is the master's `(key…, h1, h2)` map: the same per-row
+  * key multiplicity as `source`, so dry runs count insert rows against it
+  * instead of re-scanning the wide source.
   *
   * The insert ROWS are deliberately not pre-joined: `applyDelta` first
   * materializes the narrow key sets, then fetches rows with an explicitly
@@ -20,35 +26,31 @@ import scala.concurrent.duration.Duration
   * would shuffle the whole source by key before AQE could see how small the
   * key side is.
   */
-final case class Delta(deletes: DataFrame, insertKeys: DataFrame,
-                       source: DataFrame, keyCols: Seq[String],
-                       /** Optional single-pass (keys, `__leg` ∈ d|k) frame
-                         * producing BOTH legs in one execution of the
-                         * underlying diff plan — [[Differ.applyDelta]] spills
-                         * it instead of unioning `deletes`/`insertKeys`
-                         * (which would run the diff join twice). */
-                       spillLegs: Option[DataFrame] = None,
-                       /** Optional narrow (key…, …) frame with the same
-                         * per-row key multiplicity as `source` — dry runs
-                         * count insert rows against it instead of re-scanning
-                         * the wide source (the maps-based diffs pass their
-                         * already-materialized hash map here). */
-                       narrowSource: Option[DataFrame] = None) {
+final case class Delta(legs: DataFrame, narrowSource: DataFrame,
+                       source: DataFrame, keyCols: Seq[String]) {
+  /** Key tuples to remove from the slave (the J2 leg). */
+  def deletes: DataFrame = leg("d")
+  /** Keys of master rows to copy (the J1 leg). */
+  def insertKeys: DataFrame = leg("k")
   /** Full rows to insert (J3 keyed fetch), as a lazy plan. */
   lazy val inserts: DataFrame = source.join(insertKeys, keyCols, "left_semi")
-  // NB deliberately no `isEmpty` helper: it would execute BOTH diff legs as
-  // separate jobs. Emptiness falls out of [[Differ.applyDelta]]'s spilled
-  // counts, which run each leg exactly once.
+  private def leg(tag: String): DataFrame =
+    legs.filter(col("__leg") === tag).select(keyCols.map(col): _*)
+  // NB deliberately no `isEmpty` helper: it would execute the diff plan as
+  // a separate job. Emptiness falls out of [[Differ.applyDelta]]'s spilled
+  // counts, which run the legs exactly once.
 }
 
 /** Hash-based diff core (SURVEY §7.2 M2).
   *
-  * Scale notes: each side is reduced to (key, row_hash) — a narrow projection
-  * that parquet/JDBC scans prune to — then two anti-joins on `row_hash`.
-  * Catalyst plans these as broadcast-hash when one side is small, else
-  * sort-merge with AQE skew handling; nothing is collected to the driver.
-  * The insert side re-reads only matching master rows via a semi-join whose
-  * key list is usually tiny relative to the table (broadcast).
+  * Every diff runs over one currency: each side reduced to a `(key…, h1,
+  * h2)` map ([[hashMaps]]) — a narrow projection that parquet/JDBC scans
+  * prune to — then either two anti-joins on the hash pair (reference
+  * semantics) or one full-outer join on the key (key-aware). Catalyst plans
+  * these as broadcast-hash when one side is small, else sort-merge with AQE
+  * skew handling; nothing is collected to the driver. The insert side
+  * re-reads only matching master rows via a semi-join whose key list is
+  * usually tiny relative to the table (broadcast).
   */
 object Differ {
 
@@ -63,6 +65,46 @@ object Differ {
     try body finally sc.setJobDescription(prev)
   }
 
+  /** The one map builder: both sides reduced to `(projCols…, h1, h2)`, the
+    * 128-bit content-hash pair every gate and diff of the cascade runs on
+    * (reference: one per-row hash into a per-side hash table, then both the
+    * table hash and the diff from that table, `main.php:27-59`). Hashed
+    * columns are all of `master`'s. The map comes from one of:
+    *  - `pushed`: both stores' `(projCols…, row_hash)` md5 maps
+    *    ([[TableStore.pushedHashMap]]), hashed inside the source databases
+    *    so only hashes cross the wire, reduced here by [[ofRowHash]];
+    *  - `legacyNullSkip`: the reference's NULL-skipping md5 chain
+    *    ([[Hashing.hashMap]]) reduced the same way — its NULL-permutation
+    *    collisions are the point of that mode;
+    *  - otherwise the raw-value [[Hashing.fastHashMap]] (no string
+    *    canonicalization — ~3× cheaper per scan).
+    * Both sides always come from the same producer: server and Spark casts
+    * differ, so a pushed map never meets a Spark-hashed one. Empty
+    * `projCols` gives a keyless map (gate only, nothing to diff on).
+    */
+  def hashMaps(master: DataFrame, slave: => DataFrame, projCols: Seq[String],
+               legacyNullSkip: Boolean = false,
+               pushed: Option[(DataFrame, DataFrame)] = None): (DataFrame, DataFrame) =
+    pushed match {
+      case Some((mh, sh)) => (ofRowHash(mh, projCols), ofRowHash(sh, projCols))
+      case None =>
+        val dataCols = master.columns.toSeq
+        def side(df: DataFrame) =
+          if (legacyNullSkip)
+            ofRowHash(Hashing.hashMap(df, projCols, dataCols, legacyNullSkip = true), projCols)
+          else Hashing.fastHashMap(df, projCols, dataCols)
+        (side(master), side(slave))
+    }
+
+  /** A `(projCols…, row_hash)` md5 map reduced to the hash pair: `h1`/`h2`
+    * are two seeded xxhash64s of the md5, so equal pairs ⇔ equal md5s up to
+    * a ~2^-128 collision bound.
+    */
+  private def ofRowHash(hm: DataFrame, projCols: Seq[String]): DataFrame =
+    hm.select(projCols.map(col)
+      :+ xxhash64(lit(1), col("row_hash")).as("h1")
+      :+ xxhash64(lit(2), col("row_hash")).as("h2"): _*)
+
   /** Reference-faithful diff: rows match if their *content hash* matches,
     * regardless of key (J1 note in SURVEY §2.3: an updated row shows up as
     * delete+insert; duplicate-content rows with distinct keys are NOT
@@ -71,49 +113,8 @@ object Differ {
     */
   def hashDiff(master: DataFrame, slave: DataFrame, keyCols: Seq[String],
                legacyNullSkip: Boolean = false): Delta = {
-    val dataCols = master.columns.toSeq
-    // Internal diff currency: the fast 128-bit raw-value hash pair (no
-    // string canonicalization — ~3× cheaper per scan). The md5-canonical
-    // path is kept for legacy reference semantics, where the NULL-skip
-    // behavior itself is the point.
-    val (mh, sh, hashCols) =
-      if (legacyNullSkip)
-        (Hashing.hashMap(master, keyCols, dataCols, legacyNullSkip = true),
-         Hashing.hashMap(slave, keyCols, dataCols, legacyNullSkip = true),
-         Seq("row_hash"))
-      else
-        (Hashing.fastHashMap(master, keyCols, dataCols),
-         Hashing.fastHashMap(slave, keyCols, dataCols),
-         Hashing.FastHashCols)
-    antiDiff(mh, sh, hashCols, master, keyCols)
-  }
-
-  /** Reference-faithful diff over PRECOMPUTED `(key…, hash…)` maps — the
-    * hash-pushdown path ([[TableStore.pushedHashMap]]): both sides' hashes
-    * were computed inside their source databases, so the only bytes that
-    * crossed the wire before these anti-joins are keys + ~32-byte hashes.
-    * Both maps MUST come from the same producer flavor (both pushed with the
-    * same dialect expression, or both Spark-side) — server vs Spark casts
-    * differ. `source` stays the full-row master read: only the J3 keyed
-    * fetch of actual insert rows touches it.
-    */
-  def hashDiffMaps(mh: DataFrame, sh: DataFrame, source: DataFrame,
-                   keyCols: Seq[String]): Delta =
-    antiDiff(mh, sh, Seq("row_hash"), source, keyCols)
-
-  private def antiDiff(mh: DataFrame, sh: DataFrame, hashCols: Seq[String],
-                       source: DataFrame, keyCols: Seq[String]): Delta = {
-    // J2: slave rows whose content is absent from master → delete keys.
-    // No distinct() on the right side: anti-join has existence semantics
-    // already, and keeping both anti-joins' inputs as the SAME two plans
-    // lets ReuseExchange compute each side's shuffle once when both legs
-    // run in one action (see applyDelta's single tagged spill).
-    val deletes = sh.join(mh.select(hashCols.map(col): _*), hashCols, "left_anti")
-      .select(keyCols.map(col): _*)
-    // J1: master rows whose content is absent from slave → keys to copy
-    val missingKeys = mh.join(sh.select(hashCols.map(col): _*), hashCols, "left_anti")
-      .select(keyCols.map(col): _*)
-    Delta(deletes, missingKeys, source, keyCols)
+    val (mh, sh) = hashMaps(master, slave, keyCols, legacyNullSkip)
+    mapsDiff(mh, sh, master, keyCols, keyAware = false)
   }
 
   /** Key-aware diff — the correct-by-construction variant (SURVEY §2.3 J1
@@ -123,84 +124,52 @@ object Differ {
     * rows the reference mishandles. One shuffle per side on the key columns.
     */
   def keyDiff(master: DataFrame, slave: DataFrame, keyCols: Seq[String]): Delta = {
-    val dataCols = master.columns.toSeq
-    def pair(df: DataFrame, p: String) =
-      Hashing.fastHashMap(df, keyCols, dataCols)
-        .withColumnRenamed("h1", s"${p}_h1").withColumnRenamed("h2", s"${p}_h2")
-    keyedDiff(pair(master, "m"), pair(slave, "s"),
-      Seq("m_h1", "m_h2"), Seq("s_h1", "s_h2"), master, keyCols)
+    val (mh, sh) = hashMaps(master, slave, keyCols)
+    mapsDiff(mh, sh, master, keyCols, keyAware = true)
   }
 
-  /** Key-aware diff over PRECOMPUTED `(key…, row_hash)` maps (the pushed
-    * analog of [[keyDiff]] — see [[hashDiffMaps]] for the producer-flavor
-    * contract). The single md5 hash replaces the local 128-bit pair: its
-    * collision bound (~n²/2^129 within one key) is the md5 birthday bound,
-    * fine for per-key comparison.
+  /** The diff over two `(key…, h1, h2)` maps from [[hashMaps]] — the gate's
+    * maps themselves, so the gate's table scans ARE the diff's. `source`
+    * stays the full-row master read: only the J3 keyed fetch of actual
+    * insert rows touches it. `keyAware` picks the full-outer key join over
+    * the reference's two hash anti-joins.
     */
-  def keyDiffMaps(mh: DataFrame, sh: DataFrame, source: DataFrame,
-                  keyCols: Seq[String]): Delta =
-    keyedDiff(mh.withColumnRenamed("row_hash", "m_h"),
-      sh.withColumnRenamed("row_hash", "s_h"), Seq("m_h"), Seq("s_h"),
-      source, keyCols)
-
-  /** [[hashDiff]] over PRECOMPUTED fast 128-bit pair maps
-    * ([[Hashing.fastHashMap]] output) — lets the engine hand the SAME
-    * materialized maps to the A1 gate aggregate and the diff legs, so the
-    * gate's table scans ARE the diff's.
-    */
-  def fastDiffMaps(mh: DataFrame, sh: DataFrame, source: DataFrame,
-                   keyCols: Seq[String]): Delta =
-    antiDiff(mh, sh, Hashing.FastHashCols, source, keyCols)
-      .copy(narrowSource = Some(mh))
-
-  /** [[keyDiff]] over the same precomputed fast-pair maps. */
-  def fastKeyDiffMaps(mh: DataFrame, sh: DataFrame, source: DataFrame,
-                      keyCols: Seq[String]): Delta = {
-    def r(df: DataFrame, p: String) =
-      df.withColumnRenamed("h1", s"${p}_h1").withColumnRenamed("h2", s"${p}_h2")
-    keyedDiff(r(mh, "m"), r(sh, "s"),
-      Seq("m_h1", "m_h2"), Seq("s_h1", "s_h2"), source, keyCols)
-      .copy(narrowSource = Some(mh))
+  def mapsDiff(mh: DataFrame, sh: DataFrame, source: DataFrame,
+               keyCols: Seq[String], keyAware: Boolean): Delta = {
+    val keys = keyCols.map(col)
+    val legs =
+      if (keyAware) {
+        // No cache: the legs execute in applyDelta's ONE spill action, where
+        // the join's input exchanges are reused — a cache here had no owner
+        // to unpersist it and leaked executor memory across syncs.
+        def side(df: DataFrame, p: String) =
+          df.withColumnRenamed("h1", s"${p}_h1").withColumnRenamed("h2", s"${p}_h2")
+        val joined = side(mh, "m").join(side(sh, "s"), keyCols, "full_outer")
+        val same = (col("m_h1") <=> col("s_h1")) && (col("m_h2") <=> col("s_h2"))
+        // Both legs in ONE pass over the join (an update key explodes into
+        // d + k): a union of two filtered legs would execute the full-outer
+        // merge twice (exchanges are reused, the join itself is not).
+        joined.filter(!same)
+          .select(keys :+ explode(filter(array(
+            when(col("s_h1").isNotNull, "d"),
+            when(col("m_h1").isNotNull, "k")),
+            x => x.isNotNull)).as("__leg"): _*)
+      } else {
+        // J2: slave rows whose content is absent from master → delete keys.
+        // J1: master rows whose content is absent from slave → keys to copy.
+        // No distinct() on the right sides: anti-join has existence
+        // semantics already, and keeping both anti-joins' inputs as the SAME
+        // two plans lets ReuseExchange compute each side's shuffle once in
+        // the one spill action.
+        val hashCols = Hashing.FastHashCols
+        def absent(df: DataFrame, other: DataFrame, tag: String) =
+          df.join(other.select(hashCols.map(col): _*), hashCols, "left_anti")
+            .select(keys: _*).withColumn("__leg", lit(tag))
+        absent(sh, mh, "d").unionByName(absent(mh, sh, "k"))
+      }
+    Delta(legs, mh, source, keyCols)
   }
 
-  private def keyedDiff(mh: DataFrame, sh: DataFrame, mHashCols: Seq[String],
-                        sHashCols: Seq[String], source: DataFrame,
-                        keyCols: Seq[String]): Delta = {
-    // No cache: the two legs below execute in applyDelta's ONE spill action,
-    // where the join's input exchanges are reused — a cache here had no
-    // owner to unpersist it and leaked executor memory across syncs.
-    val joined = mh.join(sh, keyCols, "full_outer")
-    val same = mHashCols.zip(sHashCols)
-      .map { case (m, s) => col(m) <=> col(s) }.reduce(_ && _)
-    val deletes = joined
-      .filter(col(sHashCols.head).isNotNull && !same)
-      .select(keyCols.map(col): _*)
-    val missingKeys = joined
-      .filter(col(mHashCols.head).isNotNull && !same)
-      .select(keyCols.map(col): _*)
-    // Both legs in ONE pass over the join (an update key explodes into
-    // d + k): the spill job otherwise executes the full-outer merge twice,
-    // once per unioned leg (exchanges are reused, the join itself is not).
-    val legs = joined.filter(!same)
-      .select(keyCols.map(col) :+ explode(filter(array(
-        when(col(sHashCols.head).isNotNull, "d"),
-        when(col(mHashCols.head).isNotNull, "k")),
-        x => x.isNotNull)).as("__leg"): _*)
-    Delta(deletes, missingKeys, source, keyCols, spillLegs = Some(legs))
-  }
-
-  /** Apply a delta to `table` in `store`: deletes first, then inserts (C7/C8).
-    *
-    * The delta is SPILLED to scratch parquet before any mutation — both its
-    * legs are lazy plans over the slave's *current* files, which the delete
-    * rewrite invalidates. This mirrors the reference's out-of-core hash side
-    * tables (`main.php:27-59`): the materialized delta is the engine's
-    * restart point, never driver memory.
-    */
-  /** @return (rows deleted, rows inserted) — counted as the delta spills
-    *         (observed on the spill writes of a mutating run), so the diff
-    *         plans execute exactly once and no job re-counts a spill.
-    */
   /** Insert-key lists below this row count are broadcast for the J3 keyed
     * fetch (a key row is ~tens of bytes; 1M keys ≈ a ~100 MB hashed relation
     * — the safe ceiling for an explicit broadcast). Above it the fetch falls
@@ -259,21 +228,31 @@ object Differ {
     ()
   }
 
-  /** Apply (or, when `dryRun`, only plan and count) a delta. Dry runs pay
-    * the same scratch key spill — it touches no slave state and makes the
-    * counts exact with one execution of each diff leg — but skip the wide
-    * insert-row materialization (the count comes straight off the semi-join).
+  /** Apply a delta to `table` in `store`: deletes first, then inserts (C7/C8).
+    *
+    * A mutating run SPILLS the delta to scratch parquet before any mutation
+    * — its legs are lazy plans over the slave's *current* files, which the
+    * delete rewrite invalidates. This mirrors the reference's out-of-core
+    * hash side tables (`main.php:27-59`): the materialized delta is the
+    * engine's restart point, never driver memory. A dry run (`dryRun`: plan
+    * and count only) mutates nothing, so it freezes the legs in a local
+    * checkpoint instead of a scratch spill, and counts insert rows against
+    * the delta's narrow map instead of materializing wide rows.
     *
     * `partDeletes` folds a whole-partition delete list (C4 excess-partition
     * cleanup) into the SAME store-level apply, so copy-on-write stores pay
     * one rewrite for partition deletes + row deletes + inserts together.
-    */
-  /** `keyedFetch`, when provided, may replace the J3 semi-join insert fetch
+    *
+    * `keyedFetch`, when provided, may replace the J3 semi-join insert fetch
     * with a store-pushed keyed lookup (`(spilledKeys, count) => rows`) — the
     * wire-efficient path for remote sources: a small delta fetches
     * delta-sized rows instead of scanning the whole source for a Spark-side
     * semi-join ([[JdbcStore.readKeyed]]). Returning None falls back to the
     * semi-join.
+    *
+    * @return (rows deleted, rows inserted) — counted as the delta spills
+    *         (observed on the spill writes of a mutating run), so the diff
+    *         plans execute exactly once and no job re-counts a spill.
     */
   def applyDelta(store: TableStore, table: String, delta: Delta,
                  dryRun: Boolean = false,
@@ -309,14 +288,11 @@ object Differ {
       // silently recomputing a leg against a source a concurrent writer may
       // have moved since (plain persist() would hand the J3 count and the
       // leg counts views of two different instants in that case).
-      val legsPlan = delta.spillLegs.getOrElse(
-        delta.deletes.withColumn("__leg", lit("d"))
-          .unionByName(delta.insertKeys.withColumn("__leg", lit("k"))))
       val legObs = Observation()
       val keys =
-        if (dryRun) legsPlan.localCheckpoint(false)
+        if (dryRun) delta.legs.localCheckpoint(false)
         else describeJobs(spark, s"sync: $table diff-leg spill")(
-          spill(legsPlan.observe(legObs,
+          spill(delta.legs.observe(legObs,
             count(when(col("__leg") === "d", 1)).as("d"),
             count(when(col("__leg") === "k", 1)).as("k")), s"$scratch/keys"))
       try {
@@ -347,16 +323,15 @@ object Differ {
       // source's full by-key shuffle before discovering the key side is
       // tiny. A mutating run counts the rows off the spill write.
       val keyList = if (nInsKeys <= BroadcastKeyMax) broadcast(spilledInsKeys) else spilledInsKeys
-      val insertPlan = keyedFetch.flatMap(f => f(spilledInsKeys, nInsKeys))
-        .getOrElse(delta.source.join(keyList, delta.keyCols, "left_semi"))
       val (nIns, insertSpill) = describeJobs(spark, s"sync: $table insert fetch") {
         if (nInsKeys == 0) (0L, None)
-        // Dry-run count over the narrow map when the diff materialized one:
-        // same key multiplicity as the source, no wide re-scan.
-        else if (dryRun) (delta.narrowSource
-          .map(_.join(keyList, delta.keyCols, "left_semi").count())
-          .getOrElse(insertPlan.count()), None)
+        // Dry-run count over the narrow map: same key multiplicity as the
+        // source, no wide re-scan.
+        else if (dryRun)
+          (delta.narrowSource.join(keyList, delta.keyCols, "left_semi").count(), None)
         else {
+          val insertPlan = keyedFetch.flatMap(f => f(spilledInsKeys, nInsKeys))
+            .getOrElse(delta.source.join(keyList, delta.keyCols, "left_semi"))
           val insObs = Observation()
           val spilled = spill(insertPlan.observe(insObs, count(lit(1))), s"$scratch/inserts")
           (observed(insObs, table).getLong(0), Some(spilled))

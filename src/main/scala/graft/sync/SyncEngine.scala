@@ -2,6 +2,7 @@ package graft.sync
 
 import graft.functions.Hashing
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.FooterSchema
 
@@ -21,7 +22,8 @@ final case class SyncConfig(
     partitionedTables: Map[String, String] = Map.empty,
     /** Also row-diff partitions present on both sides (`settings.php.tmpl:64-67`). */
     syncSharedPartitions: Boolean = true,
-    /** table → key columns; tables absent here fall back to no-PK handling. */
+    /** table → key columns; tables absent here fall back to no-PK handling.
+      * An empty key list is rejected when the engine is built. */
     primaryKeys: Map[String, Seq[String]] = Map.empty,
     /** Reproduce the reference's NULL-skipping row hash (SURVEY P1 note). */
     legacyNullSkip: Boolean = false,
@@ -60,14 +62,14 @@ final case class SyncConfig(
       * `Synchronizer.php:73-92`). Spark parallelizes *within* jobs; this only
       * overlaps small-table jobs to keep the scheduler busy.
       *
-      * Scale note (10k+ tables): per CLEAN keyed table the cascade costs
-      * one fused-gate job (the A1 short-circuit; no-PK and legacy-hash
-      * tables pay one fingerprint aggregate per side), so the bound is driver
-      * round-trips, not data. Raise this toward the driver's core count to
-      * overlap them (each thread holds at most one in-flight Spark job);
-      * catalog-backed stores additionally pay one metastore round-trip per
-      * table, which serializes on an embedded (Derby) metastore — use an
-      * external metastore when table count is the workload.
+      * Scale note (10k+ tables): per CLEAN unpartitioned table the cascade
+      * costs one fused-gate job (the A1 short-circuit, whatever the table's
+      * keys or hash flavor), so the bound is driver round-trips, not data.
+      * Raise this toward the driver's core count to overlap them (each
+      * thread holds at most one in-flight Spark job); catalog-backed stores
+      * additionally pay one metastore round-trip per table, which
+      * serializes on an embedded (Derby) metastore — use an external
+      * metastore when table count is the workload.
       * SyncEngineSpec's 100-table guard pins the orchestration behavior. */
     tableParallelism: Int = 4,
     /** Append every recorded action as a JSON line to this file (S15 — the
@@ -143,13 +145,31 @@ object SyncAction {
   * The reference's single most important performance idea is the hierarchical
   * short-circuit (SURVEY §4): structure differs → full recopy; fingerprints
   * equal → done; only then pay for the row-level diff. That cascade is driver
-  * control flow here; each stage is one or two Spark jobs whose plans are
-  * narrow projections/aggregates that scale with partition count, not driver
+  * control flow here. Every unpartitioned table reduces each side ONCE to a
+  * `(key…, h1, h2)` hash map ([[Differ.hashMaps]] — Spark-side, legacy md5,
+  * or store-pushed; keyless tables get a map without keys), gates on the two
+  * maps' order-free fold in ONE Spark job, and diffs over the same maps when
+  * the gate trips. Partitioned tables gate per partition value with one
+  * grouped aggregate per side and diff the changed partitions' maps;
+  * maintained mode gates on a stored fingerprint instead. Every plan is a
+  * narrow projection/aggregate that scales with partition count, not driver
   * memory.
+  *
+  * @throws IllegalArgumentException when `config.primaryKeys` maps a table
+  *         to an empty key list (omit the table for no-PK handling).
   */
 final class SyncEngine(master: TableStore, slave: TableStore,
                        config: SyncConfig = SyncConfig()) {
   import SyncAction._
+
+  // An empty key list matches every `keyColsOf` case as keyed, then fails
+  // deep inside the store apply (an empty null-safe join condition, or a
+  // `keyCols.head`) — reject it up front, naming the table.
+  config.primaryKeys.collectFirst { case (t, ks) if ks.isEmpty => t }.foreach { t =>
+    throw new IllegalArgumentException(
+      s"SyncConfig.primaryKeys: table '$t' has an empty key list — " +
+        "omit it to sync the table as keyless")
+  }
 
   /** Tag the Spark jobs `body` launches with a cascade-phase description —
     * visible in the UI/event log on a real cluster, and the unit of
@@ -416,30 +436,20 @@ final class SyncEngine(master: TableStore, slave: TableStore,
   private def syncUnpartitionedTable(table: String): SyncAction = {
     val m = master.read(table)
     val cols = m.columns.toSeq
-
-    // Wire-efficient cascade (config.hashPushdown): gate AND diff run over
-    // server-hashed (key, row_hash) maps — only hashes cross the wire; full
-    // rows move solely in the J3 insert fetch, scoped to the delta's keys.
-    keyColsOf(table).flatMap(k => pushedMaps(table, k, cols).map((k, _))) match {
-      case Some((keys, (mh, sh))) =>
-        if (config.maintainFingerprints) {
-          val mFp = Hashing.multisetFpOfHashes(mh, "row_hash")
-          val sFp = maintainedFp.get(table).collect { case FpState(fp, true) => fp }
-            .getOrElse(Hashing.multisetFpOfHashes(sh, "row_hash"))
-          if (mFp == sFp) {
-            if (!config.dryRun) maintainedFp.update(table, FpState(mFp, pushed = true))
-            return record(Skip(table, "already in sync"))
-          }
-          val action = applyMapsDelta(table, m, mh, sh, keys)
-          if (!config.dryRun && converged(action))
-            maintainedFp.update(table, FpState(mFp, pushed = true))
-          return action
-        }
-        if (Hashing.multisetFpOfHashes(mh, "row_hash") ==
-            Hashing.multisetFpOfHashes(sh, "row_hash"))
-          return record(Skip(table, "already in sync"))
-        return applyMapsDelta(table, m, mh, sh, keys)
-      case None => ()
+    val keys = keyColsOf(table)
+    // Wire-efficient cascade (config.hashPushdown): both sides hashed inside
+    // their stores — only hashes cross the wire; full rows move solely in
+    // the J3 insert fetch, scoped to the delta's keys.
+    val pushed = keys.flatMap(pushedMaps(table, _, cols))
+    def maps() = Differ.hashMaps(m, slave.read(table), keys.getOrElse(Nil),
+      config.legacyNullSkip, pushed)
+    // The cascade's tail once the gate tripped: the row-level diff over the
+    // maps + ordered apply, or the no-PK fallback.
+    def diff(mh: DataFrame, sh: DataFrame): SyncAction = keys match {
+      case None =>
+        if (config.copyTablesWithNoPrimary) copyTable(table)
+        else record(Skip(table, "no primary key"))
+      case Some(k) => applyDelta(table, Differ.mapsDiff(mh, sh, m, k, config.keyAwareDiff))
     }
 
     if (config.maintainFingerprints) {
@@ -447,86 +457,43 @@ final class SyncEngine(master: TableStore, slave: TableStore,
       // scanned again — this engine is the slave's only writer, so the
       // fingerprint it converged to IS the slave's fingerprint. A changed
       // master pays ONE scan (its own); the old gate paid two per cycle.
-      val mFp = Hashing.multisetFp(m, cols, config.legacyNullSkip)
-      val sFp = maintainedFp.get(table).collect { case FpState(fp, false) => fp }
-        .getOrElse(Hashing.multisetFp(slave.read(table), cols, config.legacyNullSkip))
+      // The flavor (pushed md5 vs Spark-side) must match the stored value.
+      def fp(side: => DataFrame, pushedSide: Option[DataFrame]) =
+        pushedSide.fold(Hashing.multisetFp(side, cols, config.legacyNullSkip))(
+          Hashing.multisetFpOfHashes(_, "row_hash"))
+      val mFp = fp(m, pushed.map(_._1))
+      val sFp = maintainedFp.get(table)
+        .collect { case FpState(v, p) if p == pushed.isDefined => v }
+        .getOrElse(fp(slave.read(table), pushed.map(_._2)))
       if (mFp == sFp) {
-        if (!config.dryRun) maintainedFp.update(table, FpState(mFp, pushed = false))
+        if (!config.dryRun) maintainedFp.update(table, FpState(mFp, pushed.isDefined))
         return record(Skip(table, "already in sync"))
       }
-      val action = diffAndApply(table, m)
+      val (mh, sh) = maps()
+      val action = diff(mh, sh)
       // Convergence ⇒ slave ≡ master ⇒ the master fingerprint just computed
       // is the slave's maintained value for the next cycle.
       if (!config.dryRun && converged(action))
-        maintainedFp.update(table, FpState(mFp, pushed = false))
+        maintainedFp.update(table, FpState(mFp, pushed.isDefined))
       return action
     }
 
-    // A1 gate fused with the diff: reduce each side ONCE to the narrow
-    // (key, h1, h2) fast-hash map, gate on the map's order-free aggregate,
-    // and when the gate trips run the diff legs over the SAME materialized
-    // maps — the gate's table scans ARE the diff's, halving the heavy hash
-    // scans per divergent cycle (in-sync cycles pay the same two scans as
-    // the plain gate, now yielding a reusable artifact). Legacy-hash and
-    // no-PK tables keep the two-fingerprint gate: legacy md5 NULL-skip
-    // behavior is the point there, and a no-PK table has no diff to fuse.
-    keyColsOf(table) match {
-      case Some(keys) if keys.nonEmpty && !config.legacyNullSkip =>
-        // Lazy persist, not eager checkpoint: the fused gate's one job scans
-        // both sides, populates both caches as it goes and folds them —
-        // an eager checkpoint per side paid two extra scheduling barriers
-        // for the same materialization.
-        val mh = Hashing.fastHashMap(m, keys, cols).persist()
-        try {
-          val sh = Hashing.fastHashMap(slave.read(table), keys, cols).persist()
-          try {
-            val (mFp, sFp) = phase(s"$table fused-gate")(Hashing.fastMapFingerprints(mh, sh))
-            if (mFp == sFp)
-              return record(Skip(table, "already in sync"))
-            val delta =
-              if (config.keyAwareDiff) Differ.fastKeyDiffMaps(mh, sh, m, keys)
-              else Differ.fastDiffMaps(mh, sh, m, keys)
-            applyDelta(table, delta)
-          } finally graft.ops.Caching.release(sh)
-        } finally graft.ops.Caching.release(mh)
-      case _ =>
-        // A1 short-circuit: one cheap aggregate per side before any row work.
-        if (Hashing.tableFingerprint(m, cols, config.legacyNullSkip) ==
-            Hashing.tableFingerprint(slave.read(table), cols, config.legacyNullSkip))
-          return record(Skip(table, "already in sync"))
-        diffAndApply(table, m)
+    // A1 gate fused with the diff: each side reduced ONCE to its narrow
+    // (key…, h1, h2) map, gated on the maps' order-free fold in one job, and
+    // when the gate trips the diff legs run over the SAME maps — the gate's
+    // table scans ARE the diff's. Lazy persist, not eager checkpoint: the
+    // gate's one job scans both sides, populates both caches as it goes and
+    // folds them. A keyless map has no diff to feed, so it is not persisted.
+    val persist = keys.isDefined
+    val (mh, sh) = maps() match {
+      case (a, b) if persist => (a.persist(), b.persist())
+      case ab => ab
     }
+    try {
+      val (mFp, sFp) = phase(s"$table fused-gate")(Hashing.fastMapFingerprints(mh, sh))
+      if (mFp == sFp) record(Skip(table, "already in sync")) else diff(mh, sh)
+    } finally if (persist) { graft.ops.Caching.release(sh); graft.ops.Caching.release(mh) }
   }
-
-  /** Pushed-map tail of the cascade: row-level diff from the server-hashed
-    * maps (the [[Differ.hashDiffMaps]]/[[Differ.keyDiffMaps]] forms) +
-    * ordered apply.
-    */
-  private def applyMapsDelta(table: String, m: org.apache.spark.sql.DataFrame,
-                             mh: org.apache.spark.sql.DataFrame,
-                             sh: org.apache.spark.sql.DataFrame,
-                             keys: Seq[String]): SyncAction = {
-    val delta =
-      if (config.keyAwareDiff) Differ.keyDiffMaps(mh, sh, m, keys)
-      else Differ.hashDiffMaps(mh, sh, m, keys)
-    applyDelta(table, delta)
-  }
-
-  /** Row-level diff + ordered apply (or no-PK fallback) — the cascade's tail
-    * shared by both gate variants.
-    */
-  private def diffAndApply(table: String, m: org.apache.spark.sql.DataFrame): SyncAction =
-    keyColsOf(table) match {
-      case None =>
-        if (config.copyTablesWithNoPrimary) copyTable(table)
-        else record(Skip(table, "no primary key"))
-      case Some(keys) =>
-        val s = slave.read(table)
-        val delta =
-          if (config.keyAwareDiff) Differ.keyDiff(m, s, keys)
-          else Differ.hashDiff(m, s, keys, config.legacyNullSkip)
-        applyDelta(table, delta)
-    }
 
   /** O(delta) CDC apply (maintained mode): fold a master change batch into
     * the slave AND the maintained fingerprint — no scan of either table.
@@ -856,12 +823,12 @@ final class SyncEngine(master: TableStore, slave: TableStore,
     // grouped fingerprints AND the scoped diff read only (key, partition,
     // 32-byte hash) projections — the reference computes its per-partition
     // hashes server-side too (`TableConnection.php:510-547`).
-    val pushed = keyColsOf(table).flatMap(k =>
-      pushedMaps(table, (k :+ partCol).distinct, cols).map((k, _)))
+    val projCols = keyColsOf(table).map(k => (k :+ partCol).distinct)
+    val pushed = projCols.flatMap(pushedMaps(table, _, cols))
     val pushedMode = pushed.isDefined
 
     val mFp = pushed match {
-      case Some((_, (mh, _))) =>
+      case Some((mh, _)) =>
         Hashing.partitionFingerprintsOfHashes(mh, partCol, "row_hash")
       case None => Hashing.partitionFingerprints(m, partCol, cols, config.legacyNullSkip)
     }
@@ -879,7 +846,7 @@ final class SyncEngine(master: TableStore, slave: TableStore,
         val reader = master.spark.read
         FooterSchema.of(master.spark, path).fold(reader)(reader.schema).parquet(path)
       case None => pushed match {
-        case Some((_, (_, sh))) =>
+        case Some((_, sh)) =>
           Hashing.partitionFingerprintsOfHashes(sh, partCol, "row_hash")
         case None => Hashing.partitionFingerprints(s, partCol, cols, config.legacyNullSkip)
       }
@@ -918,10 +885,11 @@ final class SyncEngine(master: TableStore, slave: TableStore,
         return record(ApplyDelta(table, nExcess, 0))
       }
 
-      val keys = keyColsOf(table).getOrElse(Seq.empty)
-      if (keys.isEmpty) {
-        return if (config.copyTablesWithNoPrimary) copyTable(table)
-               else record(Skip(table, "no primary key"))
+      val keys = keyColsOf(table) match {
+        case Some(k) => k
+        case None =>
+          return if (config.copyTablesWithNoPrimary) copyTable(table)
+                 else record(Skip(table, "no primary key"))
       }
       // Nothing has mutated the slave yet (the apply below is the ONLY
       // write), so the diff's lazy plans over the slave's current files stay
@@ -930,25 +898,18 @@ final class SyncEngine(master: TableStore, slave: TableStore,
       // semi-joins never shuffle the tables by key.
       val needDiffB =
         if (nNeed <= Differ.BroadcastKeyMax) broadcast(needDiff) else needDiff
-      val mScope = m.join(needDiffB, m(partCol) <=> needDiffB("__need_part"), "left_semi")
-      val sScope = s.join(needDiffB, s(partCol) <=> needDiffB("__need_part"), "left_semi")
-      // C7: a row may have moved partitions; keying the diff on the PK alone
-      // (not PK+partition) plus delete-before-insert keeps convergence.
-      val delta = pushed match {
-        case Some((_, (mh, sh))) =>
-          // Scope the PUSHED maps to the changed partitions (partCol is in
-          // the pushed projection) — the diff's wire traffic stays hashes.
-          def scoped(hm: org.apache.spark.sql.DataFrame) = {
-            val sc = hm.join(needDiffB,
-              hm(partCol) <=> needDiffB("__need_part"), "left_semi")
-            if (keys.contains(partCol)) sc else sc.drop(partCol)
-          }
-          if (config.keyAwareDiff) Differ.keyDiffMaps(scoped(mh), scoped(sh), mScope, keys)
-          else Differ.hashDiffMaps(scoped(mh), scoped(sh), mScope, keys)
-        case None =>
-          if (config.keyAwareDiff) Differ.keyDiff(mScope, sScope, keys)
-          else Differ.hashDiff(mScope, sScope, keys, config.legacyNullSkip)
-      }
+      def scoped(df: DataFrame) =
+        df.join(needDiffB, df(partCol) <=> needDiffB("__need_part"), "left_semi")
+      // Both maps carry partCol, so they scope like the tables (a pushed
+      // map's diff traffic stays hashes). C7: a row may have moved
+      // partitions; keying the diff on the PK alone (not PK+partition) plus
+      // delete-before-insert keeps convergence.
+      val (mh, sh) = Differ.hashMaps(m, s, (keys :+ partCol).distinct,
+        config.legacyNullSkip, pushed)
+      def scopedMap(hm: DataFrame) =
+        if (keys.contains(partCol)) scoped(hm) else scoped(hm).drop(partCol)
+      val delta = Differ.mapsDiff(scopedMap(mh), scopedMap(sh), scoped(m), keys,
+        config.keyAwareDiff)
       applyDelta(table, delta,
         partDeletes = if (nExcess > 0) Some(partCol -> excessDf) else None)
     }

@@ -88,6 +88,29 @@ trait TableStore {
   }
 }
 
+object TableStore {
+
+  /** Metadata-only change token for the files under `root`: md5 over the
+    * sorted (path, length, mtime) listing, `"__absent__"` when `root` does
+    * not exist — O(#files), no data read, no Spark job. The walk goes
+    * through the Hadoop FileSystem ([[graft.ops.FsMaint.walkFiles]]), so the
+    * same token works on local fs, HDFS and object stores.
+    */
+  private[sync] def listingToken(spark: SparkSession, root: org.apache.hadoop.fs.Path): String = {
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(root)) return "__absent__"
+    val entries = scala.collection.mutable.ArrayBuffer.empty[String]
+    graft.ops.FsMaint.walkFiles(fs, root) { f =>
+      entries += s"${f.getPath}|${f.getLen}|${f.getModificationTime}"
+      true
+    }
+    val digest = java.security.MessageDigest.getInstance("MD5")
+    entries.sorted.foreach(e =>
+      digest.update(e.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+    digest.digest().map(b => f"$b%02x").mkString
+  }
+}
+
 /** Copy-on-write deletes: every keyed/partition delete is an anti-join +
   * whole-table overwrite — the same model Delta/Iceberg use; at cluster
   * scale the rewrite is partition-pruned by the table's physical layout, and
@@ -183,26 +206,13 @@ class FileStore(val spark: SparkSession, dir: String,
   override def tablePath(table: String): Option[String] =
     if (format == "parquet") Some(path(table)) else None
 
-  /** Metadata-only token: md5 over the sorted (path, size, mtime) file
-    * listing — O(#files), no data read, no Spark job. Spark/parquet commits
-    * write fresh unique part-file names, so any rewrite changes the token
-    * even inside mtime granularity. (Local-fs walk; an HDFS/object-store
-    * deployment does the same with one LIST call.)
+  /** Metadata-only token over the table directory's file listing
+    * ([[TableStore.listingToken]]). Spark/parquet commits write fresh
+    * unique part-file names, so any rewrite changes the token even inside
+    * mtime granularity.
     */
-  override def changeToken(table: String): Option[String] = {
-    val root = new java.io.File(path(table))
-    if (!root.exists()) return Some("__absent__")
-    val sb = new StringBuilder
-    def walk(f: java.io.File): Unit =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).sortBy(_.getName).foreach(walk)
-      else { sb.append(f.getPath).append('|').append(f.length)
-        .append('|').append(f.lastModified).append('\n'); () }
-    walk(root)
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    Some(d.map(b => f"$b%02x").mkString)
-  }
+  override def changeToken(table: String): Option[String] =
+    Some(TableStore.listingToken(spark, new org.apache.hadoop.fs.Path(path(table))))
 
   override def drop(table: String): Unit = deleteRecursively(new java.io.File(path(table)))
 

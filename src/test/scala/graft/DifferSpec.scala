@@ -54,21 +54,20 @@ class DifferSpec extends SparkSpec {
   }
 
   test("dry-run insert count over narrowSource equals the wide-source count (duplicate keys)") {
-    // fastDiffMaps hands its narrow map to Delta.narrowSource so dry runs
-    // never re-scan the wide source; the counts must agree even when a key
-    // maps to MULTIPLE source rows (the semi-join fetch is per-row). A
+    // mapsDiff hands the master's narrow map to Delta.narrowSource so dry
+    // runs never re-scan the wide source; the counts must agree even when a
+    // key maps to MULTIPLE source rows (the semi-join fetch is per-row). A
     // mutating apply over the same inputs counts off its spill writes and
-    // must report the same (deleted, inserted).
+    // must report the same (deleted, inserted). Every map flavor the
+    // builder produces (fast pair, legacy md5) and both diff modes run.
     val m = Seq((1L, "a", 10.0), (1L, "a2", 11.0), (2L, "b", 20.0), (3L, "c", 30.0))
       .toDF("k", "s", "v")
     val s = Seq((2L, "b", 20.0)).toDF("k", "s", "v")
-    val mh = graft.functions.Hashing.fastHashMap(m, Seq("k"), m.columns.toSeq)
-    val sh = graft.functions.Hashing.fastHashMap(s, Seq("k"), s.columns.toSeq)
-    Seq[(String, () => graft.sync.Delta)](
-      "fastDiffMaps" -> (() => Differ.fastDiffMaps(mh, sh, m, Seq("k"))),
-      "fastKeyDiffMaps" -> (() => Differ.fastKeyDiffMaps(mh, sh, m, Seq("k")))
-    ).foreach { case (name, delta) =>
-      assert(delta().narrowSource.isDefined, name)
+    for (legacy <- Seq(false, true); keyAware <- Seq(false, true)) {
+      val name = s"legacyNullSkip=$legacy keyAware=$keyAware"
+      val (mh, sh) = Differ.hashMaps(m, s, Seq("k"), legacy)
+      def delta() = Differ.mapsDiff(mh, sh, m, Seq("k"), keyAware)
+      assert(delta().narrowSource eq mh, name)
       val store = new graft.sync.ParquetStore(spark,
         java.nio.file.Files.createTempDirectory("graft_narrow_dry").toString)
       store.overwrite("t", s)

@@ -190,17 +190,21 @@ class PlanAuditSpec extends SparkSpec {
     val li = spark.read.parquet(s"$sf001/lineitem.parquet")
     li.write.parquet(s"$mDir/lineitem.parquet")
     li.filter(col("l_orderkey") % 7 =!= 0).write.parquet(s"$sDir/lineitem.parquet")
-    val engine = new SyncEngine(new ParquetStore(spark, mDir), new ParquetStore(spark, sDir),
-      SyncConfig(primaryKeys = liKeys, dryRun = true))
-    val scans = scanPathsDuring { engine.syncTable("lineitem"): Unit }
-    val m = scans.count(_.contains(mDir))
-    val s = scans.count(_.contains(sDir))
     // PLANS.md's fused-gate claim: each side reduces ONCE to its narrow
-    // fast-hash map; the gate, both diff legs, and the dry-run insert count
-    // all reuse those maps — 2 wide scans total, nothing else touches the
-    // tables.
-    assert(m == 1, s"master scanned $m times; expected exactly 1\n${scans.mkString("\n")}")
-    assert(s == 1, s"slave scanned $s times; expected exactly 1\n${scans.mkString("\n")}")
+    // hash map; the gate, both diff legs, and the dry-run insert count all
+    // reuse those maps — 2 wide scans total, nothing else touches the
+    // tables. The legacy md5 map flavor goes through the same path.
+    for (legacy <- Seq(false, true)) {
+      val engine = new SyncEngine(new ParquetStore(spark, mDir), new ParquetStore(spark, sDir),
+        SyncConfig(primaryKeys = liKeys, dryRun = true, legacyNullSkip = legacy))
+      val scans = scanPathsDuring { engine.syncTable("lineitem"): Unit }
+      val m = scans.count(_.contains(mDir))
+      val s = scans.count(_.contains(sDir))
+      assert(m == 1, s"legacyNullSkip=$legacy: master scanned $m times; expected exactly 1\n" +
+        scans.mkString("\n"))
+      assert(s == 1, s"legacyNullSkip=$legacy: slave scanned $s times; expected exactly 1\n" +
+        scans.mkString("\n"))
+    }
   }
 
   test("manifest-driven incremental sync: steady cycle plans ONLY the new master files") {

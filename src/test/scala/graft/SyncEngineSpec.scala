@@ -77,6 +77,13 @@ class SyncEngineSpec extends SparkSpec {
     assert(engine.syncTable("customer") == SyncAction.Skip("customer", "already in sync"))
   }
 
+  test("an empty primary-key list is rejected when the engine is built, naming the table") {
+    val (_, _, ms, ss) = mkStores("emptypk")
+    val e = intercept[IllegalArgumentException](new SyncEngine(ms, ss, SyncConfig(
+      primaryKeys = Map("orders" -> Seq("o_orderkey"), "lineitem" -> Nil))))
+    assert(e.getMessage.contains("lineitem"), e.getMessage)
+  }
+
   test("no primary key: copy when allowed, skip when not") {
     val (md, sd, ms, ss) = mkStores("nopk")
     write(md, "heap", custDf)
@@ -218,6 +225,9 @@ class SyncEngineSpec extends SparkSpec {
     write(md, "churned", custDf)
     write(sd, "churned", custDf.filter($"id" =!= 2L)
       .withColumn("bal", when($"id" === 3L, lit(99.0)).otherwise($"bal")))
+    // Keyless (absent from primaryKeys) and in sync: gated like the rest.
+    write(md, "heap", custDf)
+    write(sd, "heap", custDf.orderBy(desc("id")))
     val engine = new SyncEngine(ms, ss, SyncConfig(
       primaryKeys = Map("quiet" -> Seq("id"), "churned" -> Seq("id"))))
     // Jobs are scoped by a local property the engine's table-pool threads
@@ -242,7 +252,7 @@ class SyncEngineSpec extends SparkSpec {
       a
     } finally spark.sparkContext.removeSparkListener(listener)
     assert(actions.toSet == Set(SyncAction.Skip("quiet", "already in sync"),
-      SyncAction.ApplyDelta("churned", 1, 2)))
+      SyncAction.Skip("heap", "already in sync"), SyncAction.ApplyDelta("churned", 1, 2)))
     assert(fp(ss.read("churned")) == fp(ms.read("churned")))
     val jobs = descs.toArray(Array.empty[String]).toSeq
     val untagged = jobs.filterNot(_.startsWith("sync:"))
@@ -251,7 +261,8 @@ class SyncEngineSpec extends SparkSpec {
     // mutating cycle reads its leg counts off the spill write.
     val perTag = jobs.groupBy(identity).view.mapValues(_.size).toMap
     assert(perTag.get("sync: quiet fused-gate").contains(1) &&
-      perTag.get("sync: churned fused-gate").contains(1), s"jobs per tag: $perTag")
+      perTag.get("sync: churned fused-gate").contains(1) &&
+      perTag.get("sync: heap fused-gate").contains(1), s"jobs per tag: $perTag")
     assert(!jobs.exists(_.endsWith(" leg counts")), s"jobs per tag: $perTag")
   }
 
