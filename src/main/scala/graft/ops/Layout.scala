@@ -122,17 +122,11 @@ object Layout {
   }
 
 
-  /** Read picked data files of the CURRENT (complete) snapshot with the
-    * snapshot's recorded schema when one exists — a footer-sampled read of
-    * an additively-evolved table could drop a later column from the
-    * rewritten survivors (silent data loss); pre-evolution snapshots fall
-    * back to a mergeSchema read over exactly these files.
-    */
   /** The latest snapshot's logical→physical column-name map — [[Manifest]]
     * rename indirection. Layout's COW machinery operates entirely in
     * PHYSICAL names (what the files carry); only the entry points that
-    * accept caller frames ([[append]], [[mergeKeyed]]'s delta,
-    * [[mergeRowLevel]]'s compute) translate at the boundary.
+    * accept caller frames ([[append]], [[mergeRowLevel]]'s compute — the
+    * keyed upserts' delta included) translate at the boundary.
     */
   private def physMapOf(spark: SparkSession, path: String): Map[String, String] =
     Manifest.currentPhysicalNames(spark, path)
@@ -162,6 +156,12 @@ object Layout {
       df.select(df.columns.toIndexedSeq.map(c => col(c).as(inv.getOrElse(c, c))): _*)
     }
 
+  /** Read picked data files of the CURRENT (complete) snapshot with the
+    * snapshot's recorded schema when one exists — a footer-sampled read of
+    * an additively-evolved table could drop a later column from the
+    * rewritten survivors (silent data loss); pre-evolution snapshots fall
+    * back to a mergeSchema read over exactly these files.
+    */
   private def readPickedPinned(spark: SparkSession, path: String,
                                picked: Seq[String]): org.apache.spark.sql.DataFrame = {
     // Files carry PHYSICAL names: pin the stored (logical) schema through
@@ -667,6 +667,28 @@ object Layout {
     partitionColsFromRel(
       Manifest.relativeTo(path, Manifest.decodePath(picked.head)))
 
+  /** The table's hive partition columns, read off the latest snapshot's
+    * first file — or off the directory layout when that snapshot holds
+    * ZERO file rows (a prior COW delete doomed every row).
+    */
+  private def tablePartitionCols(spark: SparkSession,
+                                 fs: org.apache.hadoop.fs.FileSystem,
+                                 path: String): Seq[String] =
+    Manifest.files(spark, path).select("file").limit(1).collect().headOption
+      .map(r => partitionColsOf(path, Seq(r.getString(0))))
+      .getOrElse(partitionColsFromDirs(fs, path))
+
+  /** Write PHYSICAL-named rows to `dest` in the table's layout: routed
+    * into `k=v/` dirs for a hive-partitioned table, flat otherwise.
+    */
+  private def writeInLayout(spark: SparkSession,
+                            fs: org.apache.hadoop.fs.FileSystem,
+                            path: String, df: org.apache.spark.sql.DataFrame,
+                            dest: String, mode: String): Unit =
+    if (isHivePartitioned(fs, path))
+      df.write.mode(mode).partitionBy(tablePartitionCols(spark, fs, path): _*).parquet(dest)
+    else df.write.mode(mode).parquet(dest)
+
   /** Partition columns recovered from the table's DIRECTORY layout (the
     * first `k=v/` chain found walking down) — the fallback when the latest
     * snapshot holds no file rows to derive them from (a COW delete that
@@ -951,12 +973,15 @@ object Layout {
     * is PK-unique per the sync engine's convention. Hive-partitioned
     * tables route through the per-partition commit, pure inserts land as
     * a partitioned append (see [[deleteRange]]); concurrent writers are
-    * serialized by the table lock.
+    * serialized by the table lock. `refuseNullKeys` (the SQL `UPDATE`)
+    * refuses NULL-key delta rows: a matched NULL-key row cannot be
+    * replaced in place. All four keyed upserts are [[mergeRowLevel]]
+    * transactions whose delta is the whole action set ([[upsert]]).
     */
   def mergeKeyed(spark: SparkSession, path: String, keyCol: String,
-                 delta0: org.apache.spark.sql.DataFrame,
+                 delta: org.apache.spark.sql.DataFrame,
                  refuseNullKeys: Boolean = false): MergeResult =
-    mergeKeyedTxn(spark, path, keyCol, delta0, None, refuseNullKeys)
+    upsert(spark, path, keyCol, delta, dvMode = false, None, refuseNullKeys)
 
   /** EXACTLY-ONCE [[mergeKeyed]] — the upsert side of the streaming sink's
     * batch dedup, on the same writer-transaction ledger as
@@ -967,13 +992,13 @@ object Layout {
     * swap is journaled and crash-healed back to nothing, so a replay
     * either sees the committed (version-recorded) state or a clean
     * pre-merge table, never a half-merge. The pure-insert branch (no file
-    * overlaps any delta key) delegates to [[appendOnce]], inheriting its
-    * prefix-named-file crash triage.
+    * overlaps any delta key) lands through [[appendOnce]]'s prefix-named
+    * files, whose crash orphans the replay triages before anything else.
     */
   def mergeKeyedOnce(spark: SparkSession, path: String, keyCol: String,
                      txnApp: String, txnVersion: Long,
                      delta: org.apache.spark.sql.DataFrame): MergeResult =
-    mergeKeyedTxn(spark, path, keyCol, delta, Some(txnApp -> txnVersion))
+    upsert(spark, path, keyCol, delta, dvMode = false, Some(txnApp -> txnVersion))
 
   /** MERGE-ON-READ [[mergeKeyedOnce]] — the exactly-once keyed upsert at
     * ZERO data files rewritten: matched rows' positions land on the
@@ -991,31 +1016,37 @@ object Layout {
     */
   def mergeKeyedDvOnce(spark: SparkSession, path: String, keyCol: String,
                        txnApp: String, txnVersion: Long,
-                       delta0: org.apache.spark.sql.DataFrame): MergeResult =
-    mergeKeyedDvTxn(spark, path, keyCol, delta0, Some(txnApp -> txnVersion))
+                       delta: org.apache.spark.sql.DataFrame): MergeResult =
+    upsert(spark, path, keyCol, delta, dvMode = true, Some(txnApp -> txnVersion))
 
   /** STATEMENT-level merge-on-read keyed upsert — [[mergeKeyedDvOnce]]'s
     * semantics without a caller-owned replay identity (the
     * `graft.merge.mode=dv` write path of SQL `MERGE INTO` whole-row /
-    * `UPDATE`). Crash safety still rides the triage machinery: the landing
-    * uses a FIXED app id with version = the snapshot id this statement
-    * will create, so a crashed statement's prefix-named orphans are
-    * recognized as unreferenced by the NEXT statement at the same version
-    * and cleaned before it lands — and a completed statement's version is
-    * always below any later statement's, so the ledger never falsely
-    * dedups live work.
+    * `UPDATE`). Crash safety rides the statement identity
+    * ([[StmtDvApp]]): see [[mergeRowLevel]].
     */
   def mergeKeyedDv(spark: SparkSession, path: String, keyCol: String,
-                   delta0: org.apache.spark.sql.DataFrame,
+                   delta: org.apache.spark.sql.DataFrame,
                    refuseNullKeys: Boolean = false): MergeResult =
-    mergeKeyedDvTxn(spark, path, keyCol, delta0, None, refuseNullKeys)
+    upsert(spark, path, keyCol, delta, dvMode = true, None, refuseNullKeys)
 
-  /** A CRASHED dv-mode STATEMENT's prefix-named files (landed, never
-    * committed) would trip `requireComplete` and block every later DML —
-    * with the FIXED statement app id (`__stmt-dv`), any live
-    * `part-sink-<stmtTok>-` file the latest snapshot does not reference is
-    * such an orphan (a completed statement's files are referenced by its
-    * own atomic commit): delete them up front. Callers hold the table lock.
+  /** A keyed upsert as a [[mergeRowLevel]] transaction: the delta is the
+    * whole action set (every row an upsert, no deletes), so no source keys
+    * are passed — the body targets off the delta's own keys.
+    */
+  private def upsert(spark: SparkSession, path: String, keyCol: String,
+                     delta: org.apache.spark.sql.DataFrame, dvMode: Boolean,
+                     txn: Option[(String, Long)],
+                     refuseNullKeys: Boolean = false): MergeResult = {
+    val r = mergeRowLevel(spark, path, Seq(keyCol), None, dvMode = dvMode,
+      txn = txn, refuseNullKeys = refuseNullKeys)(_ => (delta, None))
+    MergeResult(r.filesRewritten, r.filesTotal, r.rowsUpdated, r.rowsInserted)
+  }
+
+  /** The FIXED ledger app id of dv-mode STATEMENTS (no caller-owned replay
+    * identity): each statement lands with version = the snapshot id it
+    * will create, so a completed statement's version is always below any
+    * later statement's and the ledger never falsely dedups live work.
     */
   private val StmtDvApp = "__stmt-dv"
 
@@ -1029,6 +1060,13 @@ object Layout {
       .digest(app.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .map("%02x".format(_)).mkString.take(12)
 
+  /** A CRASHED dv-mode STATEMENT's prefix-named files (landed, never
+    * committed) would trip `requireComplete` and block every later DML —
+    * with the fixed [[StmtDvApp]] id, any live `part-sink-<stmtTok>-` file
+    * the latest snapshot does not reference is such an orphan (a completed
+    * statement's files are referenced by its own atomic commit): delete
+    * them up front. Callers hold the table lock.
+    */
   private def cleanStmtOrphans(spark: SparkSession,
                                fs: org.apache.hadoop.fs.FileSystem,
                                path: String): Unit = {
@@ -1045,12 +1083,13 @@ object Layout {
   }
 
   /** Classify one (app, version) batch's prefix-named artifacts — the
-    * crash-recovery step a DV merge needs BEFORE `requireComplete` (an
-    * interrupted [[appendOnceDv]] leaves landed-but-uncommitted files the
-    * completeness check would refuse forever). Deletes UNREFERENCED live
-    * orphans (the retry simply redoes the batch); returns true when
-    * ADOPTION evidence exists — a trash-resident artifact, or a live one
-    * some retained snapshot references (only a FOREIGN incremental can
+    * crash-recovery step every txn write needs BEFORE `requireComplete`
+    * (an interrupted [[appendOnceDv]] leaves landed-but-uncommitted files
+    * the completeness check would refuse forever). ONE recursive listing;
+    * deletes UNREFERENCED live orphans (the retry simply redoes the batch)
+    * and returns true when ADOPTION evidence exists: a trash-resident
+    * artifact (only referenced files are ever retired there), or a live
+    * one some retained snapshot references (only a FOREIGN incremental can
     * have done that: the batch's own commit records the ledger atomically,
     * which the caller already checked).
     */
@@ -1076,299 +1115,107 @@ object Layout {
     false
   }
 
-  private def mergeKeyedDvTxn(spark: SparkSession, path: String, keyCol: String,
-                              delta0: org.apache.spark.sql.DataFrame,
-                              txn0: Option[(String, Long)],
-                              refuseNullKeys: Boolean = false): MergeResult = {
-    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-    FsMaint.withTableLock(fs, path) {
-      healDelete(spark, path)
-      FsMaint.recoverSwap(fs, path)
-      ensureMaterialized(spark, path)
-      // Replay dedup only for caller-owned identities; the statement-level
-      // identity (next snapshot id) is always above every recorded version.
-      txn0.foreach { case (app, v) =>
-        if (Manifest.txnVersion(spark, path, app).exists(_ >= v))
-          return MergeResult(-1, 0, 0L, 0L)
-        // A crash between appendOnceDv's landing renames and its commit
-        // leaves prefix-named orphans the requireComplete below would
-        // refuse FOREVER (the replay never reaches appendOnceDv's own
-        // triage): classify them NOW. Unreferenced orphans delete and the
-        // replay redoes the batch; adoption evidence fails typed — a
-        // foreign snapshot adopted the rows WITHOUT the vector, so
-        // recording the txn or proceeding would cement duplicate keys.
-        if (triageSinkBatch(spark, fs, path,
-            s"part-sink-${sinkAppToken(app)}-$v-"))
-          throw new IllegalStateException(
-            s"mergeKeyedDv($path): batch ($app, $v) crashed mid-landing and " +
-              "a FOREIGN snapshot adopted its appended rows without the " +
-              "deletion-vector half — the table may hold both old and new " +
-              "versions of the batch's keys; dedup (e.g. Layout.mergeKeyed " +
-              "after inspecting duplicates), then re-run")
-      }
-      val txn = txn0.getOrElse(StmtDvApp ->
-        (Manifest.latestSnapshotId(spark, path).getOrElse(0) + 1).toLong)
-      val (txnApp, txnVersion) = txn
-      if (txn0.isEmpty) cleanStmtOrphans(spark, fs, path)
-      val phys = physMapOf(spark, path)
-      val delta = toPhysicalDf(delta0, phys)
-      val keys = Manifest.currentKeyCols(spark, path).getOrElse(
-        throw new IllegalArgumentException(
-          s"mergeKeyedDvOnce($path) needs a manifest snapshot (Manifest.create) — " +
-            "per-file stats are what make the merge targeted"))
-      require(keys.contains(keyCol),
-        s"manifest has no stats for $keyCol (has: ${keys.mkString(", ")})")
-      Manifest.requireComplete(spark, path)
-      // Same fused delta stats + typed bounds as mergeKeyed (NULL-key
-      // presence rides the one job for the UPDATE rewrite's refusal).
-      val dStats = delta.groupBy(col(keyCol)).count()
-        .agg(coalesce(sum("count"), lit(0L)), count(lit(1)),
-             coalesce(sum(when(col(keyCol).isNull, col("count"))), lit(0L))).head
-      val nDelta = dStats.getLong(0)
-      val f = Manifest.files(spark, path)
-      val total = f.count().toInt
-      if (nDelta == 0) return MergeResult(0, total, 0L, 0L)
-      val maxKeys = spark.conf.get("graft.merge.maxSourceKeys", "10000000").toLong
-      if (nDelta > maxKeys)
-        throw new IllegalArgumentException(
-          s"mergeKeyedDv($path): the delta carries $nDelta rows — above " +
-            s"graft.merge.maxSourceKeys=$maxKeys (the delta keys broadcast); " +
-            "route table-sized reconciliation through the sync diff path")
-      if (refuseNullKeys && dStats.getLong(2) > 0)
-        throw new IllegalArgumentException(
-          s"UPDATE on $path matches ${dStats.getLong(2)} row(s) with a NULL " +
-            s"merge key `$keyCol` — a keyed upsert cannot replace them in " +
-            "place; route null-key rows through a rewrite instead")
-      require(dStats.getLong(1) == nDelta,
-        s"delta has duplicate $keyCol values — replace would be ambiguous")
-      val deltaKeys = delta.select(orderedLong(keyCol, delta).as("__k"))
-      val picked = f.join(broadcast(deltaKeys),
-          col("__k").between(col(s"min_$keyCol"), col(s"max_$keyCol")), "left_semi")
-        .select("file").collect().map(_.getString(0)).toIndexedSeq
-      var matched = 0L
-      var doomedCp: Option[org.apache.spark.sql.DataFrame] = None
-      try {
-        val dvCarry: Manifest.DvCarry =
-          if (picked.isEmpty) Manifest.DvInherit // pure insert — vector unchanged
-          else {
-            // Matched old versions become POSITIONS (DV-applied picked read:
-            // already-deleted rows never re-enter, entries stay unique).
-            // ONE scan of the picked files: (position, key) checkpoints
-            // matched-rows-sized, then both the uniqueness-checked counts
-            // and the sidecar entries derive from the checkpoint.
-            val pickedDf = readPickedPinned(spark, path, picked)
-            val kPicked = orderedLong(keyCol, pickedDf)
-            val doomedK = pickedDf
-              .join(broadcast(deltaKeys), kPicked === col("__k"), "left_semi")
-              .select(Manifest.dvFileName.as("file_name"),
-                col("_metadata.row_index").as("pos"), kPicked.as("__mk"))
-              .localCheckpoint(true)
-            doomedCp = Some(doomedK)
-            val mStats = doomedK.groupBy(col("__mk")).count()
-              .agg(coalesce(sum("count"), lit(0L)), count(lit(1))).head
-            matched = mStats.getLong(0)
-            require(matched == mStats.getLong(1),
-              s"mergeKeyedDv($path): $keyCol is not unique among matched " +
-                "rows — a keyed replace would silently keep duplicate-key " +
-                "siblings; dedup the table first")
-            val doomed = doomedK.drop("__mk")
-            if (matched == 0L) Manifest.DvInherit
-            // Delta-shaped: the commit grows the base's vector internally,
-            // so a rebase onto a concurrent winner composes both deletes.
-            else Manifest.DvDelta(doomed)
-          }
-        // Land the delta as appended files + the ONE atomic commit
-        // (stats + vector + txn). appendOnceDv re-enters the held lock.
-        appendOnceDv(spark, path, txnApp, txnVersion,
-          toLogicalDf(delta, phys), dvCarry): Unit
-        MergeResult(0, total, matched, nDelta - matched)
-      } finally doomedCp.foreach(Caching.release)
-    }
-  }
-
-  private def mergeKeyedTxn(spark: SparkSession, path: String, keyCol: String,
-                            delta0: org.apache.spark.sql.DataFrame,
-                            txn: Option[(String, Long)],
-                            refuseNullKeys: Boolean = false): MergeResult = {
-    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-    // Same whole-op serialization as deleteRange — see its lock comment.
-    FsMaint.withTableLock(fs, path) {
-    healDelete(spark, path)
-    FsMaint.recoverSwap(fs, path)
-    ensureMaterialized(spark, path)
-    // Replay dedup BEFORE any work: at-least-once addBatch delivery must
-    // be a no-op for an already-committed (app, version).
-    txn.foreach { case (app, v) =>
-      if (Manifest.txnVersion(spark, path, app).exists(_ >= v))
-        return MergeResult(-1, 0, 0L, 0L)
-    }
-    // Caller frames are LOGICAL-named; everything below (picked reads,
-    // survivors, the staged write) is physical. Key columns are never
-    // renameable, so key logic is name-space-agnostic.
-    val delta = toPhysicalDf(delta0, physMapOf(spark, path))
-    val keys = Manifest.currentKeyCols(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"mergeKeyed($path) needs a manifest snapshot (Manifest.create) — " +
-          "per-file stats are what make the merge targeted"))
-    require(keys.contains(keyCol),
-      s"manifest has no stats for $keyCol (has: ${keys.mkString(", ")})")
-    // completeness, not just existence — see deleteRange: a file appended
-    // after the snapshot could hold a matching key and yield a double-insert
-    Manifest.requireComplete(spark, path)
-    // ONE job over the delta for its size, key-distinctness, and (for the
-    // UPDATE rewrite) NULL-key presence (grouping keeps NULL as one group —
-    // same contract as distinct()).
-    val dStats = delta.groupBy(col(keyCol)).count()
-      .agg(coalesce(sum("count"), lit(0L)), count(lit(1)),
-           coalesce(sum(when(col(keyCol).isNull, col("count"))), lit(0L))).head
-    val nDelta = dStats.getLong(0)
-    val f = Manifest.files(spark, path)
-    val total = f.count().toInt
-    if (nDelta == 0) return MergeResult(0, total, 0L, 0L)
-    // Same typed broadcast bound as mergeRowLevel: the delta's key set
-    // broadcasts into the pick/match/anti joins below — a table-sized
-    // delta must fail with guidance, not OOM the broadcast.
-    val maxKeys = spark.conf.get("graft.merge.maxSourceKeys", "10000000").toLong
-    if (nDelta > maxKeys)
-      throw new IllegalArgumentException(
-        s"mergeKeyed($path): the delta carries $nDelta rows — above " +
-          s"graft.merge.maxSourceKeys=$maxKeys. The keyed merge broadcasts " +
-          "its delta keys (delta-sized by contract); for table-sized " +
-          "reconciliation use the sync engine's diff path " +
-          "(graft.sync.SyncEngine / Differ), which shuffles instead")
-    // SQL UPDATE only: a matched row with a NULL merge key cannot be
-    // REPLACED by the keyed upsert (NULL joins nothing — the original would
-    // survive AND the updated copy would append: silent duplication).
-    // Checked BEFORE the duplicate require: two matched NULL-key rows
-    // collapse into one group there and would report the misleading
-    // "duplicate values" error instead of this guidance.
-    if (refuseNullKeys && dStats.getLong(2) > 0)
-      throw new IllegalArgumentException(
-        s"UPDATE on $path matches ${dStats.getLong(2)} row(s) with a NULL " +
-          s"merge key `$keyCol` — a keyed upsert cannot replace them in " +
-          "place; route null-key rows through a rewrite instead")
-    require(dStats.getLong(1) == nDelta,
-      s"delta has duplicate $keyCol values — replace would be ambiguous")
-    // NULL delta keys are legitimate MERGE inserts (a NULL key matches no
-    // row, so the row lands as an insert and NULL-keyed table rows are
-    // never replaced) — but see [[graft.sources.GraftMergeIntoCommand]]:
-    // the UPDATE rewrite must refuse them (an updated null-key row would
-    // duplicate instead of replace).
-    val deltaKeys = delta.select(orderedLong(keyCol, delta).as("__k"))
-    val picked = f.join(broadcast(deltaKeys),
-        col("__k").between(col(s"min_$keyCol"), col(s"max_$keyCol")), "left_semi")
-      .select("file").collect().map(_.getString(0)).toIndexedSeq
-    val partitioned = isHivePartitioned(fs, path)
-    if (picked.isEmpty) {
-      // pure insert: no file can contain a matching key — plain append
-      // (routed into partition dirs for a hive layout), snapshot refreshed
-      // incrementally (only the appended files scanned). A TXN merge
-      // delegates to appendOnce (reentrant under this lock): its
-      // prefix-named files + crash triage are what make an interrupted
-      // append replay-safe, where a plain append + crash would leave
-      // orphans a later incremental adopts as duplicates.
-      txn match {
-        case Some((app, v)) =>
-          appendOnce(spark, path, app, v, toLogicalDf(delta, physMapOf(spark, path))): Unit
-          return MergeResult(0, total, 0L, nDelta)
-        case None => ()
-      }
-      if (partitioned) {
-        // headOption: the latest snapshot may hold ZERO file rows (a prior
-        // COW delete doomed every row) — fall back to the directory layout.
-        val pCols = f.select("file").limit(1).collect().headOption
-          .map(r => partitionColsFromRel(Manifest.relativeTo(path,
-            Manifest.decodePath(r.getString(0)))))
-          .getOrElse(partitionColsFromDirs(fs, path))
-        delta.write.mode("append").partitionBy(pCols: _*).parquet(path)
-      } else delta.write.mode("append").parquet(path)
-      Manifest.createIncremental(spark, path, keys: _*)
-      return MergeResult(0, total, 0L, nDelta)
-    }
-    val stage = path + (if (partitioned) PartStageSuffix else "__delnew")
-    FsMaint.deleteRecursively(fs, new Path(stage))
-    val pickedDf = readPickedPinned(spark, path, picked)
-    val kPicked = orderedLong(keyCol, pickedDf)
-    // The table must be key-unique over the matched keys (the sync engine's
-    // PK convention): replacing "all rows with key k" by ONE delta row
-    // would silently DELETE a duplicate's sibling. Verified on exactly the
-    // picked files — fused with the matched-row count into ONE scan
-    // (group matched rows by key: sum of group sizes = matched rows,
-    // group count = matched keys).
-    val mStats = pickedDf
-      .join(broadcast(deltaKeys), kPicked === col("__k"), "left_semi")
-      .groupBy(kPicked.as("__k")).count()
-      .agg(coalesce(sum("count"), lit(0L)), count(lit(1))).head
-    val matched = mStats.getLong(0)
-    val matchedKeys = mStats.getLong(1)
-    require(matched == matchedKeys,
-      s"mergeKeyed($path): $keyCol is not unique among matched rows " +
-        s"($matched rows match $matchedKeys keys) — a keyed replace would " +
-        "silently drop duplicate-key siblings; dedup the table first")
-    val survivors = pickedDf
-      .join(broadcast(deltaKeys), kPicked === col("__k"), "left_anti")
-      .unionByName(delta)
-    if (partitioned) {
-      survivors.write.partitionBy(partitionColsOf(path, picked): _*)
-        .mode("overwrite").parquet(stage)
-      commitReplacePartitioned(spark, fs, path, picked, stage, keys, txn): Unit
-    } else {
-      survivors.write.mode("overwrite").parquet(stage)
-      commitReplace(spark, fs, path, picked, stage, keys, txn): Unit
-    }
-    MergeResult(picked.length, total, matched, nDelta - matched)
-    }
-  }
-
   /** Result of a row-level (multi-clause) merge. */
   final case class MergeRowResult(filesRewritten: Int, filesTotal: Int,
                                   rowsUpdated: Long, rowsDeleted: Long,
                                   rowsInserted: Long)
 
-  /** Row-level MERGE transaction — the engine side of the general
-    * multi-clause `MERGE INTO` (conditional WHEN MATCHED UPDATE / DELETE,
-    * partial updates, conditional WHEN NOT MATCHED INSERT), on the same
-    * journaled COW commit as [[mergeKeyed]]. The CLAUSE SEMANTICS live in
-    * the caller's pure frame computation; this function owns everything
-    * stateful: the table lock, crash healing, manifest targeting (a file
-    * is read or rewritten only if SOME source key falls inside the
-    * [min, max] of the LEADING key column — files without matched keys
-    * never plan), verification, and the commit. The reference's
-    * keyed-delete semantic (TableConnection.php:367-387) reaches SQL
-    * through exactly this path (`WHEN MATCHED THEN DELETE`).
+  /** The keyed-mutation transaction — the one body behind the four keyed
+    * upserts ([[mergeKeyed]] & co.) and the general multi-clause SQL
+    * `MERGE INTO` (conditional WHEN MATCHED UPDATE / DELETE, partial
+    * updates, conditional WHEN NOT MATCHED INSERT): the reference's
+    * delete-the-slave-only-keys-then-insert step
+    * (Synchronizer.php:495-501) on the journaled COW commit, or on the
+    * deletion vector with `dvMode`. The CLAUSE SEMANTICS live in the
+    * caller's pure frame computation; this function owns everything
+    * stateful: the table lock, crash healing, replay dedup and orphan
+    * triage, manifest targeting (a file is read or rewritten only if SOME
+    * key falls inside the [min, max] of the LEADING stats-key column —
+    * files without matched keys never plan), verification, and the
+    * commit. The reference's keyed-delete semantic
+    * (TableConnection.php:367-387) reaches SQL through exactly this path
+    * (`WHEN MATCHED THEN DELETE`).
     *
     * Keys may be COMPOSITE (the reference's PK is a column list,
     * TableConnection.php:635-656; the sync core carries `Seq[String]`
     * keys end-to-end, Differ): row identity is the TUPLE of `keyCols`
-    * values; file targeting uses `keyCols.head`'s manifest stats (the
-    * leading column prunes exactly as a prefix index does — trailing
-    * columns refine identity, not targeting).
+    * values; file targeting uses the first stats-covered component (it
+    * prunes exactly as a prefix index does — the others refine identity,
+    * not targeting).
     *
     *   - `sourceKeys`: the source join keys as RAW-TYPED columns named
     *     exactly `keyCols`; rows with ANY NULL component are dropped here
-    *     (a NULL key matches no row, so it cannot pick files).
+    *     (a NULL key matches no row, so it cannot pick files). `None` =
+    *     the actions do not depend on the target rows (the keyed upsert):
+    *     compute runs first, over an empty target frame, and the upserts'
+    *     own keys target the files — the delta materializes ONCE.
     *   - `compute(picked)`: given the manifest-picked target rows (table
     *     schema, snapshot-pinned), returns `(upserts, deleteKeys)` — the
     *     full-schema rows to land (matched UPDATE results + NOT MATCHED
-    *     inserts) and a `keyCols`-schema frame of key tuples to drop
-    *     (matched DELETEs). Verified here: upsert keys unique (at most one
-    *     action row per key) and disjoint from the delete keys, and the
-    *     table key-unique over every affected key — the same ambiguity
-    *     guards [[mergeKeyed]] enforces.
+    *     inserts) and optionally a `keyCols`-schema frame of key tuples to
+    *     drop (matched DELETEs). Verified here: upsert keys unique (at most
+    *     one action row per key) and disjoint from the delete keys, and the
+    *     table key-unique over every affected key.
+    *   - `txn`: a caller-owned `(app, version)` ledger entry, published in
+    *     the same snapshot commit. A version at or below the app's
+    *     recorded one returns `filesRewritten = -1` before any work.
+    *   - `refuseNullKeys`: refuse NULL-key upserts (the SQL `UPDATE`: a
+    *     matched NULL-key row would survive AND its update append).
+    *   - `pickAll`: the WHEN NOT MATCHED BY SOURCE shape — compute reads
+    *     the whole table, the commit still narrows to affected files.
+    *
+    * When no file overlaps an affected key the upserts APPEND and nothing
+    * is rewritten: through [[appendOnceDv]]'s prefix-named files when a
+    * ledger entry lands (`txn`, or the dv-mode statement identity),
+    * otherwise as a plain append + incremental snapshot.
     */
   def mergeRowLevel(spark: SparkSession, path: String, keyCols: Seq[String],
-                    sourceKeys: org.apache.spark.sql.DataFrame,
+                    sourceKeys: Option[org.apache.spark.sql.DataFrame],
                     pickAll: Boolean = false,
-                    dvMode: Boolean = false)(
+                    dvMode: Boolean = false,
+                    txn: Option[(String, Long)] = None,
+                    refuseNullKeys: Boolean = false)(
       compute: org.apache.spark.sql.DataFrame =>
-        (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)): MergeRowResult = {
+        (org.apache.spark.sql.DataFrame, Option[org.apache.spark.sql.DataFrame])
+  ): MergeRowResult = {
     require(keyCols.nonEmpty, "mergeRowLevel needs at least one key column")
     val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+    // Same whole-op serialization as deleteRange — see its lock comment.
     FsMaint.withTableLock(fs, path) {
       healDelete(spark, path)
       FsMaint.recoverSwap(fs, path)
       ensureMaterialized(spark, path)
-      if (dvMode) cleanStmtOrphans(spark, fs, path)
+      txn.foreach { case (app, v) =>
+        // Replay dedup BEFORE any work: at-least-once delivery must be a
+        // no-op for an already-committed (app, version).
+        if (Manifest.txnVersion(spark, path, app).exists(_ >= v))
+          return MergeRowResult(-1, 0, 0L, 0L, 0L)
+        // A crash between a landing's renames and its commit leaves
+        // prefix-named orphans the requireComplete below would refuse
+        // FOREVER: classify them NOW. Unreferenced orphans delete and the
+        // replay redoes the batch. Adopted ones are harmless to a COW
+        // replay (the keyed replace re-merges them idempotently), but in
+        // dv mode a FOREIGN snapshot adopted the rows WITHOUT the vector:
+        // proceeding would cement duplicate keys.
+        if (triageSinkBatch(spark, fs, path,
+              s"part-sink-${sinkAppToken(app)}-$v-") && dvMode)
+          throw new IllegalStateException(
+            s"mergeRowLevel($path): batch ($app, $v) crashed mid-landing and " +
+              "a FOREIGN snapshot adopted its appended rows without the " +
+              "deletion-vector half — the table may hold both old and new " +
+              "versions of the batch's keys; dedup (e.g. Layout.mergeKeyed " +
+              "after inspecting duplicates), then re-run")
+      }
+      // The ledger entry a landing publishes: the caller's, or in dv mode
+      // the statement identity (whose crashed orphans clean first).
+      val landTxn = txn.orElse {
+        if (!dvMode) None
+        else {
+          cleanStmtOrphans(spark, fs, path)
+          Some(StmtDvApp ->
+            (Manifest.latestSnapshotId(spark, path).getOrElse(0) + 1).toLong)
+        }
+      }
       val keys = Manifest.currentKeyCols(spark, path).getOrElse(
         throw new IllegalArgumentException(
           s"mergeRowLevel($path) needs a manifest snapshot (Manifest.create) — " +
@@ -1380,6 +1227,8 @@ object Layout {
           s"manifest has stats for none of (${keyCols.mkString(", ")}) " +
             s"(has: ${keys.mkString(", ")}) — at least one merge-key " +
             "component must be a stats key, or every file would plan"))
+      // completeness, not just existence — see deleteRange: a file appended
+      // after the snapshot could hold a matching key and yield a double-insert
       Manifest.requireComplete(spark, path)
       val f = Manifest.files(spark, path)
       val total = f.count().toInt
@@ -1394,77 +1243,89 @@ object Layout {
       val phys = physMapOf(spark, path)
       val physKeyCols = keyCols.map(c => phys.getOrElse(c, c))
       val pkCols = physKeyCols.map(col)
-      def toPhysKeys(d: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-        d.select(keyCols.map(c => col(c).as(phys.getOrElse(c, c))): _*)
-      // Small by contract (delta-sized); materialized once for the pick
-      // join and the uniqueness checks below.
-      val sk = allNotNull(sourceKeys.select(kCols: _*))
-        .distinct().localCheckpoint(true)
       // The contract is TYPED, not hoped-for: the key set broadcasts (the
       // stats pick join and every identity join below), so a table-sized
-      // MERGE source must fail with guidance, not OOM the broadcast.
-      // Bound configurable per session (`graft.merge.maxSourceKeys`).
+      // source must fail with guidance, not OOM the broadcast. Bound
+      // configurable per session (`graft.merge.maxSourceKeys`).
       val maxKeys = spark.conf.get("graft.merge.maxSourceKeys", "10000000").toLong
-      val nSk = sk.count()
-      if (nSk > maxKeys)
-        throw new IllegalArgumentException(
-          s"mergeRowLevel($path): the MERGE source carries $nSk distinct " +
-            s"keys — above graft.merge.maxSourceKeys=$maxKeys. The keyed " +
-            "merge broadcasts its source key set (delta-sized by contract); " +
-            "for table-sized reconciliation use the sync engine's diff path " +
-            "(graft.sync.SyncEngine / Differ), which shuffles instead")
-      // `pickAll` = the WHEN NOT MATCHED BY SOURCE shape: un-matched target
-      // rows can live in ANY file, so the whole table plans — semantically
-      // required, not a lost optimization (callers keep the targeted pick
-      // whenever no BY SOURCE clause exists).
-      val picked =
-        (if (pickAll) f.select("file")
-         else f.join(broadcast(sk.select(orderedLong(keyCol, sk).as("__k"))),
-           col("__k").between(col(s"min_$keyCol"), col(s"max_$keyCol")), "left_semi")
-           .select("file"))
-        .collect().map(_.getString(0)).toIndexedSeq
-      val partitioned = isHivePartitioned(fs, path)
-      val pickedDf =
-        if (picked.nonEmpty) readPickedPinned(spark, path, picked)
-        else {
-          // No file can contain a matching key: matched clauses are vacuous,
-          // but compute still needs a (schema-correct, empty) picked frame
-          // for its joins.
-          val sch = Manifest.latestSnapshotId(spark, path)
-            .flatMap(id => Manifest.storedSchema(spark, path, id)
-              .map(Manifest.toPhysicalSchema(_, phys)))
-            .getOrElse(spark.read.parquet(path).schema)
-          spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), sch)
-        }
-      // compute speaks LOGICAL (it rebinds SQL expressions by column name);
-      // the COW machinery below speaks physical.
-      val (upserts0, delKeys0) = compute(toLogicalDf(pickedDf, phys))
-      val upserts = toPhysicalDf(upserts0, phys).localCheckpoint(true)
-      val delKeys = toPhysKeys(allNotNull(delKeys0.select(kCols: _*)))
-        .distinct().localCheckpoint(true)
-      // ONE fused validation pass over the tagged action union: its
-      // grouped per-key counts answer the upsert-key uniqueness check, the
-      // update/delete overlap check, and both action totals in a single
-      // grouped aggregate — where four separate per-statement jobs
-      // (upsert stats, overlap semi-join, delete count, and their
-      // broadcasts) used to run. NULL keys group as one, preserving the
-      // at-most-one-action-row-per-key contract exactly; the grouped
-      // frame is checkpointed once and reused as the affected-key set
-      // below (one row per key BY CONSTRUCTION).
-      val g = upserts.select(pkCols: _*).withColumn("__a", lit("u"))
-        .unionByName(delKeys.withColumn("__a", lit("d")))
-        .groupBy(pkCols: _*)
-        .agg(sum(when(col("__a") === "u", 1L).otherwise(0L)).as("__cu"),
-             sum(when(col("__a") === "d", 1L).otherwise(0L)).as("__cd"))
-        .localCheckpoint(true)
+      def bound(n: Long, what: String): Unit =
+        if (n > maxKeys)
+          throw new IllegalArgumentException(
+            s"mergeRowLevel($path): the merge carries $n $what — above " +
+              s"graft.merge.maxSourceKeys=$maxKeys. The keyed merge " +
+              "broadcasts its key set (delta-sized by contract); for " +
+              "table-sized reconciliation use the sync engine's diff path " +
+              "(graft.sync.SyncEngine / Differ), which shuffles instead")
+      def pick(keyDf: org.apache.spark.sql.DataFrame): IndexedSeq[String] =
+        f.join(broadcast(keyDf.select(orderedLong(keyCol, keyDf).as("__k"))),
+            col("__k").between(col(s"min_$keyCol"), col(s"max_$keyCol")), "left_semi")
+          .select("file").collect().map(_.getString(0)).toIndexedSeq
+      def emptyTarget: org.apache.spark.sql.DataFrame = {
+        // No target rows (no file can contain a matching key, or the keyed
+        // upsert reads none): compute still gets a schema-correct frame.
+        val sch = Manifest.latestSnapshotId(spark, path)
+          .flatMap(id => Manifest.storedSchema(spark, path, id)
+            .map(Manifest.toPhysicalSchema(_, phys)))
+          .getOrElse(spark.read.parquet(path).schema)
+        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), sch)
+      }
+      // Delta-sized frames materialize ONCE, lazily: the first job over
+      // each caches it, later broadcasts read the blocks (no extra job).
+      var materialized: List[org.apache.spark.sql.DataFrame] = Nil
+      def once(d: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+        val m = d.localCheckpoint(false)
+        materialized ::= m
+        m
+      }
       try {
-        val s = g.agg(
-          coalesce(sum("__cu"), lit(0L)),
-          coalesce(sum("__cd"), lit(0L)),
-          coalesce(sum(when(col("__cu") > 1, lit(1L))), lit(0L)),
-          coalesce(sum(when(col("__cu") > 0 && col("__cd") > 0, lit(1L))),
-            lit(0L))).head
+        // Targeting BEFORE compute when the actions read the target rows;
+        // `pickAll` = the BY SOURCE shape: un-matched target rows can live
+        // in ANY file, so the whole table plans — semantically required,
+        // not a lost optimization.
+        val (picked, pickedDf) = sourceKeys match {
+          case None => (IndexedSeq.empty[String], emptyTarget)
+          case Some(src) =>
+            val sk = once(allNotNull(src.select(kCols: _*)).distinct())
+            bound(sk.count(), "distinct source keys")
+            val p =
+              if (pickAll) f.select("file").collect().map(_.getString(0)).toIndexedSeq
+              else pick(sk)
+            (p, if (p.nonEmpty) readPickedPinned(spark, path, p) else emptyTarget)
+        }
+        // compute speaks LOGICAL (it rebinds SQL expressions by column
+        // name); the COW machinery below speaks physical.
+        val (upserts0, delKeys0) = compute(toLogicalDf(pickedDf, phys))
+        val upserts = once(toPhysicalDf(upserts0, phys))
+        val delKeys = delKeys0.map(d => once(allNotNull(d.select(kCols: _*))
+          .select(keyCols.map(c => col(c).as(phys.getOrElse(c, c))): _*).distinct()))
+        // ONE grouped pass over the tagged action union answers the keyed
+        // size bound, the NULL-key refusal, upsert-key uniqueness, the
+        // update/delete overlap, and both action totals. NULL keys group
+        // as one, preserving the at-most-one-action-row-per-key contract.
+        def tag(d: org.apache.spark.sql.DataFrame, a: String) =
+          d.select(pkCols :+ lit(a).as("__a"): _*)
+        val acts = delKeys.foldLeft(tag(upserts, "u"))((u, d) => u.unionByName(tag(d, "d")))
+        val s = acts.groupBy(pkCols: _*)
+          .agg(sum(when(col("__a") === "u", 1L).otherwise(0L)).as("__cu"),
+               sum(when(col("__a") === "d", 1L).otherwise(0L)).as("__cd"))
+          .agg(coalesce(sum("__cu"), lit(0L)),
+               coalesce(sum("__cd"), lit(0L)),
+               coalesce(sum(when(col("__cu") > 1, lit(1L))), lit(0L)),
+               coalesce(sum(when(col("__cu") > 0 && col("__cd") > 0, lit(1L))),
+                 lit(0L)),
+               coalesce(sum(when(pkCols.map(_.isNull).reduce(_ || _),
+                 col("__cu"))), lit(0L))).head
         val nUp = s.getLong(0)
+        val nDel = s.getLong(1)
+        if (sourceKeys.isEmpty) bound(nUp, "delta rows")
+        // Checked BEFORE the uniqueness require: two matched NULL-key rows
+        // collapse into one group there and would report the misleading
+        // "more than one action row" error instead of this guidance.
+        if (refuseNullKeys && s.getLong(4) > 0)
+          throw new IllegalArgumentException(
+            s"UPDATE on $path matches ${s.getLong(4)} row(s) with a NULL " +
+              s"merge key `$keyCol` — a keyed upsert cannot replace them in " +
+              "place; route null-key rows through a rewrite instead")
         require(s.getLong(2) == 0L,
           s"MERGE produced more than one action row for some " +
             s"(${keyCols.mkString(", ")}) — replace would be ambiguous")
@@ -1472,54 +1333,49 @@ object Layout {
           s"MERGE resolved some (${keyCols.mkString(", ")}) to BOTH an " +
             "update and a delete — clause conditions must pick one action " +
             "per matched row")
-        val nDel = s.getLong(1)
         if (nUp == 0 && nDel == 0) return MergeRowResult(0, total, 0L, 0L, 0L)
-        if (picked.isEmpty) {
-          // Pure insert (no file overlaps any source key; deletes can match
-          // nothing): plain append, incremental snapshot — same shape as
-          // mergeKeyed's insert fast path.
+        // Affected = keys whose target rows are replaced (updates) or
+        // dropped (deletes) — UNIQUE per key by the checks above, so the
+        // union itself is the tagged broadcast. NULL-component keys match
+        // no target row (and orderedLong targeting would null them out).
+        val tagged = acts.filter(pkCols.map(_.isNotNull).reduce(_ && _))
+        // The keyed upsert targets off its affected keys here; with
+        // `pickAll` the COMMIT narrows back to the files whose key range
+        // holds an affected key, so write amplification stays ∝ rows
+        // changed, not table size.
+        val (commitPicked, commitDf) =
+          if (sourceKeys.isDefined && !pickAll) (picked, pickedDf)
+          else {
+            val p = pick(tagged)
+            (p, if (p.nonEmpty) readPickedPinned(spark, path, p) else pickedDf)
+          }
+        if (commitPicked.isEmpty) {
+          // Pure insert: no file overlaps an affected key, deletes can
+          // match nothing — the upserts append, nothing is rewritten.
           if (nUp == 0) return MergeRowResult(0, total, 0L, 0L, 0L)
-          if (partitioned) {
-            val pCols = f.select("file").limit(1).collect().headOption
-              .map(r => partitionColsFromRel(Manifest.relativeTo(path,
-                Manifest.decodePath(r.getString(0)))))
-              .getOrElse(partitionColsFromDirs(fs, path))
-            upserts.write.mode("append").partitionBy(pCols: _*).parquet(path)
-          } else upserts.write.mode("append").parquet(path)
-          Manifest.createIncremental(spark, path, keys: _*)
+          landTxn match {
+            case Some((app, v)) =>
+              appendOnceDv(spark, path, app, v, toLogicalDf(upserts, phys),
+                Manifest.DvInherit): Unit
+            case None =>
+              writeInLayout(spark, fs, path, upserts, path, "append")
+              Manifest.createIncremental(spark, path, keys: _*)
+          }
           return MergeRowResult(0, total, 0L, 0L, nUp)
         }
-        // Affected = keys whose target rows are replaced (updates) or
-        // dropped (deletes) — disjoint by the check above and UNIQUE per
-        // key by construction (grouped), so one tagged broadcast serves
-        // the per-action counts AND the uniqueness guard. NULL-component
-        // keys are dropped: they match no target row (and orderedLong
-        // targeting would null them out anyway).
-        val tagged = g
-          .filter(physKeyCols.map(col(_).isNotNull).reduce(_ && _))
-          .select(pkCols :+
-            when(col("__cu") > 0, lit("u")).otherwise(lit("d")).as("__a"): _*)
-        // With `pickAll`, compute read the WHOLE table (BY SOURCE semantics
-        // require it) — but the COMMIT narrows back to the files whose key
-        // range contains an AFFECTED key, so write amplification stays
-        // ∝ rows changed, not table size.
-        val (commitPicked, commitDf) =
-          if (!pickAll) (picked, pickedDf)
-          else {
-            val affected = tagged
-              .select(orderedLong(keyCol, tagged).as("__k")).localCheckpoint(true)
-            try {
-              val p2 = f.join(broadcast(affected),
-                  col("__k").between(col(s"min_$keyCol"), col(s"max_$keyCol")),
-                  "left_semi")
-                .select("file").collect().map(_.getString(0)).toIndexedSeq
-              (p2, if (p2.nonEmpty) readPickedPinned(spark, path, p2)
-                   else pickedDf.limit(0))
-            } finally Caching.release(affected)
-          }
-        val mStats = commitDf.select(pkCols: _*)
-          .join(broadcast(tagged), physKeyCols)
-          .groupBy((pkCols :+ col("__a")): _*).count()
+        // The affected target rows, per action. dv mode also carries their
+        // (file name, position) — materialized BEFORE the join: the
+        // using-columns join inserts a Project, and `_metadata` does not
+        // survive projections — and keeps the frame for the sidecar.
+        val matched = {
+          val m = commitDf
+            .select(pkCols ++ (if (!dvMode) Nil else Seq(
+              Manifest.dvFileName.as("file_name"),
+              col("_metadata.row_index").as("pos"))): _*)
+            .join(broadcast(tagged), physKeyCols)
+          if (dvMode) once(m) else m
+        }
+        val mStats = matched.groupBy((pkCols :+ col("__a")): _*).count()
           .agg(coalesce(sum(when(col("__a") === "u", col("count"))), lit(0L)),
                coalesce(sum(when(col("__a") === "d", col("count"))), lit(0L)),
                coalesce(sum(when(col("count") > 1, lit(1))), lit(0L))).head
@@ -1529,68 +1385,45 @@ object Layout {
           s"mergeRowLevel($path): (${keyCols.mkString(", ")}) is not unique " +
             "among affected rows — a keyed replace/delete would silently " +
             "drop duplicate-key siblings; dedup the table first")
-        if (commitPicked.isEmpty) {
-          // pickAll narrowed to nothing: only out-of-range inserts (rare) —
-          // land them as a plain append instead of an empty replace.
-          if (nUp == 0) return MergeRowResult(0, total, 0L, 0L, 0L)
-          if (partitioned) {
-            val pCols = f.select("file").limit(1).collect().headOption
-              .map(r => partitionColsFromRel(Manifest.relativeTo(path,
-                Manifest.decodePath(r.getString(0)))))
-              .getOrElse(partitionColsFromDirs(fs, path))
-            upserts.write.mode("append").partitionBy(pCols: _*).parquet(path)
-          } else upserts.write.mode("append").parquet(path)
-          Manifest.createIncremental(spark, path, keys: _*)
-          return MergeRowResult(0, total, 0L, 0L, nUp)
-        }
         if (dvMode) {
           // MERGE-ON-READ commit: affected target rows become deletion-vector
           // POSITIONS (their replacements/inserts append), ZERO data files
-          // rewritten — the `graft.merge.mode=dv` shape for EVERY clause mix,
-          // including BY SOURCE (which must READ the whole table but now
-          // writes only the sidecar + appended rows).
-          // Materialize (file name, position) BEFORE the semi join: the
-          // using-columns join inserts a Project, and `_metadata` does not
-          // survive projections.
-          val doomed = commitDf
-            .select(pkCols :+ Manifest.dvFileName.as("file_name") :+
-              col("_metadata.row_index").as("pos"): _*)
-            .join(broadcast(tagged.select(pkCols: _*)), physKeyCols, "left_semi")
-            .select(col("file_name"), col("pos"))
-            .localCheckpoint(true)
-          try {
-            val latestNow = Manifest.latestSnapshotId(spark, path).get
-            if (nUp == 0)
-              // Pure delete: one metadata-only commit grows the vector by
-              // this statement's DELTA (an empty append would no-op
-              // without committing it).
-              Manifest.commitDv(spark, path, latestNow, doomed): Unit
-            else
-              // Same statement-level crash identity as mergeKeyedDv.
-              appendOnceDv(spark, path, StmtDvApp, (latestNow + 1).toLong,
-                toLogicalDf(upserts, phys), Manifest.DvDelta(doomed)): Unit
-            MergeRowResult(0, total, updated, deleted, nUp - updated)
-          } finally Caching.release(doomed)
+          // rewritten — for EVERY clause mix, including BY SOURCE (which
+          // must READ the whole table but writes only the sidecar + rows).
+          // Delta-shaped: the commit grows the base's vector internally, so
+          // a rebase onto a concurrent winner composes both deletes.
+          val dv =
+            if (updated + deleted == 0L) Manifest.DvInherit
+            else Manifest.DvDelta(matched.select("file_name", "pos"))
+          if (nUp == 0)
+            // Pure delete: one metadata-only commit (an empty append would
+            // no-op without committing the vector).
+            Manifest.commitDelta(spark, path, Manifest.latestSnapshotId(spark, path).get,
+              Set.empty, None, txn = txn, dv = dv): Unit
+          else {
+            val (app, v) = landTxn.get
+            // One atomic commit: appended stats + vector + ledger entry.
+            appendOnceDv(spark, path, app, v, toLogicalDf(upserts, phys), dv): Unit
+          }
+          MergeRowResult(0, total, updated, deleted, nUp - updated)
         } else {
           val survivors = commitDf
             .join(broadcast(tagged.select(pkCols: _*)), physKeyCols, "left_anti")
             .unionByName(upserts)
+          val partitioned = isHivePartitioned(fs, path)
           val stage = path + (if (partitioned) PartStageSuffix else "__delnew")
           FsMaint.deleteRecursively(fs, new Path(stage))
           if (partitioned) {
             survivors.write.partitionBy(partitionColsOf(path, commitPicked): _*)
               .mode("overwrite").parquet(stage)
-            commitReplacePartitioned(spark, fs, path, commitPicked, stage, keys): Unit
+            commitReplacePartitioned(spark, fs, path, commitPicked, stage, keys, txn): Unit
           } else {
             survivors.write.mode("overwrite").parquet(stage)
-            commitReplace(spark, fs, path, commitPicked, stage, keys): Unit
+            commitReplace(spark, fs, path, commitPicked, stage, keys, txn): Unit
           }
           MergeRowResult(commitPicked.length, total, updated, deleted, nUp - updated)
         }
-      } finally {
-        Caching.release(g); Caching.release(upserts)
-        Caching.release(delKeys); Caching.release(sk)
-      }
+      } finally materialized.foreach(Caching.release)
     }
   }
 
@@ -1755,10 +1588,7 @@ object Layout {
       val pCols =
         if (!partitioned) Nil
         else if (pickedEarly.nonEmpty) partitionColsOf(path, pickedEarly)
-        else f.select("file").limit(1).collect().headOption
-          .map(r => partitionColsFromRel(Manifest.relativeTo(path,
-            Manifest.decodePath(r.getString(0)))))
-          .getOrElse(partitionColsFromDirs(fs, path))
+        else tablePartitionCols(spark, fs, path)
       def stageWrite(df: org.apache.spark.sql.DataFrame): Unit =
         if (partitioned)
           df.write.partitionBy(pCols: _*).mode("append").parquet(stage)
@@ -1852,8 +1682,8 @@ object Layout {
 
   /** APPEND `data` to a manifested table — the engine-side `INSERT INTO`:
     * rows land as ordinary appended files (routed into `k=v/` dirs for a
-    * hive layout, with partition columns recovered like [[mergeKeyed]]'s
-    * pure-insert path), then the snapshot is refreshed INCREMENTALLY (only
+    * hive layout, [[writeInLayout]] — as [[mergeRowLevel]]'s pure inserts
+    * land), then the snapshot is refreshed INCREMENTALLY (only
     * the appended files are scanned — cost ∝ the insert, never the table).
     * Serialized against COW/rewrite swaps by the table lock: an append
     * racing a swap window could land rows in a dir mid-rename. Returns the
@@ -1891,14 +1721,7 @@ object Layout {
       // Appended files must carry the table's PHYSICAL column names (one
       // physical schema per table — the rename invariant).
       val physData = toPhysicalDf(data, physMapOf(spark, path))
-      if (isHivePartitioned(fs, path)) {
-        val f = Manifest.files(spark, path)
-        val pCols = f.select("file").limit(1).collect().headOption
-          .map(r => partitionColsFromRel(Manifest.relativeTo(path,
-            Manifest.decodePath(r.getString(0)))))
-          .getOrElse(partitionColsFromDirs(fs, path))
-        physData.write.mode("append").partitionBy(pCols: _*).parquet(path)
-      } else physData.write.mode("append").parquet(path)
+      writeInLayout(spark, fs, path, physData, path, "append")
       Manifest.createIncremental(spark, path, keys: _*)
       snapshotRows() - rowsBefore
     }
@@ -2041,8 +1864,8 @@ object Layout {
     appendOnceDv(spark, path, txnApp, txnVersion, data, Manifest.DvInherit)
 
   /** [[appendOnce]] with an explicit deletion-vector carry for its single
-    * snapshot commit — the merge-on-read upsert's landing step
-    * ([[mergeKeyedDvOnce]]): appended rows + grown vector + txn entry,
+    * snapshot commit — [[mergeRowLevel]]'s landing step (its pure inserts,
+    * and every dv-mode upsert): appended rows + grown vector + txn entry,
     * one atomic publish.
     */
   private[ops] def appendOnceDv(spark: SparkSession, path: String,
@@ -2069,43 +1892,12 @@ object Layout {
       val adoptedLatest = Manifest.files(spark, path).select("file")
         .filter(col("file").contains(prefix))
         .limit(1).collect().nonEmpty
-      if (adoptedLatest) {
+      // Otherwise crash triage: a crashed attempt's unreferenced orphans
+      // delete (the batch is redone below); adoption evidence means the
+      // rows are already in the table — record the txn, skip.
+      if (adoptedLatest || triageSinkBatch(spark, fs, path, prefix)) {
         Manifest.recordTxn(spark, path, txnApp, txnVersion): Unit
         return 0L
-      }
-      // Crash triage: classify every artifact of this (app, version) by
-      // WHERE it sits. ONE recursive listing (same order as the incremental
-      // snapshot's own listing below).
-      //  - Under _graft_trash: only REFERENCED files are ever retired there,
-      //    so a trash-resident artifact proves the batch was adopted by a
-      //    foreign snapshot and later rewritten — record the txn, skip.
-      //  - Live (non-hidden dirs): could be an adopted file a snapshot still
-      //    references (NEVER delete — verify against ALL retained snapshots,
-      //    a rare crash-retry-only job) or a true orphan (delete, redo).
-      val artifacts = FsMaint.listRelative(fs, new Path(path))(st =>
-        st.getPath.getName.startsWith(prefix))
-      val (hidden, live) = artifacts.partition { case (rel, _) =>
-        rel.split('/').exists(s => s.startsWith("_") || s.startsWith(".")) }
-      if (hidden.exists(_._1.startsWith("_graft_trash/"))) {
-        Manifest.recordTxn(spark, path, txnApp, txnVersion): Unit
-        return 0L
-      }
-      if (live.nonEmpty) {
-        val snapDirs = Manifest.snapshotIds(spark, path)
-        val referencedAnywhere = snapDirs.nonEmpty && {
-          import org.apache.spark.sql.types.{StringType, StructField, StructType}
-          spark.read
-            .schema(StructType(Seq(StructField("file", StringType))))
-            .parquet(snapDirs.map(id =>
-              s"$path/_graft_manifest/snapshot-$id"): _*)
-            .filter(col("file").contains(prefix))
-            .limit(1).collect().nonEmpty
-        }
-        if (referencedAnywhere) {
-          Manifest.recordTxn(spark, path, txnApp, txnVersion): Unit
-          return 0L
-        }
-        live.foreach { case (_, st) => fs.delete(st.getPath, false): Unit }
       }
       val latest = Manifest.latestSnapshotId(spark, path).get
       Manifest.storedSchema(spark, path, latest)
@@ -2113,14 +1905,7 @@ object Layout {
       val stage = path + "__sinkstage"
       FsMaint.deleteRecursively(fs, new Path(stage))
       val physData = toPhysicalDf(data, physMapOf(spark, path))
-      if (isHivePartitioned(fs, path)) {
-        val f = Manifest.files(spark, path)
-        val pCols = f.select("file").limit(1).collect().headOption
-          .map(r => partitionColsFromRel(Manifest.relativeTo(path,
-            Manifest.decodePath(r.getString(0)))))
-          .getOrElse(partitionColsFromDirs(fs, path))
-        physData.write.mode("overwrite").partitionBy(pCols: _*).parquet(stage)
-      } else physData.write.mode("overwrite").parquet(stage)
+      writeInLayout(spark, fs, path, physData, stage, "overwrite")
       val staged = FsMaint.listRelative(fs, new Path(stage))(st =>
         st.getPath.getName.startsWith("part-") && st.getLen > 0)
       // A 0-row batch still writes a schema-only part file (length > 0) —

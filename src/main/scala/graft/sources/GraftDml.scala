@@ -41,8 +41,10 @@ private[sources] object StatDomain {
   *   - `DELETE FROM graft.`/t` WHERE <range on a stats key>` →
   *     [[Layout.deleteRange]] (manifest-targeted COW — untouched files are
   *     carried by metadata rename, never decoded or planned)
-  *   - `MERGE INTO graft.`/t`` → [[Layout.mergeKeyed]] via the extension
-  *     rule ([[GraftMergeRule]], installed by [[graft.GraftExtensions]])
+  *   - `MERGE INTO graft.`/t`` / `UPDATE` → [[Layout.mergeRowLevel]] (the
+  *     whole-row upsert through its keyed form [[Layout.mergeKeyed]]) via
+  *     the extension rule ([[GraftMergeRule]], installed by
+  *     [[graft.GraftExtensions]])
   *
   * DELETE translation contract: every conjunct must constrain ONE
   * stats-covered key column to a contiguous range (the shape the manifest

@@ -130,10 +130,11 @@ final class DefaultSource extends RelationProvider with DataSourceRegister
           s"Update with option(\"mergeKey\") (exactly-once keyed upserts); " +
           s"got $other")
     }
-    // Upsert WRITE PATH: `cow` (default) rewrites the matched files per
-    // batch (mergeKeyedOnce); `dv` is merge-on-read — matched positions
-    // land on the deletion-vector sidecar and the batch appends, ZERO data
-    // files rewritten per trigger (mergeKeyedDvOnce). With minute-level
+    // Upsert WRITE PATH (both Layout.mergeRowLevel transactions): `cow`
+    // (default) rewrites the matched files per batch (mergeKeyedOnce);
+    // `dv` is merge-on-read — matched positions land on the deletion-vector
+    // sidecar and the batch appends, ZERO data files rewritten per trigger
+    // (mergeKeyedDvOnce). With minute-level
     // triggers COW pays file-size × touched-files amplification per batch;
     // dv defers that to the FOLD, policy-triggered every
     // `compactDeletesEvery` batches (0 = only via CALL compact_deletes).
@@ -164,11 +165,13 @@ final class DefaultSource extends RelationProvider with DataSourceRegister
 
 /** See [[DefaultSource.createSink]]. Append mode lands each micro-batch
   * via [[graft.ops.Layout.appendOnce]]; Update mode (with `mergeKey`)
-  * routes it through [[graft.ops.Layout.mergeKeyedOnce]] — the keyed COW
-  * upsert under the SAME writer-transaction ledger, so updates, inserts,
-  * and replayed batches are all exactly-once across restarts and
-  * compaction. The natural upstream is an aggregation in update mode
-  * (one row per changed key per trigger) or a CDC-style deduped feed.
+  * routes it through [[graft.ops.Layout.mergeKeyedOnce]] (or
+  * [[graft.ops.Layout.mergeKeyedDvOnce]] under `mergeMode=dv`) — the keyed
+  * upsert under the SAME writer-transaction ledger, published in the
+  * merge's own snapshot commit, so updates, inserts, and replayed batches
+  * are all exactly-once across restarts, crashes and compaction. The
+  * natural upstream is an aggregation in update mode (one row per changed
+  * key per trigger) or a CDC-style deduped feed.
   */
 private[sources] final class GraftStreamSink(
     spark: org.apache.spark.sql.SparkSession, path: String, txnApp: String,

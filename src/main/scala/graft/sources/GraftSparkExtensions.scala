@@ -13,22 +13,24 @@ import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** SQL `MERGE INTO` and `UPDATE` for `graft.`-catalog tables — the
-  * statement surface of [[Layout.mergeKeyed]]'s manifest-targeted
-  * copy-on-write upsert. Spark only executes these against tables
-  * implementing full row-level-operation plumbing; this extension instead
-  * rewrites the analyzed [[MergeIntoTable]] / [[UpdateTable]] into a
-  * command that calls the engine's own COW machinery — keeping its scale
-  * contract (a file is rewritten only if some delta key falls inside its
-  * [min, max]; pure inserts append; untouched files are never planned)
-  * that a generic group-based rewrite would forfeit.
+  * statement surface of [[Layout.mergeRowLevel]], the engine's one
+  * manifest-targeted keyed-mutation transaction (copy-on-write, or
+  * deletion vector under `graft.merge.mode=dv`). Spark only executes
+  * these against tables implementing full row-level-operation plumbing;
+  * this extension instead rewrites the analyzed [[MergeIntoTable]] /
+  * [[UpdateTable]] into a command that calls the engine's own machinery —
+  * keeping its scale contract (a file is rewritten only if some delta key
+  * falls inside its [min, max]; pure inserts append; untouched files are
+  * never planned) that a generic group-based rewrite would forfeit.
   *
   * Enabled by [[graft.GraftExtensions]] at session build:
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` (analyzer
   * rules cannot attach to a live session).
   *
-  * The canonical whole-row upsert compiles to [[Layout.mergeKeyed]]'s one
-  * fused delta job (the reference's REPLACE-style delete-then-insert,
-  * Synchronizer.php:496-507):
+  * The canonical whole-row upsert compiles to [[Layout.mergeKeyed]], the
+  * keyed form of that transaction whose delta is the whole action set —
+  * no matched-pair join (the reference's REPLACE-style
+  * delete-then-insert, Synchronizer.php:496-507):
   * {{{
   * MERGE INTO graft.`/t` t USING src s ON t.k = s.k
   *   WHEN MATCHED THEN UPDATE SET *
@@ -201,10 +203,11 @@ final case class GraftMergeRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   /** The original single-shape rewrite — one unconditional whole-row
     * UPDATE + one unconditional whole-row INSERT that agree column-wise —
-    * kept as a FAST PATH: it compiles to [[Layout.mergeKeyed]]'s one fused
-    * delta job with no matched-pair join at all. Any shape it cannot
-    * express (conditions, DELETE, partial updates, multiple clauses,
-    * branch disagreement) returns None and routes to the general
+    * kept as a FAST PATH: it compiles to [[Layout.mergeKeyed]], whose
+    * delta (materialized once) is the action set, with no matched-pair
+    * join at all. Any shape it cannot express (conditions, DELETE,
+    * partial updates, multiple clauses, branch disagreement) returns None
+    * and routes to the general
     * row-level rewrite instead of failing.
     */
   private def wholeRowFastPath(m: MergeIntoTable, r: DataSourceV2Relation,
@@ -338,11 +341,6 @@ final case class GraftMergeRule(spark: SparkSession) extends Rule[LogicalPlan] {
   }
 }
 
-/** The executed half of the MERGE rewrite: materializes the source query as
-  * the delta frame and hands it to [[Layout.mergeKeyed]] (journaled COW
-  * commit, manifest-targeted file picking, history retention — identical to
-  * the Scala API call). Returns the merge outcome as the statement result.
-  */
 /** The executed side of a dynamic partition overwrite: stage the query's
   * rows, read the touched `k=v/` partitions off the staged layout, and
   * commit delete+insert atomically ([[Layout.overwriteWhere]]).
@@ -364,6 +362,29 @@ final case class GraftDynamicOverwriteCommand(path: String, query: LogicalPlan)
   }
 }
 
+/** `graft.merge.mode`, parsed once for every MERGE/UPDATE command: `cow`
+  * (the default) rewrites matched files; `dv` is merge-on-read — matched
+  * positions land on the deletion-vector sidecar and the action rows
+  * append, zero data files rewritten (fold via CALL
+  * graft.system.compact_deletes). True for `dv`.
+  */
+private[sources] object GraftMergeMode {
+  def dv(session: SparkSession): Boolean =
+    session.conf.get("graft.merge.mode", "cow").trim.toLowerCase match {
+      case "cow" => false
+      case "dv" => true
+      case other => throw new IllegalArgumentException(
+        s"graft.merge.mode must be `cow` (copy-on-write) or `dv` " +
+          s"(merge-on-read deletion vector), got `$other`")
+    }
+}
+
+/** The executed half of the whole-row MERGE / UPDATE rewrite: hands the
+  * query as the delta frame to [[Layout.mergeKeyed]] (or
+  * [[Layout.mergeKeyedDv]] under [[GraftMergeMode]]) — journaled commit,
+  * manifest-targeted file picking, history retention, identical to the
+  * Scala API call. Returns the merge outcome as the statement result.
+  */
 final case class GraftMergeIntoCommand(path: String, keyCol: String,
                                        query: LogicalPlan,
                                        refuseNullKeys: Boolean = false)
@@ -380,20 +401,13 @@ final case class GraftMergeIntoCommand(path: String, keyCol: String,
   override def run(session: SparkSession): Seq[Row] = {
     val delta = ColumnShim.ofRows(session, query)
     // refuseNullKeys (UPDATE only): a matched NULL-key row cannot be
-    // replaced by the keyed upsert — mergeKeyed verifies it inside its
-    // fused delta aggregation (no extra job). MERGE keeps NULL-key source
+    // replaced by the keyed upsert — the merge verifies it inside its one
+    // grouped action pass (no extra job). MERGE keeps NULL-key source
     // rows: legitimate "not matched" inserts under SQL MERGE semantics.
-    // Write path per `graft.merge.mode`: `cow` (default) rewrites matched
-    // files; `dv` is merge-on-read — matched positions land on the
-    // deletion-vector sidecar and the whole delta appends, zero data
-    // files rewritten (fold via CALL graft.system.compact_deletes).
-    val res = session.conf.get("graft.merge.mode", "cow").trim.toLowerCase match {
-      case "cow" => Layout.mergeKeyed(session, path, keyCol, delta, refuseNullKeys)
-      case "dv" => Layout.mergeKeyedDv(session, path, keyCol, delta, refuseNullKeys)
-      case other => throw new IllegalArgumentException(
-        s"graft.merge.mode must be `cow` (copy-on-write) or `dv` " +
-          s"(merge-on-read deletion vector), got `$other`")
-    }
+    val res =
+      if (GraftMergeMode.dv(session))
+        Layout.mergeKeyedDv(session, path, keyCol, delta, refuseNullKeys)
+      else Layout.mergeKeyed(session, path, keyCol, delta, refuseNullKeys)
     Seq(Row(res.filesRewritten, res.filesTotal, res.rowsUpdated, res.rowsInserted))
   }
 }
@@ -442,6 +456,7 @@ final case class GraftMergeRowCommand(
 
   override def run(session: SparkSession): Seq[Row] = {
     import org.apache.spark.sql.functions._
+    val dvMode = GraftMergeMode.dv(session)
     val srcDf = ColumnShim.ofRows(session, source).localCheckpoint(true)
     var acted: List[org.apache.spark.sql.DataFrame] = Nil
     try {
@@ -449,15 +464,7 @@ final case class GraftMergeRowCommand(
       // composite-key contract; raw-typed — identity, not stat domain).
       val sourceKeys = srcDf.select(keyPairs.map { case (tk, sk) =>
         ColumnShim.column(sk).as(tk.name) }: _*)
-      // Same write-path conf as the whole-row shape: `dv` commits affected
-      // rows as deletion-vector positions + appended action rows.
-      val dvMode = session.conf.get("graft.merge.mode", "cow").trim.toLowerCase match {
-        case "cow" => false
-        case "dv" => true
-        case other => throw new IllegalArgumentException(
-          s"graft.merge.mode must be `cow` or `dv`, got `$other`")
-      }
-      val res = Layout.mergeRowLevel(session, path, keyCols, sourceKeys,
+      val res = Layout.mergeRowLevel(session, path, keyCols, Some(sourceKeys),
         pickAll = bySource.nonEmpty, dvMode = dvMode) { picked =>
         val pickedAttrs = picked.queryExecution.analyzed.output
           .map(a => a.name -> (a: Attribute)).toMap
@@ -510,8 +517,8 @@ final case class GraftMergeRowCommand(
           df.select(keyPairs.map(p => c(bind(p._1.exprId)).as(p._1.name)): _*)
         val delIdx = matched.zipWithIndex.collect { case ((_, None), i) => i }
         val delKeys =
-          if (delIdx.isEmpty) keyTupleOf(picked).limit(0)
-          else keyTupleOf(pairs.filter(col("__action").isin(delIdx: _*)))
+          if (delIdx.isEmpty) None
+          else Some(keyTupleOf(pairs.filter(col("__action").isin(delIdx: _*))))
         // NOT MATCHED = source rows with no matching target row among the
         // picked files (non-picked files cannot contain a matching key, by
         // the manifest's range targeting).
@@ -572,7 +579,7 @@ final case class GraftMergeRowCommand(
           .getOrElse(session.createDataFrame(new java.util.ArrayList[Row](),
             org.apache.spark.sql.types.StructType(targetOutput.map(a =>
               org.apache.spark.sql.types.StructField(a.name, a.dataType, a.nullable)))))
-        (upserts, bsDel.fold(delKeys)(delKeys.unionByName(_)))
+        (upserts, (delKeys ++ bsDel).reduceOption(_.unionByName(_)))
       }
       Seq(Row(res.filesRewritten, res.filesTotal, res.rowsUpdated,
         res.rowsDeleted, res.rowsInserted))

@@ -277,6 +277,44 @@ class GraftStreamSinkSpec extends SparkSpec {
     assert(fp(spark.read.parquet(dir)) == fp(expected))
   }
 
+  test("mergeKeyedOnce crash window: a pure-insert batch's landed-but-uncommitted files heal on replay") {
+    val dir = tmpDir("gsink_mkc") + "/docs"
+    val docs = spark.read.parquet(s"$sf001/documents.parquet")
+    docs.filter(col("doc_id") < 100).repartition(2).write.parquet(dir)
+    Manifest.create(spark, dir, "doc_id")
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val delta = docs.filter(col("doc_id").between(90, 119))
+      .withColumn("source", lit("upsert"))
+    assert(Layout.mergeKeyedOnce(spark, dir, "doc_id", "mkc", 1L, delta)
+      .rowsUpdated == 10L)
+    // CRASH WINDOW: batch 2 is a pure insert, so it lands prefix-named
+    // files through appendOnce — here one landed and the commit never
+    // happened. Its rows (existing keys 0..2) must not leak into the table.
+    val scratch = tmpDir("gsink_mkc_scratch")
+    docs.filter(col("doc_id") < 3).repartition(1)
+      .write.mode("overwrite").parquet(scratch)
+    val part = fs.listStatus(new org.apache.hadoop.fs.Path(scratch))
+      .filter(s => s.getPath.getName.startsWith("part-")).head.getPath
+    val orphan = new org.apache.hadoop.fs.Path(dir,
+      s"part-sink-${appTok("mkc")}-2-99.parquet")
+    org.apache.hadoop.fs.FileUtil.copy(fs, part, fs, orphan, false,
+      spark.sessionState.newHadoopConf())
+    // The replay triages the orphan BEFORE the completeness check (which
+    // would otherwise refuse every retry) and lands the batch exactly once.
+    val ins = docs.filter(col("doc_id") < 10)
+      .withColumn("doc_id", col("doc_id") + 1000000L)
+    val r = Layout.mergeKeyedOnce(spark, dir, "doc_id", "mkc", 2L, ins)
+    assert(r.filesRewritten == 0 && r.rowsInserted == 10L, s"$r")
+    assert(!fs.exists(orphan), "the crashed batch's orphan is healed")
+    assert(Manifest.txnVersion(spark, dir, "mkc").contains(2L))
+    assert(Layout.mergeKeyedOnce(spark, dir, "doc_id", "mkc", 2L, ins)
+      .filesRewritten == -1, "the healed batch dedups on a later replay")
+    assert(fp(spark.read.parquet(dir)) == fp(docs.filter(col("doc_id") < 90)
+      .unionByName(delta).unionByName(ins)),
+      "replay after the crash lands the batch exactly once, no orphan rows")
+  }
+
   test("mergeKeyedDvOnce: zero rewrites, atomic DV+append+ledger, replay dedup, fold composes") {
     val dir = tmpDir("gsink_mdv") + "/docs"
     val docs = spark.read.parquet(s"$sf001/documents.parquet")

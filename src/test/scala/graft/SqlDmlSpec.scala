@@ -126,11 +126,24 @@ class SqlDmlSpec extends SparkSpec {
     // The fold returns clean parquet with identical content.
     assert(Layout.compactDeletes(spark, dir) > 0)
     assert(fp(spark.read.parquet(dir)) == expected)
-    // Bogus mode refused typed.
+    // Bogus mode refused typed — by the whole-row and the general
+    // row-level command alike, with one message naming both modes.
+    import spark.implicits._
+    Seq(3L).toDF("doc_id").createOrReplaceTempView("dml_bogus_src")
     spark.sql("SET graft.merge.mode=diagonal")
-    try intercept[Exception] {
-      spark.sql(s"UPDATE graft.`$dir` SET source = 'x' WHERE doc_id < 5")
-    } finally spark.sql("SET graft.merge.mode=cow")
+    val (eUpd, eRow) = try (
+      intercept[Exception] {
+        spark.sql(s"UPDATE graft.`$dir` SET source = 'x' WHERE doc_id < 5")
+      },
+      intercept[Exception] {
+        spark.sql(
+          s"""MERGE INTO graft.`$dir` t USING dml_bogus_src s ON t.doc_id = s.doc_id
+             |WHEN MATCHED THEN DELETE""".stripMargin)
+      }) finally spark.sql("SET graft.merge.mode=cow")
+    for (e <- Seq(eUpd, eRow))
+      assert(e.getMessage.contains("`cow`") && e.getMessage.contains("`dv`") &&
+        e.getMessage.contains("diagonal"), e.getMessage)
+    assert(eUpd.getMessage == eRow.getMessage)
   }
 
   test("general row-level MERGE under graft.merge.mode=dv: BY SOURCE sync at zero rewrites") {
