@@ -1,9 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, Project}
 import org.apache.spark.sql.functions.{array, coalesce, col, count, exists, lit, max, min, udf, when}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -34,11 +32,13 @@ import org.apache.spark.util.sketch.BloomFilter
   *     probe: a sketch miss there refutes only one disjunct.
   *
   * The stats predicate and the bloom probe are one filter over the snapshot
-  * frame, so planning stays a distributed job (rows ∝ file count; sketch
-  * bytes never reach the driver) and only the picked rows are collected,
-  * under [[Manifest.maxPlannedFiles]]. A snapshot the metadata cache holds
-  * as driver-local rows is filtered in place by the same resolved
-  * predicate.
+  * frame, answered through [[Manifest.plannedRows]] under
+  * [[Manifest.maxPlannedFiles]]: a snapshot the metadata cache holds is
+  * filtered on the driver by the same resolved predicate, with no job (the
+  * common case — a statement's snapshot is cached); an uncached one is
+  * filtered by a distributed job (rows ∝ file count; sketch bytes never
+  * reach the driver) and only the picked rows are collected. The file
+  * counts and key bounds are answered the same way.
   */
 private[graft] object FilePlanner {
 
@@ -80,8 +80,16 @@ private[graft] object FilePlanner {
     * file; None when every file's stats are NULL (all-null column).
     */
   def bounds(snap: DataFrame, c: String): Option[(Long, Long)] = {
-    val r = snap.agg(min(col(s"`min_$c`")), max(col(s"`max_$c`"))).head()
-    if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1)))
+    val mn = col(s"`min_$c`"); val mx = col(s"`max_$c`")
+    Manifest.driverRows(snap.select(mn, mx)) match {
+      case Some(rows) =>
+        val (mins, maxs) = (rows.filterNot(_.isNullAt(0)), rows.filterNot(_.isNullAt(1)))
+        if (mins.isEmpty) None
+        else Some((mins.map(_.getLong(0)).min, maxs.map(_.getLong(1)).max))
+      case None =>
+        val r = snap.agg(min(mn), max(mx)).head()
+        if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1)))
+    }
   }
 
   /** The picked rows: `file` and then `cols`. */
@@ -90,23 +98,13 @@ private[graft] object FilePlanner {
     val keep = t.range.getOrElse(lit(true))
     val picked =
       snap.filter(t.bloom.fold(keep)(keep && _)).select(col("file") +: cols: _*)
-    val rows = picked.queryExecution.analyzed match {
-      // A driver-local snapshot (the metadata cache's rows): evaluate the
-      // same resolved predicate where the rows already are — optimizing and
-      // planning a nested query costs more than the filter itself.
-      case Project(list, Filter(cond, local: LocalRelation)) =>
-        val p = Predicate.createInterpreted(
-          BindReferences.bindReference(cond, local.output))
-        val project = new InterpretedProjection(list, local.output)
-        val toRow = CatalystTypeConverters.createToScalaConverter(picked.schema)
-        Manifest.capped(local.data.filter(p.eval).map(r =>
-          toRow(project(r)).asInstanceOf[Row]).toIndexedSeq, table, what)
-      case _ => Manifest.plannedRows(picked, table, what)
-    }
-    new Plan(rows, () => {
-      val r = snap.agg(count(lit(1)), count(when(keep, 1))).head()
-      (r.getLong(0).toInt, r.getLong(1).toInt)
-    })
+    new Plan(Manifest.plannedRows(picked, table, what), () =>
+      Manifest.driverRows(snap.select(keep)) match {
+        case Some(rows) => (rows.length, rows.count(r => !r.isNullAt(0) && r.getBoolean(0)))
+        case None =>
+          val r = snap.agg(count(lit(1)), count(when(keep, 1))).head()
+          (r.getLong(0).toInt, r.getLong(1).toInt)
+      })
   }
 
   /** `c BETWEEN lo AND hi` over the key's normalized long domain. */

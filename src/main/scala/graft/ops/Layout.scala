@@ -559,9 +559,9 @@ object Layout {
       Manifest.requireComplete(spark, path)
       val names = dv.select("file_name").distinct()
         .collect().map(_.getString(0)).toSet
-      val picked = Manifest.files(spark, path).select("file").collect()
+      val picked = Manifest.metaRows(Manifest.files(spark, path).select("file"))
         .map(_.getString(0))
-        .filter(e => names(Manifest.decodePath(e).getName)).toIndexedSeq
+        .filter(e => names(Manifest.decodePath(e).getName))
       if (picked.isEmpty) return 0 // stale entries reference no live file
       // readPickedPinned applies the vector — the staged survivors ARE the
       // fold.
@@ -674,7 +674,7 @@ object Layout {
   private def tablePartitionCols(spark: SparkSession,
                                  fs: org.apache.hadoop.fs.FileSystem,
                                  path: String): Seq[String] =
-    Manifest.files(spark, path).select("file").limit(1).collect().headOption
+    Manifest.metaRows(Manifest.files(spark, path).select("file").limit(1)).headOption
       .map(r => partitionColsOf(path, Seq(r.getString(0))))
       .getOrElse(partitionColsFromDirs(fs, path))
 
@@ -801,7 +801,7 @@ object Layout {
     if (!fs.rename(jtmp, journal))
       throw new java.io.IOException(s"cow journal commit failed: $journal")
     movePartitionedCommit(fs, path, stage, doomed, staged)
-    val addedPaths = staged.map(r => s"$path/$r")
+    val addedPaths = staged.map(r => new Path(path, r))
     val id = Manifest.commitReplaced(spark, path, keys, picked.toSet,
       addedPaths, txn, dv)
     fs.delete(journal, false)
@@ -882,7 +882,7 @@ object Layout {
     if (fs.exists(mOld) && !fs.exists(mNew)) { fs.rename(mOld, mNew): Unit }
     // earlier mutations' retained history crosses the swap the same way
     carryTrash(fs, old, path)
-    val addedPaths = stagedFiles.map(n => s"$path/$n")
+    val addedPaths = stagedFiles.map(n => new Path(path, n))
     val id = Manifest.commitReplaced(spark, path, keys, picked.toSet,
       addedPaths, txn, dv)
     // 7. RETAIN the replaced originals: move them into the hidden trash
@@ -1071,9 +1071,9 @@ object Layout {
                                fs: org.apache.hadoop.fs.FileSystem,
                                path: String): Unit = {
     val prefix = s"part-sink-${sinkAppToken(StmtDvApp)}-"
-    val referenced = Manifest.files(spark, path).select("file")
-      .filter(col("file").contains(prefix))
-      .collect().map(r => Manifest.decodePath(r.getString(0)).getName).toSet
+    val referenced = Manifest.metaRows(Manifest.files(spark, path).select("file")
+      .filter(col("file").contains(prefix)))
+      .map(r => Manifest.decodePath(r.getString(0)).getName).toSet
     FsMaint.listRelative(fs, new Path(path))(st =>
       st.getPath.getName.startsWith(prefix)).foreach { case (rel, st) =>
       if (!rel.split('/').exists(s => s.startsWith("_") || s.startsWith(".")) &&
@@ -1231,7 +1231,7 @@ object Layout {
       // after the snapshot could hold a matching key and yield a double-insert
       Manifest.requireComplete(spark, path)
       val f = Manifest.files(spark, path)
-      val total = f.count().toInt
+      val total = Manifest.metaCount(f).toInt
       val kCols = keyCols.map(col)
       def allNotNull(d: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
         d.filter(keyCols.map(col(_).isNotNull).reduce(_ && _))
@@ -1288,7 +1288,8 @@ object Layout {
             val sk = once(allNotNull(src.select(kCols: _*)).distinct())
             bound(sk.count(), "distinct source keys")
             val p =
-              if (pickAll) f.select("file").collect().map(_.getString(0)).toIndexedSeq
+              if (pickAll) Manifest.plannedRows(f.select("file"), path, "mergeRowLevel")
+                .map(_.getString(0))
               else pick(sk)
             (p, if (p.nonEmpty) readPickedPinned(spark, path, p) else emptyTarget)
         }
@@ -1456,7 +1457,7 @@ object Layout {
         org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
           .escapePathName(value)
       val f = Manifest.files(spark, path)
-      val total = f.count().toInt
+      val total = Manifest.metaCount(f).toInt
       // The segment match runs WHERE THE ROWS LIVE (a Dataset filter over
       // the snapshot frame) — the driver receives only the PICKED
       // partition's rows, never the table's file list (the same
@@ -1551,7 +1552,7 @@ object Layout {
         .foreach(old => Manifest.mergeAdditive(old, data0.schema): Unit)
       val data = toPhysicalDf(data0, physMapOf(spark, path))
       val f = Manifest.files(spark, path)
-      val total = f.count().toInt
+      val total = Manifest.metaCount(f).toInt
       val partitioned = isHivePartitioned(fs, path)
       // Targeting: the files whose rows the overwrite dooms. The DYNAMIC
       // shape is decided AFTER staging (its partitions are read off the
@@ -1564,7 +1565,7 @@ object Layout {
               "(use a plain INSERT OVERWRITE)")
           IndexedSeq.empty
         case OverwriteAll =>
-          f.select("file").collect().map(_.getString(0)).toIndexedSeq
+          Manifest.plannedRows(f.select("file"), path, "overwriteWhere").map(_.getString(0))
         case OverwritePartition(partCol, value) =>
           val seg = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
             .escapePathName(partCol) + "=" +
@@ -1710,10 +1711,7 @@ object Layout {
       Manifest.storedSchema(spark, path, latest)
         .foreach(old => Manifest.mergeAdditive(old, data.schema): Unit)
       if (data.isEmpty) return 0L
-      def snapshotRows(): Long =
-        Manifest.files(spark, path)
-          .agg(coalesce(sum("n_rows"), lit(0L))).head().getLong(0)
-      val rowsBefore = snapshotRows()
+      val rowsBefore = Manifest.snapshotRowCount(spark, path)
       // ONE execution of the incoming query (the write); the appended row
       // count comes from the snapshot's METADATA diff — exact even for
       // non-deterministic sources, where a separate count() would run the
@@ -1723,7 +1721,7 @@ object Layout {
       val physData = toPhysicalDf(data, physMapOf(spark, path))
       writeInLayout(spark, fs, path, physData, path, "append")
       Manifest.createIncremental(spark, path, keys: _*)
-      snapshotRows() - rowsBefore
+      Manifest.snapshotRowCount(spark, path) - rowsBefore
     }
   }
 
@@ -1889,9 +1887,8 @@ object Layout {
       val prefix = s"part-sink-${sinkAppToken(txnApp)}-$txnVersion-"
       // Foreign-adoption fast path: files of THIS batch referenced by the
       // latest snapshot (metadata-sized filtered collect).
-      val adoptedLatest = Manifest.files(spark, path).select("file")
-        .filter(col("file").contains(prefix))
-        .limit(1).collect().nonEmpty
+      val adoptedLatest = Manifest.metaRows(Manifest.files(spark, path).select("file")
+        .filter(col("file").contains(prefix)).limit(1)).nonEmpty
       // Otherwise crash triage: a crashed attempt's unreferenced orphans
       // delete (the batch is redone below); adoption evidence means the
       // rows are already in the table — record the txn, skip.
@@ -1927,13 +1924,10 @@ object Layout {
           throw new java.io.IOException(s"appendOnce: failed to land $dest")
       }
       FsMaint.deleteRecursively(fs, new Path(stage))
-      def snapshotRows(): Long =
-        Manifest.files(spark, path)
-          .agg(coalesce(sum("n_rows"), lit(0L))).head().getLong(0)
-      val rowsBefore = snapshotRows()
+      val rowsBefore = Manifest.snapshotRowCount(spark, path)
       Manifest.createIncrementalDv(spark, path,
         Some(txnApp -> txnVersion), dv, keys: _*): Unit
-      snapshotRows() - rowsBefore
+      Manifest.snapshotRowCount(spark, path) - rowsBefore
     }
   }
 

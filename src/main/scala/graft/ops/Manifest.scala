@@ -1,13 +1,19 @@
 package graft.ops
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, IntegerLiteral, InterpretedProjection, Literal, Predicate}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, GlobalLimit, LocalLimit, LocalRelation, LogicalPlan, Project, SubqueryAlias, Union}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.ColumnShim
+import org.apache.spark.sql.graftshim.{ColumnShim, DriverParquet, FooterSchema, FooterStats}
 import org.apache.spark.sql.types._
 import org.apache.spark.util.sketch.BloomFilter
+
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** Minimal manifest/snapshot layer over a parquet dir — the missing step
   * between [[Layout]]'s clustering and actual FILE-level skipping: vanilla
@@ -86,14 +92,79 @@ object Manifest {
     */
   private[graft] var maxPlannedFiles: Int = 10000000
 
-  /** Collect a per-file frame under the [[maxPlannedFiles]] cap —
-    * pruning/filtering stays a distributed job; only the FINAL rows land on
-    * the driver, and an over-cap plan fails typed with the recovery
-    * (compact) in the message.
+  /** The rows of a per-file frame under the [[maxPlannedFiles]] cap:
+    * evaluated on the driver when they are already there ([[driverRows]]),
+    * else collected — the filtering stays a distributed job and only the
+    * FINAL rows land on the driver. An over-cap plan fails typed with the
+    * recovery (compact) in the message.
     */
-  private[ops] def plannedRows(df: DataFrame, table: String,
-                               what: String): IndexedSeq[org.apache.spark.sql.Row] =
-    capped(df.limit(maxPlannedFiles + 1).collect().toIndexedSeq, table, what)
+  private[graft] def plannedRows(df: DataFrame, table: String,
+                                 what: String): IndexedSeq[Row] =
+    capped(metaRows(df.limit(maxPlannedFiles + 1)), table, what)
+
+  /** The rows of a METADATA frame, answered where they already are: a
+    * projection, filter or union over driver-local relations (a snapshot
+    * the cache holds, the footer stats of new files) is evaluated right
+    * here — no Spark job, and no query planning, which over a few dozen
+    * rows costs more than the evaluation. None for any other plan (an
+    * uncached snapshot, a join): the caller runs its Spark query. Every
+    * metadata question asked of a snapshot frame goes through here
+    * ([[plannedRows]], [[metaCount]], the planner's counts and bounds, the
+    * statements' row sums) — a Spark action over a snapshot frame pays a
+    * job the driver did not need.
+    */
+  private[graft] def driverRows(df: DataFrame): Option[IndexedSeq[Row]] =
+    localRows(df).map(rows => externalRows(df.schema, rows))
+
+  /** The rows of a metadata frame — [[driverRows]] when it can, else
+    * collected.
+    */
+  private[graft] def metaRows(df: DataFrame): IndexedSeq[Row] =
+    driverRows(df).getOrElse(df.collect().toIndexedSeq)
+
+  /** The row count of a metadata frame — [[driverRows]] when it can, else a
+    * Spark count.
+    */
+  private[graft] def metaCount(df: DataFrame): Long =
+    localRows(df).fold(df.count())(_.length.toLong)
+
+  /** Σ `n_rows` over the latest snapshot: the physical rows its files hold. */
+  private[graft] def snapshotRowCount(spark: SparkSession, table: String): Long = {
+    val n = files(spark, table).select(coalesce(col("n_rows"), lit(0L)).as("n"))
+    driverRows(n).fold(n.agg(coalesce(sum("n"), lit(0L))).head().getLong(0))(_.map(_.getLong(0)).sum)
+  }
+
+  private def externalRows(schema: StructType, rows: IndexedSeq[InternalRow]): IndexedSeq[Row] = {
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    rows.map(toRow(_).asInstanceOf[Row])
+  }
+
+  private def localRows(df: DataFrame): Option[IndexedSeq[InternalRow]] = {
+    def eval(plan: LogicalPlan): Option[IndexedSeq[InternalRow]] = plan match {
+      case local: LocalRelation => Some(local.data.toIndexedSeq)
+      case p if !p.expressions.forall(_.deterministic) => None
+      case SubqueryAlias(_, child) => eval(child)
+      case GlobalLimit(IntegerLiteral(n), child) => eval(child).map(_.take(n))
+      case LocalLimit(IntegerLiteral(n), child) => eval(child).map(_.take(n))
+      case Project(list, child) => eval(child).map { rows =>
+        val project = new InterpretedProjection(list, child.output)
+        rows.map(project(_))
+      }
+      case Filter(cond, child) => eval(child).map { rows =>
+        val p = Predicate.createInterpreted(BindReferences.bindReference(cond, child.output))
+        rows.filter(p.eval)
+      }
+      case u: Union if !u.byName && !u.allowMissingCol =>
+        val parts = u.children.map(eval)
+        if (parts.forall(_.isDefined)) Some(parts.flatMap(_.get).toIndexedSeq) else None
+      case _ => None
+    }
+    // Runtime-replaceable expressions evaluate through their replacements,
+    // as the optimizer would run them; anything the interpreter cannot
+    // evaluate falls back to the Spark query.
+    try eval(ReplaceExpressions(df.queryExecution.analyzed))
+    catch { case NonFatal(_) => None }
+  }
 
   /** Planned rows past [[maxPlannedFiles]] fail typed. */
   private[ops] def capped[T](rows: IndexedSeq[T], table: String,
@@ -147,7 +218,10 @@ object Manifest {
     * [[snapCacheEntryMaxBytes]] are served DISTRIBUTED and uncached — a
     * 100-TB table's manifest stays a Spark-side frame; the cache absorbs
     * only metadata-sized snapshots (the same tiering as Delta's driver
-    * log cache vs its checkpoint reads).
+    * log cache vs its checkpoint reads). Entries come from a snapshot's
+    * second read ([[snapSeen]]) or are written through by the delta commit
+    * that published it ([[commitSnapshot]]), whose rows are already on the
+    * driver.
     */
   private final case class SnapEntry(sig: String, bytes: Long,
                                      schema: StructType,
@@ -180,7 +254,10 @@ object Manifest {
 
   /** The snapshot's stat frame — cached driver-side when metadata-sized
     * (see [[SnapEntry]]); identical error shape to the direct read when
-    * the dir is missing (expired/never existed).
+    * the dir is missing (expired/never existed). Entries are admitted on a
+    * snapshot's second read, or written through by the commit that
+    * published it ([[commitSnapshot]]). The uncached read takes its schema
+    * from the snapshot's footer ([[FooterSchema]]): no inference job.
     */
   private[graft] def snapshotDF(spark: SparkSession, table: String,
                                 id: Int): DataFrame = {
@@ -191,12 +268,8 @@ object Manifest {
       catch { case _: java.io.FileNotFoundException =>
         return spark.read.parquet(dir) // uncached error shape (PATH_NOT_FOUND)
       }
-    val sig = sts.map(s => s"${s.getPath.getName}|${s.getLen}|${s.getModificationTime}")
-      .sorted.mkString("\n")
-    val dataBytes = sts.filter { s =>
-      val n = s.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }.map(_.getLen).sum
+    val sig = signatureOf(sts)
+    val dataBytes = dataBytesOf(sts)
     def localDF(e: SnapEntry): DataFrame =
       spark.createDataFrame(java.util.Arrays.asList(e.rows: _*), e.schema)
     snapCache.synchronized {
@@ -208,7 +281,7 @@ object Manifest {
         snapCache.remove(dir)
       }
     }
-    val df = spark.read.parquet(dir)
+    val df = FooterSchema.of(spark, dir).fold(spark.read)(spark.read.schema).parquet(dir)
     val seenBefore = snapCache.synchronized {
       val prev = snapSeen.put(dir, sig)
       prev == sig
@@ -223,20 +296,38 @@ object Manifest {
       // uncached.
       if (memBytes > snapCacheTotalBytes) return df
       val entry = SnapEntry(sig, memBytes, df.schema, rows)
-      snapCache.synchronized {
-        snapCache.remove(dir)
-        snapCache.put(dir, entry)
-        var total = 0L
-        snapCache.values().forEach(e => total += e.bytes)
-        val it = snapCache.entrySet().iterator()
-        while (total > snapCacheTotalBytes && it.hasNext) {
-          val e = it.next()
-          if (e.getKey != dir) { total -= e.getValue.bytes; it.remove() }
-        }
-      }
+      admit(dir, entry)
       localDF(entry)
     }
   }
+
+  /** The parquet payload bytes of a snapshot dir's listing. */
+  private def dataBytesOf(sts: Array[FileStatus]): Long =
+    sts.filter { s =>
+      val n = s.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }.map(_.getLen).sum
+
+  /** A snapshot dir's listing signature: every name|length|mtime under it. */
+  private def signatureOf(sts: Array[FileStatus]): String =
+    sts.map(s => s"${s.getPath.getName}|${s.getLen}|${s.getModificationTime}")
+      .sorted.mkString("\n")
+
+  /** Hold `entry` for `dir`, evicting least-recently-used entries past the
+    * total budget (never the one just inserted).
+    */
+  private def admit(dir: String, entry: SnapEntry): Unit =
+    snapCache.synchronized {
+      snapCache.remove(dir)
+      snapCache.put(dir, entry)
+      var total = 0L
+      snapCache.values().forEach(e => total += e.bytes)
+      val it = snapCache.entrySet().iterator()
+      while (total > snapCacheTotalBytes && it.hasNext) {
+        val e = it.next()
+        if (e.getKey != dir) { total -= e.getValue.bytes; it.remove() }
+      }
+    }
 
   /** Test seam: number of collected entries currently held. */
   private[graft] def snapshotCacheSize: Int =
@@ -248,25 +339,27 @@ object Manifest {
 
   /** Sum of `n_rows` over snapshot `id`'s entries for exactly `paths` —
     * the staged-rewrite row count a COW commit already computed in its
-    * stats scan, so callers never pay a second read pass over the staged
+    * stats, so callers never pay a second read pass over the staged
     * files to learn it. Path identity is the scheme-less absolute form
-    * (snapshot entries are URL-encoded `input_file_name` strings). A path
+    * (snapshot entries are URL-encoded `input_file_name` strings, decoded
+    * here; `paths` are filesystem paths, taken as they are). A path
     * the snapshot does not describe is legitimate only when it holds no
     * rows (an empty stage still writes one schema-only file, which the
-    * stats scan never sees); one holding rows would silently lower the sum
+    * stats never see); one holding rows would silently lower the sum
     * — and inflate every count derived from it — so it fails typed.
     */
   private[graft] def rowsOfFiles(spark: SparkSession, table: String, id: Int,
-                                 paths: Seq[String]): Long = {
+                                 paths: Seq[Path]): Long = {
     if (paths.isEmpty) return 0L
-    def norm(p: String) = decodePath(p).toUri.getPath
-    val want = paths.map(norm).toSet
-    val matched = snapshotDF(spark, table, id).select("file", "n_rows").collect()
-      .map(r => norm(r.getString(0)) -> r.getLong(1)).filter(e => want(e._1))
+    val want = paths.map(_.toUri.getPath).toSet
+    val matched = plannedRows(snapshotDF(spark, table, id).select("file", "n_rows"),
+        table, "staged row count")
+      .map(r => decodePath(r.getString(0)).toUri.getPath -> r.getLong(1))
+      .filter(e => want(e._1))
     val seen = matched.map(_._1).toSet
-    val unmatched = paths.filterNot(p => seen(norm(p)))
+    val unmatched = paths.filterNot(p => seen(p.toUri.getPath))
     if (unmatched.nonEmpty &&
-        spark.read.parquet(unmatched.map(escapeGlob): _*).count() > 0)
+        spark.read.parquet(unmatched.map(globLiteral): _*).count() > 0)
       throw new IllegalStateException(
         s"snapshot-$id under $table has no entry for ${unmatched.length} " +
           s"staged file(s) holding rows (${unmatched.mkString(", ")}) — " +
@@ -349,8 +442,14 @@ object Manifest {
     * URL-encoded form, then escape every metacharacter, so the collected
     * paths are read EXACTLY as listed.
     */
-  private[ops] def escapeGlob(p: String): String =
-    decodePath(p).toString.replaceAll("([\\[\\]{}*?\\\\])", "\\\\$1")
+  private[ops] def escapeGlob(p: String): String = globLiteral(decodePath(p))
+
+  /** A filesystem path as a `spark.read` argument that reads exactly it:
+    * every glob metacharacter escaped (see [[escapeGlob]] for manifest
+    * entries, which are URL-encoded and decoded first).
+    */
+  private[ops] def globLiteral(p: Path): String =
+    p.toString.replaceAll("([\\[\\]{}*?\\\\])", "\\\\$1")
 
   /** Fail fast (typed) if any picked file no longer exists — one
     * `listStatus` per distinct parent dir, never a per-file probe, so the
@@ -526,14 +625,16 @@ object Manifest {
     // mergeSchema: a full create is the one path that already touches every
     // file, so pay the footer merge and record the UNION schema — a
     // footer-sampled schema of a mixed-schema (evolved) table would pin
-    // whichever file Spark sampled.
-    val data = spark.read.option("mergeSchema", "true").parquet(table)
+    // whichever file Spark sampled. A flat table's footers answer both the
+    // schema and the stats on the driver.
+    lazy val data = spark.read.option("mergeSchema", "true").parquet(table)
+    val ft = fromFooters(spark, FooterStats.flatFiles(spark, table), keyCols, Nil)
     // Footers carry PHYSICAL names; the recorded schema is LOGICAL — remap
     // through the inherited rename map so a full re-profile never reverts
     // a renamed column.
     val phys = if (based > 0) physicalNames(spark, table, based) else Map.empty[String, String]
-    commitSnapshot(spark, table, statsOf(data, keyCols),
-      Some(toLogicalSchema(data.schema, phys)),
+    commitSnapshot(spark, table, ft.stats.getOrElse(statsOf(data, keyCols)),
+      Some(toLogicalSchema(ft.schema.getOrElse(data.schema), phys)),
       basedOn = Some(based), txn = txn)
   }
 
@@ -623,7 +724,7 @@ object Manifest {
     * bits ≈ 8 MB — a per-file sketch past that should be a dictionary, not
     * a bloom).
     */
-  private final case class BloomSpec(col: String, estItems: Long, numBits: Long)
+  private[graft] final case class BloomSpec(col: String, estItems: Long, numBits: Long)
 
   private def boundedBloom(estItems: Long, numBits: Long): (Long, Long) =
     (math.min(math.max(1L, estItems), 4000000L),
@@ -642,8 +743,12 @@ object Manifest {
       .toAggregateExpression())
   }
 
-  /** The per-file stats frame for a data frame (type-guarded). */
-  private def statsOf(data: DataFrame, keyCols: Seq[String],
+  /** The per-file stats frame for a data frame (type-guarded): one
+    * aggregate job over the data. Stats of files a commit just wrote come
+    * from their footers instead ([[fromFooters]]); this is the fallback
+    * wherever a footer cannot answer, and the path for bloom sketches.
+    */
+  private[graft] def statsOf(data: DataFrame, keyCols: Seq[String],
                       blooms: Seq[BloomSpec] = Nil): DataFrame = {
     val schema = data.schema
     keyCols.foreach { c =>
@@ -669,6 +774,36 @@ object Manifest {
       first(col("_metadata.file_size")).as("n_bytes")
     data.groupBy(input_file_name().as("file"))
       .agg(aggs.head, aggs.drop(1): _*)
+  }
+
+  /** What the footers of a set of data files answer on the driver, with no
+    * Spark job: their [[statsOf]] rows as a driver-local frame, and their
+    * read schema when they all share one. `stats` is None wherever a footer
+    * cannot answer exactly (see [[FooterStats]]), and always with bloom
+    * columns; `schema` is None when the files' schemas differ. Callers fall
+    * back to the Spark read and aggregate for what is None. `files` None =
+    * nothing to read (the caller's listing could not pin the file set).
+    */
+  private final case class Footers(stats: Option[DataFrame], schema: Option[StructType])
+
+  private def fromFooters(spark: SparkSession, files: Option[Seq[FileStatus]],
+                          keyCols: Seq[String], blooms: Seq[BloomSpec]): Footers =
+    files.flatMap(FooterStats.read(spark, _)).fold(Footers(None, None)) { footers =>
+      val stats = if (blooms.nonEmpty) None else FooterStats.rows(footers, keyCols)
+      Footers(stats.map { case (schema, rows) => spark.createDataFrame(rows.asJava, schema) },
+        FooterStats.commonSchema(footers))
+    }
+
+  /** The statuses of the data files `paths` (one listing per parent dir);
+    * None when one of them is not there.
+    */
+  private def statusesOf(fs: org.apache.hadoop.fs.FileSystem,
+                         paths: Seq[Path]): Option[Seq[FileStatus]] = {
+    val listed = paths.map(_.getParent).distinct.flatMap(d =>
+      try fs.listStatus(d).toSeq catch { case _: java.io.FileNotFoundException => Nil })
+      .map(st => st.getPath.toUri.getPath -> st).toMap
+    val sts = paths.map(p => listed.get(fs.makeQualified(p).toUri.getPath))
+    if (sts.forall(_.isDefined)) Some(sts.flatten) else None
   }
 
   /** Write `stats` as the next snapshot and commit it with one rename.
@@ -720,6 +855,15 @@ object Manifest {
     * or fail) on the same Hadoop-FS primitives as the rest of the layer.
     * A claim whose writer crashed before its rename (claim present, dir
     * absent, older than [[claimLeaseMs]]) is healed in passing.
+    *
+    * Stats the driver already holds ([[driverRows]]: a cached base's
+    * carried rows plus footer stats of the added files) are written right
+    * here, one parquet file through Spark's own writer ([[DriverParquet]]),
+    * no job; with `writeThrough` (the delta commits a statement makes) the
+    * published snapshot then seeds the cache, since the next statement reads
+    * it dozens of times. Full re-profiles stay on the second-read admission.
+    * Stats past the per-entry cache budget, or computed by a Spark
+    * aggregate, are written by a Spark job.
     */
   private def commitSnapshot(spark: SparkSession, table: String,
                              stats: DataFrame,
@@ -727,11 +871,20 @@ object Manifest {
                              basedOn: Option[Int] = None,
                              txn: Option[(String, Long)] = None,
                              physical: Option[Map[String, String]] = None,
-                             dv: DvCarry = DvInherit): Int = {
+                             dv: DvCarry = DvInherit,
+                             writeThrough: Boolean = false): Int = {
     val fs = fsOf(spark, table)
     val tmp = s"${root(table)}/commit-" +
       s"${java.util.UUID.randomUUID().toString.take(12)}__tmp"
-    stats.coalesce(1).write.mode("overwrite").parquet(tmp)
+    val held = localRows(stats).flatMap { rows =>
+      val external = externalRows(stats.schema, rows).toArray
+      val heapBytes = org.apache.spark.util.SizeEstimator.estimate(external)
+      if (heapBytes > snapCacheEntryMaxBytes) None else Some((rows, external, heapBytes))
+    }
+    held match {
+      case Some((rows, _, _)) => DriverParquet.write(spark, tmp, stats.schema, rows.iterator)
+      case None => stats.coalesce(1).write.mode("overwrite").parquet(tmp)
+    }
     dataSchema.foreach { sch =>
       val out = fs.create(new Path(tmp, "_schema.json"), true)
       try out.write(sch.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -751,16 +904,25 @@ object Manifest {
     //     `_dv/`-dir migration): surviving entries merge into ONE segment
     //     (empty ⇒ vector cleared) — O(live) is paid at the fold, by
     //     design.
-    def stagedNames: DataFrame = spark.read.parquet(tmp)
-      .select(element_at(split(col("file"), "/"), -1).as("file_name"))
-    // Does the staged snapshot DROP any of the base's files? (limit-1
-    // anti-join over two metadata-sized stats frames; only consulted when
-    // the base carries a vector)
-    def dropsFiles(b: Int): Boolean =
-      snapshotDF(spark, table, b)
-        .select(element_at(split(col("file"), "/"), -1).as("file_name"))
-        .join(stagedNames, Seq("file_name"), "left_anti")
-        .limit(1).count() > 0
+    def fileNames(snap: DataFrame): DataFrame =
+      snap.select(element_at(split(col("file"), "/"), -1).as("file_name"))
+    def stagedNames: DataFrame = fileNames(
+      if (held.isDefined) stats
+      else FooterSchema.of(spark, tmp).fold(spark.read)(spark.read.schema).parquet(tmp))
+    // Does the staged snapshot DROP any of the base's files? (a set
+    // difference of two metadata-sized name lists — on the driver when both
+    // are there, else a limit-1 anti-join; only consulted when the base
+    // carries a vector)
+    def dropsFiles(b: Int): Boolean = {
+      val base = fileNames(snapshotDF(spark, table, b))
+      (driverRows(base), driverRows(stagedNames)) match {
+        case (Some(baseRows), Some(stagedRows)) =>
+          val staged = stagedRows.map(_.getString(0)).toSet
+          baseRows.exists(r => !staged(r.getString(0)))
+        case _ =>
+          base.join(stagedNames, Seq("file_name"), "left_anti").limit(1).count() > 0
+      }
+    }
     def survivors(b: Int): DataFrame =
       dvEntries(spark, table, b).get
         .join(stagedNames, Seq("file_name"), "left_semi")
@@ -903,6 +1065,15 @@ object Manifest {
     if (!fs.rename(new Path(tmp), new Path(dest))) {
       fs.delete(cp, false)
       throw new java.io.IOException(s"manifest commit failed: $dest")
+    }
+    // Write-through: the rows just published, under the committed dir's
+    // signature and the schema a read of it reports.
+    if (writeThrough) held.foreach { case (_, external, heapBytes) =>
+      val sts = fs.listStatus(new Path(dest))
+      val memBytes = math.max(dataBytesOf(sts), heapBytes)
+      if (memBytes <= snapCacheTotalBytes)
+        admit(dest, SnapEntry(signatureOf(sts), memBytes,
+          FooterSchema.nullable(stats.schema), external))
     }
     // Hygiene: claims whose snapshot committed are garbage immediately
     // (writers targeting that id see the DIR first and never reach the
@@ -1077,7 +1248,8 @@ object Manifest {
       val stats = addedStats.fold(kept)(a =>
         kept.unionByName(a, allowMissingColumns = true))
       try return commitSnapshot(spark, table, stats, schemaExplicit,
-        basedOn = Some(base), txn = txn, physical = physical, dv = dv)
+        basedOn = Some(base), txn = txn, physical = physical, dv = dv,
+        writeThrough = true)
       catch {
         case e: ConcurrentCommitException =>
           val head = latestId(spark, table).getOrElse(0)
@@ -1841,15 +2013,15 @@ object Manifest {
     * data. Metadata-only — one recursive listing, no Spark job.
     */
   private def dataFilePaths(fs: org.apache.hadoop.fs.FileSystem,
-                            dir: Path): Map[String, Path] = {
+                            dir: Path): Map[String, FileStatus] = {
     val base = dir.toUri.getPath
-    val out = Map.newBuilder[String, Path]
+    val out = Map.newBuilder[String, FileStatus]
     FsMaint.walkFiles(fs, dir) { f =>
       val p = f.getPath
       val rel = p.toUri.getPath.stripPrefix(base)
       val hidden = rel.split('/').exists(s => s.startsWith("_") || s.startsWith("."))
       if (!hidden && f.getLen > 0 && p.getName.startsWith("part-"))
-        out += p.toUri.getPath -> p
+        out += p.toUri.getPath -> f
       true
     }
     out.result()
@@ -1882,7 +2054,7 @@ object Manifest {
     if (extra.nonEmpty) {
       val rows = boundaryRead(table) {
         spark.read
-          .parquet(extra.map(p => escapeGlob(listed(p).toString)): _*).count()
+          .parquet(extra.map(p => globLiteral(listed(p).getPath)): _*).count()
       }
       if (rows > 0)
         throw new StaleManifestException(
@@ -1909,27 +2081,32 @@ object Manifest {
     * of untouched files are carried verbatim from the pre-op snapshot
     * (parquet files are immutable, and the caller proved the snapshot
     * complete before mutating), rows of `removed` files are dropped, and
-    * ONLY `addedPaths` are scanned — so the snapshot cost of a targeted
-    * mutation is ∝ the files it rewrote, not the table (the same
-    * O(new)-not-O(table) argument as [[createIncremental]], for the
-    * replace shape instead of the append shape). Returns the snapshot id.
+    * ONLY `addedPaths` are profiled — from their footers, on the driver —
+    * so the snapshot cost of a targeted mutation is ∝ the files it
+    * rewrote, not the table (the same O(new)-not-O(table) argument as
+    * [[createIncremental]], for the replace shape instead of the append
+    * shape). `removed` are snapshot entries, `addedPaths` filesystem
+    * paths. Returns the snapshot id.
     */
   private[ops] def commitReplaced(spark: SparkSession, table: String,
                                   keyCols: Seq[String], removed: Set[String],
-                                  addedPaths: Seq[String],
+                                  addedPaths: Seq[Path],
                                   txn: Option[(String, Long)] = None,
                                   dv: DvCarry = DvInherit): Int = {
     val snapId = latestId(spark, table).getOrElse(
       throw new IllegalStateException(s"no manifest snapshot under $table"))
     val snap = snapshotDF(spark, table, snapId)
-    // basePath keeps hive-partition columns on the added-files scan, so a
-    // partitioned table's replacement stats see the same schema a full
-    // create would.
     val added =
       if (addedPaths.isEmpty) None
-      else Some(statsOf(spark.read.option("basePath", table)
-        .parquet(addedPaths.map(escapeGlob): _*), keyCols,
-        bloomSpecsLike(snap)))
+      else {
+        val blooms = bloomSpecsLike(snap)
+        // basePath keeps hive-partition columns on the fallback scan, so a
+        // partitioned table's replacement stats see the same schema a full
+        // create would.
+        Some(fromFooters(spark, statusesOf(fsOf(spark, table), addedPaths), keyCols, blooms)
+          .stats.getOrElse(statsOf(spark.read.option("basePath", table)
+            .parquet(addedPaths.map(globLiteral): _*), keyCols, blooms)))
+      }
     // COW mutations preserve the table schema — carry the recorded one.
     // Delta-shaped, so a concurrent DISJOINT commit rebases instead of
     // failing the whole mutation ([[commitDelta]]).
@@ -2007,36 +2184,44 @@ object Manifest {
       if (usablePrev) prevKeys.get else keyCols.toSeq
     if (!usablePrev) {
       val id = createTxn(spark, table, txn, keyCols: _*)
-      val n = snapshotDF(spark, table, id).count().toInt
+      val n = metaCount(snapshotDF(spark, table, id)).toInt
       return (id, n, 0)
     }
     val fs = fsOf(spark, table)
     val prevId = latestId(spark, table).get
     val prev = snapshotDF(spark, table, prevId)
-    // Driver holds PATH STRINGS only (∝ file count — the same listing any
-    // planner holds). The stats rows themselves — whose bloom sketches can
-    // be KB-MB each — are never collected: carried rows flow executor-side
-    // from the previous snapshot into the new one as a filtered frame.
-    val prevFiles = prev.select("file").collect().map(_.getString(0))
+    // The driver reads PATH STRINGS (∝ file count — the same listing any
+    // planner holds). Carried stats rows stay a filtered frame over the
+    // previous snapshot: driver rows when the cache holds it, else they flow
+    // executor-side, so an uncached snapshot's bloom sketches (KB-MB each)
+    // are never collected.
+    val prevFiles = metaRows(prev.select("file")).map(_.getString(0))
     val current = dataFilePaths(fs, new Path(table))
     val (carriedEnc, removedEnc) = prevFiles.partition(f =>
       current.contains(decodePath(f).toUri.getPath))
     val known = carriedEnc.map(f => decodePath(f).toUri.getPath).toSet
-    val newPaths = current.collect { case (n, p) if !known(n) => p }.toSeq
+    val newFiles = current.collect { case (n, st) if !known(n) => st }.toSeq
     // Nothing changed ⇒ the previous snapshot IS the current state: return
     // its id without committing a duplicate (a recurring no-op cycle would
     // otherwise accrue one identical snapshot per run — metadata append
     // debt with zero information).
-    if (newPaths.isEmpty && removedEnc.isEmpty)
+    if (newFiles.isEmpty && removedEnc.isEmpty)
       return (prevId, 0, 0)
     val prevSchema = storedSchema(spark, table, prevId)
     val (added, schema) =
-      if (newPaths.isEmpty) (None: Option[DataFrame], prevSchema)
+      if (newFiles.isEmpty) (None: Option[DataFrame], prevSchema)
       else {
         // mergeSchema over the NEW files only (O(new) footers): appends
-        // between two snapshots may themselves carry mixed schemas.
-        val fresh = spark.read.option("basePath", table).option("mergeSchema", "true")
-          .parquet(newPaths.map(p => escapeGlob(p.toString)): _*)
+        // between two snapshots may themselves carry mixed schemas. Their
+        // footers answer the stats and — for files of one schema directly
+        // under a flat table — the schema too, on the driver.
+        lazy val fresh = spark.read.option("basePath", table).option("mergeSchema", "true")
+          .parquet(newFiles.map(st => globLiteral(st.getPath)): _*)
+        val blooms = bloomSpecsLike(prev)
+        val ft = fromFooters(spark, Some(newFiles), effKeys, blooms)
+        val tableDir = fs.makeQualified(new Path(table))
+        val freshSchema = ft.schema.filter(_ => newFiles.forall(_.getPath.getParent == tableDir))
+          .getOrElse(fresh.schema)
         // Additive evolution gate: new columns fold into the recorded
         // schema; a type change fails typed BEFORE any snapshot commits.
         // The footer schema is PHYSICAL — compare in physical space, store
@@ -2044,8 +2229,8 @@ object Manifest {
         // drop + add).
         val physInc = physicalNames(spark, table, prevId)
         val merged = prevSchema.map(old => toLogicalSchema(
-          mergeAdditive(toPhysicalSchema(old, physInc), fresh.schema), physInc))
-        (Some(statsOf(fresh, effKeys, bloomSpecsLike(prev))), merged)
+          mergeAdditive(toPhysicalSchema(old, physInc), freshSchema), physInc))
+        (Some(ft.stats.getOrElse(statsOf(fresh, effKeys, blooms))), merged)
       }
     // Delta-shaped: a concurrent DISJOINT commit (a DV delete, a txn
     // record, another writer's append of different files) rebases instead
@@ -2053,7 +2238,7 @@ object Manifest {
     // re-profile that absorbed these files refuses typed.
     (commitDelta(spark, table, prevId, removedEnc.toSet, added,
        schema = schema, txn = txn, dv = dv),
-      newPaths.length, removedEnc.length)
+      newFiles.length, removedEnc.length)
   }
 
   /** Key columns of the latest snapshot, recovered from the snapshot's own
@@ -2106,8 +2291,8 @@ object Manifest {
     */
   private def bloomBitsOf(snap: DataFrame, bloomCols: Seq[String]): Option[Long] =
     bloomCols.headOption.flatMap { c =>
-      snap.select(col(s"bloom_$c")).filter(col(s"bloom_$c").isNotNull)
-        .limit(1).collect().headOption
+      metaRows(snap.select(col(s"bloom_$c")).filter(col(s"bloom_$c").isNotNull).limit(1))
+        .headOption
         .map(r => BloomFilter.readFrom(r.getAs[Array[Byte]](0)).bitSize())
     }
 

@@ -94,7 +94,8 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog {
     val sizes: Option[Map[String, Long]] =
       if (!snapFrame.columns.contains("n_bytes")) None
       else {
-        val rows = snapFrame.select("file", "n_bytes").collect()
+        val rows = Manifest.plannedRows(snapFrame.select("file", "n_bytes"), path,
+          "descriptor planning")
         if (rows.isEmpty || rows.exists(_.isNullAt(1))) None
         else Some(rows.map(r =>
           GraftPathKey.of(path, Manifest.decodePath(r.getString(0))) ->
@@ -102,8 +103,9 @@ final class GraftCatalog extends TableCatalog with ProcedureCatalog {
       }
     // SQL-plan-time FILE SKIPPING: the scan's pushed data filters pick files
     // through the same planner the Scala path uses (min/max stats plus one
-    // distributed bloom probe over the snapshot frame — sketches are never
-    // collected), keyed like the descriptors.
+    // bloom probe over the snapshot frame — on the driver when the snapshot
+    // is cached, else distributed, so an uncached snapshot's sketches are
+    // never collected), keyed like the descriptors.
     val pick = (filters: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
       FilePlanner.pick(snapFrame, path, filters).map(_.iterator.map(f =>
         GraftPathKey.of(path, Manifest.decodePath(f))).toSet)

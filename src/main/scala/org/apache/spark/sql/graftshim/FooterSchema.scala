@@ -32,7 +32,7 @@ import scala.util.control.NonFatal
 object FooterSchema {
 
   /** Spark's listing filter (`HadoopFSUtils.shouldFilterOutPathName`). */
-  private def hidden(name: String): Boolean =
+  private[graftshim] def hidden(name: String): Boolean =
     ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
       name.endsWith("._COPYING_")) &&
       !(name.startsWith("_common_metadata") || name.startsWith("_metadata"))

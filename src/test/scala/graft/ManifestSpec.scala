@@ -1008,13 +1008,14 @@ class ManifestSpec extends SparkSpec {
   test("rowsOfFiles fails typed on a staged path the snapshot does not describe") {
     val stage = stageClustered("manifest_rows_of", 4)
     val id = Manifest.create(spark, stage, "doc_id")
+    // rowsOfFiles takes filesystem paths; snapshot entries are URL-encoded.
     val entries = Manifest.files(spark, stage).select("file").collect()
-      .map(_.getString(0)).toSeq
+      .map(r => Manifest.decodePath(r.getString(0))).toSeq
     assert(Manifest.rowsOfFiles(spark, stage, id, entries) ==
       spark.read.parquet(stage).count())
     val fs = new Path(stage).getFileSystem(spark.sessionState.newHadoopConf())
-    def partFile(dir: String): String = fs.listStatus(new Path(dir))
-      .map(_.getPath.toString).filter(_.contains("part-")).head
+    def partFile(dir: String): Path = fs.listStatus(new Path(dir))
+      .map(_.getPath).filter(_.getName.contains("part-")).head
     // A schema-only file (what an empty stage writes) carries no stats row
     // and no rows: legitimately unmatched, it adds nothing.
     val empty = tmpDir("manifest_rows_of_empty") + "/e"
@@ -1028,6 +1029,6 @@ class ManifestSpec extends SparkSpec {
     val e = intercept[IllegalStateException] {
       Manifest.rowsOfFiles(spark, stage, id, entries :+ partFile(stray))
     }
-    assert(e.getMessage.contains(new Path(partFile(stray)).getName), e.getMessage)
+    assert(e.getMessage.contains(partFile(stray).getName), e.getMessage)
   }
 }

@@ -437,28 +437,39 @@ class PlanAuditSpec extends SparkSpec {
         p.linesIterator.filter(_.contains("ReadSchema")).mkString("\n"))
   }
 
-  test("streaming-sink micro-batch: appendOnce plans only the batch's own files, never the table") {
+  /** Snapshot `id`'s stats rows keyed by file name (the path cut off). */
+  private def statsByName(dir: String, id: Int): Map[String, String] =
+    graft.ops.Manifest.snapshotDF(spark, dir, id).collect().map { r =>
+      new org.apache.hadoop.fs.Path(new java.net.URI(r.getString(0))).getName ->
+        r.toSeq.tail.mkString(",")
+    }.toMap
+
+  test("streaming-sink micro-batch: appendOnce plans no table file") {
     val dir = tmpDir("pa_sink") + "/docs"
     val docs = spark.read.parquet(s"$sf001/documents.parquet")
     docs.filter(col("doc_id") < 400).repartition(6).write.parquet(dir)
-    graft.ops.Manifest.create(spark, dir, "doc_id")
+    val id = graft.ops.Manifest.create(spark, dir, "doc_id")
     val batch = docs.filter(col("doc_id") >= 400)
     val scans = scanPathsDuring {
       graft.ops.Layout.appendOnce(spark, dir, "pa-sink", 1L, batch): Unit
     }
-    // Data scans under the table dir must be the landed batch files (the
-    // deterministic part-sink-* names) — a whole-dir or old-file plan means
-    // the micro-batch cost grew to O(table).
+    // The batch's stats come from its landed files' footers, so no data
+    // file under the table dir is planned at all — neither the old files
+    // (the micro-batch cost must never grow to O(table)) nor the batch's.
     val tableData = scans.filter(p =>
       p.contains(dir) && !p.contains("_graft_manifest") && !p.contains("__sinkstage"))
-    assert(tableData.nonEmpty, s"expected batch-file scans\n${scans.mkString("\n")}")
-    tableData.foreach { p =>
-      assert(p.contains("part-sink-"),
-        s"sink batch planned a non-batch path: $p\n${scans.mkString("\n")}")
-    }
+    assert(tableData.isEmpty, s"sink batch planned table files\n${scans.mkString("\n")}")
+    // The commit profiled exactly the batch's deterministic part-sink files.
+    val before = statsByName(dir, id)
+    val after = statsByName(dir, graft.ops.Manifest.latestSnapshotId(spark, dir).get)
+    val added = after.keySet -- before.keySet
+    assert(added.nonEmpty && added.forall(_.startsWith("part-sink-")), added.mkString(", "))
+    assert(before.forall { case (n, st) => after.get(n).contains(st) })
+    assert(graft.ops.Manifest.files(spark, dir).agg(sum("n_rows")).head().getLong(0) ==
+      docs.count())
   }
 
-  test("restoreSnapshot: only the REVIVED files are ever planned (kept files never decode)") {
+  test("restoreSnapshot plans no table file; revived stats exact") {
     val dir = tmpDir("pa_restore") + "/docs"
     val docs = spark.read.parquet(s"$sf001/documents.parquet")
     docs.repartitionByRange(6, col("doc_id")).write.parquet(dir)
@@ -472,14 +483,16 @@ class PlanAuditSpec extends SparkSpec {
     val scans = scanPathsDuring {
       graft.ops.Layout.restoreSnapshot(spark, dir, id1): Unit
     }
+    // Revived files are byte copies: their stats come from their footers,
+    // so no data file — kept or revived — is planned (cost ∝ the state diff).
     val data = scans.filter(p => p.contains(dir) &&
       !p.contains("_graft_manifest") && !p.contains("__delnew"))
-    assert(data.nonEmpty, s"expected revived-file scans\n${scans.mkString("\n")}")
-    data.foreach { p =>
-      assert(revivedNames.exists(p.endsWith),
-        s"restore planned a KEPT file (cost must be ∝ the state diff): $p\n" +
-          scans.mkString("\n"))
-    }
+    assert(data.isEmpty, s"restore planned table files\n${scans.mkString("\n")}")
+    // ...and the restored snapshot describes the target's files with the
+    // target's exact stats rows, the revived ones included.
+    val restored = statsByName(dir, graft.ops.Manifest.latestSnapshotId(spark, dir).get)
+    assert(revivedNames.subsetOf(restored.keySet))
+    assert(restored == statsByName(dir, id1))
   }
 
   test("compactPartition: only the target partition's files are ever planned") {

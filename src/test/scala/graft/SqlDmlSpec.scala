@@ -961,4 +961,25 @@ class SqlDmlSpec extends SparkSpec {
     // Procedures are discoverable.
     assert(spark.sql("SHOW PROCEDURES IN graft.system").count() >= 5L)
   }
+
+  test("UPDATE, DELETE and INSERT on a table dir named like an escape (`t%41`)") {
+    spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
+    // `%41` must stay three literal characters: decoded, the path is `tA`.
+    val dir = tmpDir("dml_pct") + "/t%41"
+    spark.range(400).select((col("id") * 2).as("k"), lit(0L).as("v"))
+      .repartitionByRange(4, col("k")).sortWithinPartitions("k").write.parquet(dir)
+    Manifest.create(spark, dir, "k")
+    val t = s"graft.`$dir`"
+    spark.sql(s"UPDATE $t SET v = 1 WHERE k BETWEEN 100 AND 199")
+    spark.sql(s"DELETE FROM $t WHERE k BETWEEN 300 AND 399")
+    spark.sql(s"INSERT INTO $t VALUES (301L, 7L), (303L, 7L)")
+    val got = spark.sql(s"SELECT k, v FROM $t").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val want = (0L until 800L by 2).filterNot(k => k >= 300 && k <= 399)
+      .map(k => k -> (if (k >= 100 && k <= 199) 1L else 0L)).toMap ++
+      Map(301L -> 7L, 303L -> 7L)
+    assert(got == want)
+    assert(Manifest.isComplete(spark, dir))
+    assert(!new java.io.File(dir).getParentFile.listFiles().exists(_.getName.startsWith("tA")))
+  }
 }
