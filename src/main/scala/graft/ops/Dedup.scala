@@ -43,12 +43,6 @@ object Dedup {
   def minhashSignatureOfShingles(shinglesCol: Column, numHashes: Int = 32): Column =
     graft.functions.VectorExpressions.minhash_sig(shinglesCol, numHashes)
 
-  /** Convenience wrapper from raw text; prefer computing shingles once into
-    * a column and calling [[minhashSignatureOfShingles]] when composing.
-    */
-  def minhashSignature(text: Column, shingleK: Int = 5, numHashes: Int = 32): Column =
-    minhashSignatureOfShingles(TextAnalysis.shingles(text, shingleK), numHashes)
-
   /** LSH banding: split a `numHashes`-long signature into `bands` bands of
     * `numHashes/bands` rows; hash each band → (band_id, band_hash) bucket
     * keys. Docs sharing any bucket are candidate pairs.
@@ -111,35 +105,6 @@ object Dedup {
     } finally { shingled.unpersist(); () }
   }
 
-  /** Exact n-gram (word-shingle) Jaccard for candidate pairs.
-    * `docs` must have columns (id, text).
-    */
-  def verifyJaccard(pairs: DataFrame, docs: DataFrame, shingleK: Int): DataFrame = {
-    val sh = docs.select(col("id"),
-      array_distinct(TextAnalysis.shingles(col("text"), shingleK)).as("sh"))
-    pairs
-      .join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), Seq("id_a"))
-      .join(sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), Seq("id_b"))
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("uni", size(col("sh_a")) + size(col("sh_b")) - col("inter"))
-      .select(col("id_a"), col("id_b"),
-        when(col("uni") === 0, lit(1.0))
-          .otherwise(col("inter").cast("double") / col("uni").cast("double")).as("jaccard"))
-  }
-
-  /** All-pairs exact n-gram Jaccard above a threshold via explicit pair
-    * enumeration — O(n²) pairs, each paying an array intersection. Exact and
-    * simple, but only for SMALL scopes (pair verification, tiny corpora);
-    * use [[jaccardPairsInverted]] for whole-corpus exact jaccard.
-    */
-  def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-                        shingleK: Int = 3, threshold: Double = 0.5): DataFrame = {
-    val docs = df.select(col(idCol).as("id"), col(textCol).as("text"))
-    val pairs = docs.as("a").join(docs.as("b"), col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-    verifyJaccard(pairs, docs, shingleK).filter(col("jaccard") >= threshold)
-  }
-
   /** Whole-corpus EXACT n-gram Jaccard pairs via an inverted shingle index:
     * explode (doc, shingle-hash), self-join on the shingle, count
     * co-occurrences per pair — intersection sizes fall out of a groupBy, and
@@ -150,8 +115,8 @@ object Dedup {
     * catch one).
     *
     * Pairs with no shared shingle are absent (their jaccard is 0); two
-    * empty-shingle docs are likewise never paired (the enumerated variant
-    * defines that degenerate case as jaccard 1).
+    * empty-shingle docs are likewise never paired (explicit pair
+    * enumeration would define that degenerate case as jaccard 1).
     *
     * `maxShingleDf` is the hot-shingle cap — the prefix-filter refinement
     * that makes the index safe on real corpora: a shingle shared by d docs

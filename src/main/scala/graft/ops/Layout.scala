@@ -192,6 +192,64 @@ object Layout {
   private def orderedLong(c: String, df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.Column =
     orderedLongOf(col(c), df.schema(c).dataType, c)
 
+  /** The files of a snapshot whose `[min, max]` key range holds some key of
+    * a set, found inside a pass the caller already runs over the keys — no
+    * join of the keys against the snapshot. The ranges' endpoints cut the
+    * long line into segments, each inside a fixed set of files; a key maps
+    * to its segment by binary search ([[segment]], evaluated per key), the
+    * pass collects the distinct segments (at most two per file), and
+    * [[files]] maps them back on the driver in one sweep. A file is picked
+    * iff some key lies in its bounds; NULL bounds pick nothing — exactly
+    * `k BETWEEN min AND max`.
+    */
+  private[graft] final class RangePick(names: IndexedSeq[String], lo: Array[Long], hi: Array[Long]) {
+    /** Segment starts: every `min` and every `max + 1`, sorted, distinct. */
+    private val starts: Array[Long] = (lo.iterator ++
+      hi.iterator.filter(_ != Long.MaxValue).map(_ + 1)).toArray.distinct.sorted
+
+    /** The segment of the long key `k`: the index of the last start at or
+      * below it, -1 below them all.
+      */
+    def segment(k: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+      val st = starts
+      udf { (v: Long) =>
+        val i = java.util.Arrays.binarySearch(st, v)
+        if (i >= 0) i else -i - 2
+      }.apply(k)
+    }
+
+    /** The files covering any of `segments`, in snapshot order: a sweep
+      * over the segments' starts, ascending, with the files taken in `min`
+      * order. A file is taken at the first start at or above its `min` if
+      * its `max` reaches that start; if not, no later start is inside it.
+      */
+    def files(segments: Iterable[Int]): IndexedSeq[String] = {
+      val points = segments.iterator.filter(_ >= 0).map(starts).toArray.sorted
+      val byLo = lo.indices.sortBy(lo(_))
+      val out = scala.collection.mutable.ArrayBuffer.empty[Int]
+      var next = 0
+      points.foreach { p =>
+        while (next < byLo.length && lo(byLo(next)) <= p) {
+          if (hi(byLo(next)) >= p) out += byLo(next)
+          next += 1
+        }
+      }
+      out.sorted.map(names).toIndexedSeq
+    }
+  }
+
+  private[graft] object RangePick {
+    /** The pick over snapshot frame `f`'s `min_`/`max_` of `keyCol` — rows
+      * the driver holds for a cached snapshot.
+      */
+    def of(f: org.apache.spark.sql.DataFrame, keyCol: String): RangePick = {
+      val rows = Manifest.metaRows(f.select("file", s"min_$keyCol", s"max_$keyCol"))
+        .filter(r => !r.isNullAt(1) && !r.isNullAt(2) && r.getLong(1) <= r.getLong(2))
+      new RangePick(rows.map(_.getString(0)), rows.map(_.getLong(1)).toArray,
+        rows.map(_.getLong(2)).toArray)
+    }
+  }
+
   /** [[orderedLong]] over an arbitrary Column + known type — the form the
     * SQL MERGE rewrite needs (its key is a resolved attribute, not a name
     * in some frame's schema).
@@ -1239,12 +1297,13 @@ object Layout {
       // readPickedPinned): trailing key components CAN be renamed (only
       // stats keys are rename-refused), so the caller's LOGICAL key names
       // translate once here. The leading stats key is never renamed
-      // (logical == physical), which is what keeps the pick join simple.
+      // (logical == physical), so the file pick reads it under one name in
+      // the logical source keys and the physical action union alike.
       val phys = physMapOf(spark, path)
       val physKeyCols = keyCols.map(c => phys.getOrElse(c, c))
       val pkCols = physKeyCols.map(col)
-      // The contract is TYPED, not hoped-for: the key set broadcasts (the
-      // stats pick join and every identity join below), so a table-sized
+      // The contract is TYPED, not hoped-for: the key set broadcasts (every
+      // identity join below), so a table-sized
       // source must fail with guidance, not OOM the broadcast. Bound
       // configurable per session (`graft.merge.maxSourceKeys`).
       val maxKeys = spark.conf.get("graft.merge.maxSourceKeys", "10000000").toLong
@@ -1256,10 +1315,14 @@ object Layout {
               "broadcasts its key set (delta-sized by contract); for " +
               "table-sized reconciliation use the sync engine's diff path " +
               "(graft.sync.SyncEngine / Differ), which shuffles instead")
-      def pick(keyDf: org.apache.spark.sql.DataFrame): IndexedSeq[String] =
-        f.join(broadcast(keyDf.select(orderedLong(keyCol, keyDf).as("__k"))),
-            col("__k").between(col(s"min_$keyCol"), col(s"max_$keyCol")), "left_semi")
-          .select("file").collect().map(_.getString(0)).toIndexedSeq
+      // The files an affected key can live in, picked inside the pass that
+      // already runs over the keys — never by a join of the keys against
+      // the snapshot.
+      lazy val ranges = RangePick.of(f, keyCol)
+      def segments(keysDf: org.apache.spark.sql.DataFrame, keep: org.apache.spark.sql.Column) = {
+        val k = orderedLong(keyCol, keysDf) // refuses an unorderable key first
+        collect_set(when(keep, ranges.segment(k)))
+      }
       def emptyTarget: org.apache.spark.sql.DataFrame = {
         // No target rows (no file can contain a matching key, or the keyed
         // upsert reads none): compute still gets a schema-correct frame.
@@ -1277,6 +1340,9 @@ object Layout {
         materialized ::= m
         m
       }
+      def notUnique = s"mergeRowLevel($path): (${keyCols.mkString(", ")}) is not unique " +
+        "among affected rows — a keyed replace/delete would silently " +
+        "drop duplicate-key siblings; dedup the table first"
       try {
         // Targeting BEFORE compute when the actions read the target rows;
         // `pickAll` = the BY SOURCE shape: un-matched target rows can live
@@ -1285,12 +1351,17 @@ object Layout {
         val (picked, pickedDf) = sourceKeys match {
           case None => (IndexedSeq.empty[String], emptyTarget)
           case Some(src) =>
-            val sk = once(allNotNull(src.select(kCols: _*)).distinct())
-            bound(sk.count(), "distinct source keys")
+            val sk = allNotNull(src.select(kCols: _*)).distinct()
+            // ONE pass over the source keys: their count for the bound and,
+            // unless the whole table plans, the files their keys hit.
+            val s = graft.util.Observed.pass(sk, path, "source key pass")(
+              count(lit(1)).as("n") +:
+                (if (pickAll) Nil else Seq(segments(sk, lit(true)).as("seg"))): _*)
+            bound(s.getLong(0), "distinct source keys")
             val p =
               if (pickAll) Manifest.plannedRows(f.select("file"), path, "mergeRowLevel")
                 .map(_.getString(0))
-              else pick(sk)
+              else ranges.files(s.getSeq[Int](1))
             (p, if (p.nonEmpty) readPickedPinned(spark, path, p) else emptyTarget)
         }
         // compute speaks LOGICAL (it rebinds SQL expressions by column
@@ -1299,23 +1370,32 @@ object Layout {
         val upserts = once(toPhysicalDf(upserts0, phys))
         val delKeys = delKeys0.map(d => once(allNotNull(d.select(kCols: _*))
           .select(keyCols.map(c => col(c).as(phys.getOrElse(c, c))): _*).distinct()))
+        // The keyed upsert targets off its affected keys; with `pickAll`
+        // the COMMIT narrows back to the files whose key range holds an
+        // affected key, so write amplification stays ∝ rows changed, not
+        // table size. Either way the pick rides the action pass below.
+        val commitPick = sourceKeys.isEmpty || pickAll
         // ONE grouped pass over the tagged action union answers the keyed
         // size bound, the NULL-key refusal, upsert-key uniqueness, the
-        // update/delete overlap, and both action totals. NULL keys group
-        // as one, preserving the at-most-one-action-row-per-key contract.
+        // update/delete overlap, both action totals and the commit's file
+        // pick, all observed on the groups as they run. NULL keys group as
+        // one, preserving the at-most-one-action-row-per-key contract.
         def tag(d: org.apache.spark.sql.DataFrame, a: String) =
           d.select(pkCols :+ lit(a).as("__a"): _*)
         val acts = delKeys.foldLeft(tag(upserts, "u"))((u, d) => u.unionByName(tag(d, "d")))
-        val s = acts.groupBy(pkCols: _*)
+        val grouped = acts.groupBy(pkCols: _*)
           .agg(sum(when(col("__a") === "u", 1L).otherwise(0L)).as("__cu"),
                sum(when(col("__a") === "d", 1L).otherwise(0L)).as("__cd"))
-          .agg(coalesce(sum("__cu"), lit(0L)),
-               coalesce(sum("__cd"), lit(0L)),
-               coalesce(sum(when(col("__cu") > 1, lit(1L))), lit(0L)),
-               coalesce(sum(when(col("__cu") > 0 && col("__cd") > 0, lit(1L))),
-                 lit(0L)),
-               coalesce(sum(when(pkCols.map(_.isNull).reduce(_ || _),
-                 col("__cu"))), lit(0L))).head
+        def sumOf(c: org.apache.spark.sql.Column, name: String) =
+          coalesce(sum(c), lit(0L)).as(name)
+        val s = graft.util.Observed.pass(grouped, path, "action pass")(
+          Seq(sumOf(col("__cu"), "u"), sumOf(col("__cd"), "d"),
+            sumOf(when(col("__cu") > 1, lit(1L)), "dup"),
+            sumOf(when(col("__cu") > 0 && col("__cd") > 0, lit(1L)), "both"),
+            sumOf(when(pkCols.map(_.isNull).reduce(_ || _), col("__cu")), "nullKey")) ++
+          (if (commitPick)
+             Seq(segments(grouped, pkCols.map(_.isNotNull).reduce(_ && _)).as("seg"))
+           else Nil): _*)
         val nUp = s.getLong(0)
         val nDel = s.getLong(1)
         if (sourceKeys.isEmpty) bound(nUp, "delta rows")
@@ -1340,14 +1420,10 @@ object Layout {
         // union itself is the tagged broadcast. NULL-component keys match
         // no target row (and orderedLong targeting would null them out).
         val tagged = acts.filter(pkCols.map(_.isNotNull).reduce(_ && _))
-        // The keyed upsert targets off its affected keys here; with
-        // `pickAll` the COMMIT narrows back to the files whose key range
-        // holds an affected key, so write amplification stays ∝ rows
-        // changed, not table size.
         val (commitPicked, commitDf) =
-          if (sourceKeys.isDefined && !pickAll) (picked, pickedDf)
+          if (!commitPick) (picked, pickedDf)
           else {
-            val p = pick(tagged)
+            val p = ranges.files(s.getSeq[Int](5))
             (p, if (p.nonEmpty) readPickedPinned(spark, path, p) else pickedDf)
           }
         if (commitPicked.isEmpty) {
@@ -1364,29 +1440,22 @@ object Layout {
           }
           return MergeRowResult(0, total, 0L, 0L, nUp)
         }
-        // The affected target rows, per action. dv mode also carries their
-        // (file name, position) — materialized BEFORE the join: the
-        // using-columns join inserts a Project, and `_metadata` does not
-        // survive projections — and keeps the frame for the sidecar.
-        val matched = {
-          val m = commitDf
-            .select(pkCols ++ (if (!dvMode) Nil else Seq(
-              Manifest.dvFileName.as("file_name"),
-              col("_metadata.row_index").as("pos"))): _*)
-            .join(broadcast(tagged), physKeyCols)
-          if (dvMode) once(m) else m
-        }
-        val mStats = matched.groupBy((pkCols :+ col("__a")): _*).count()
-          .agg(coalesce(sum(when(col("__a") === "u", col("count"))), lit(0L)),
-               coalesce(sum(when(col("__a") === "d", col("count"))), lit(0L)),
-               coalesce(sum(when(col("count") > 1, lit(1))), lit(0L))).head
-        val updated = mStats.getLong(0)
-        val deleted = mStats.getLong(1)
-        require(mStats.getLong(2) == 0,
-          s"mergeRowLevel($path): (${keyCols.mkString(", ")}) is not unique " +
-            "among affected rows — a keyed replace/delete would silently " +
-            "drop duplicate-key siblings; dedup the table first")
         if (dvMode) {
+          // The affected target rows, per action, with their (file name,
+          // position) — materialized BEFORE the join (the using-columns
+          // join inserts a Project, and `_metadata` does not survive
+          // projections) and kept: the sidecar reads it again.
+          val matched = once(commitDf
+            .select(pkCols ++ Seq(Manifest.dvFileName.as("file_name"),
+              col("_metadata.row_index").as("pos")): _*)
+            .join(broadcast(tagged), physKeyCols))
+          val mStats = matched.groupBy((pkCols :+ col("__a")): _*).count()
+            .agg(coalesce(sum(when(col("__a") === "u", col("count"))), lit(0L)),
+                 coalesce(sum(when(col("__a") === "d", col("count"))), lit(0L)),
+                 coalesce(sum(when(col("count") > 1, lit(1))), lit(0L))).head()
+          val updated = mStats.getLong(0)
+          val deleted = mStats.getLong(1)
+          require(mStats.getLong(2) == 0, notUnique)
           // MERGE-ON-READ commit: affected target rows become deletion-vector
           // POSITIONS (their replacements/inserts append), ZERO data files
           // rewritten — for EVERY clause mix, including BY SOURCE (which
@@ -1408,21 +1477,43 @@ object Layout {
           }
           MergeRowResult(0, total, updated, deleted, nUp - updated)
         } else {
+          // ONE read of the picked files: a left-outer join against the
+          // affected keys keeps the unmatched rows as survivors, and an
+          // Observation on the same write counts the matched rows per
+          // action plus a duplicate witness — matched rows against distinct
+          // matched keys (tagged keys are unique, so any excess is a key
+          // two target rows share). The witness's key set is delta-sized:
+          // `tagged` is bounded by graft.merge.maxSourceKeys.
+          val obs = org.apache.spark.sql.Observation()
           val survivors = commitDf
-            .join(broadcast(tagged.select(pkCols: _*)), physKeyCols, "left_anti")
+            .join(broadcast(tagged), physKeyCols, "left_outer")
+            .observe(obs,
+              count(when(col("__a") === "u", 1)).as("u"),
+              count(when(col("__a") === "d", 1)).as("d"),
+              count(col("__a")).as("m"),
+              size(collect_set(when(col("__a").isNotNull, struct(pkCols: _*)))).as("k"))
+            .filter(col("__a").isNull)
+            // the using-columns join moved the keys to the front
+            .select(commitDf.columns.toIndexedSeq.map(c => col(s"`${c.replace("`", "``")}`")): _*)
             .unionByName(upserts)
           val partitioned = isHivePartitioned(fs, path)
           val stage = path + (if (partitioned) PartStageSuffix else "__delnew")
           FsMaint.deleteRecursively(fs, new Path(stage))
-          if (partitioned) {
+          if (partitioned)
             survivors.write.partitionBy(partitionColsOf(path, commitPicked): _*)
               .mode("overwrite").parquet(stage)
+          else survivors.write.mode("overwrite").parquet(stage)
+          // Checked before anything publishes: a refused rewrite leaves
+          // neither a snapshot nor its stage behind.
+          val m = graft.util.Observed.row(obs, path, "merge survivor write")
+          val unique = m.getLong(2) == m.getInt(3).toLong
+          if (!unique) FsMaint.deleteRecursively(fs, new Path(stage))
+          require(unique, notUnique)
+          if (partitioned)
             commitReplacePartitioned(spark, fs, path, commitPicked, stage, keys, txn): Unit
-          } else {
-            survivors.write.mode("overwrite").parquet(stage)
-            commitReplace(spark, fs, path, commitPicked, stage, keys, txn): Unit
-          }
-          MergeRowResult(commitPicked.length, total, updated, deleted, nUp - updated)
+          else commitReplace(spark, fs, path, commitPicked, stage, keys, txn): Unit
+          val updated = m.getLong(0)
+          MergeRowResult(commitPicked.length, total, updated, m.getLong(1), nUp - updated)
         }
       } finally materialized.foreach(Caching.release)
     }
@@ -1489,6 +1580,20 @@ object Layout {
       DeleteResult(picked.length, total, pickedRows.map(_._2).sum)
     }
   }
+
+  /** A non-empty `part-` file: what a stage dir's writers leave as data. */
+  private def isDataFile(st: org.apache.hadoop.fs.FileStatus): Boolean =
+    st.getPath.getName.startsWith("part-") && st.getLen > 0
+
+  /** The rows in `staged`, the data files of the stage dir `stage`, from
+    * their parquet footers — no schema inference and no count job. A
+    * footer that does not read falls back to a Spark count of the dir.
+    */
+  private def stagedRowCount(spark: SparkSession, stage: String,
+                             staged: Seq[org.apache.hadoop.fs.FileStatus]): Long =
+    if (staged.isEmpty) 0L
+    else org.apache.spark.sql.graftshim.FooterStats.read(spark, staged)
+      .fold(spark.read.parquet(stage).count())(_.map(_.rowCount).sum)
 
   /** What an [[overwriteWhere]] replaces — the shapes the manifest/layout
     * can target without planning untouched files (the same contract as the
@@ -1597,9 +1702,9 @@ object Layout {
       // 1a. stage the INSERTED rows first (the only execution of the
       // incoming query), then validate them from the staged files.
       stageWrite(data)
-      val stagedNew = FsMaint.dataFileCount(fs, new Path(stage))
-      val newRows =
-        if (stagedNew == 0) 0L else spark.read.parquet(stage).count()
+      val staged = FsMaint.listRelative(fs, new Path(stage))(isDataFile).map(_._2)
+      val stagedNew = staged.length
+      val newRows = stagedRowCount(spark, stage, staged)
       def refuse(n: Long, what: String): Unit = if (n > 0) {
         FsMaint.deleteRecursively(fs, new Path(stage))
         throw new IllegalArgumentException(
@@ -1903,13 +2008,11 @@ object Layout {
       FsMaint.deleteRecursively(fs, new Path(stage))
       val physData = toPhysicalDf(data, physMapOf(spark, path))
       writeInLayout(spark, fs, path, physData, stage, "overwrite")
-      val staged = FsMaint.listRelative(fs, new Path(stage))(st =>
-        st.getPath.getName.startsWith("part-") && st.getLen > 0)
+      val staged = FsMaint.listRelative(fs, new Path(stage))(isDataFile)
       // A 0-row batch still writes a schema-only part file (length > 0) —
-      // count via the parquet FOOTERS (metadata-only) so an empty
-      // micro-batch is a true no-op: nothing landed, nothing committed.
-      if (staged.isEmpty ||
-          spark.read.parquet(stage).count() == 0L) {
+      // its footer says 0 rows, so an empty micro-batch is a true no-op:
+      // nothing landed, nothing committed.
+      if (stagedRowCount(spark, stage, staged.map(_._2)) == 0L) {
         FsMaint.deleteRecursively(fs, new Path(stage))
         return 0L
       }

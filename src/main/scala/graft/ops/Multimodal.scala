@@ -535,15 +535,6 @@ object Multimodal {
       .select(col(idCol), col("frame.frame_no"), col("frame.frame_bytes"))
   }
 
-  /** Byte-budget cap (NOT a pixel resize — see [[resizeImages]] for that):
-    * truncate payload to `maxBytes`. Useful as a transport guard; kept for
-    * plan-shape parity (projection, no shuffle).
-    */
-  def resizeStub(df: DataFrame, bytesCol: String, maxBytes: Int): DataFrame =
-    df.withColumn(bytesCol,
-      when(octet_length(col(bytesCol)) > maxBytes,
-        substring(col(bytesCol), 1, maxBytes)).otherwise(col(bytesCol)))
-
   /** Resized-image schema produced by [[resizeImages]]. */
   val resizedImageSchema: StructType = StructType(Seq(
     StructField("media_id", LongType, nullable = false),

@@ -97,15 +97,6 @@ object Similarity {
     }
   }
 
-  /** Sign-bit LSH bucket id: one bit per hyperplane (≤ 63 planes). One
-    * compiled expression holding the plane matrix — the literal-array
-    * column formula it replaces put tables × planes × dim literal nodes in
-    * the plan, and ANALYSIS + codegen of that tree (seconds) dwarfed the
-    * actual scoring on bench-sized corpora.
-    */
-  def lshBucket(vec: Column, planes: Array[Array[Double]]): Column =
-    element_at(graft.functions.VectorExpressions.lsh_buckets(vec, planes, 1), 1)
-
   /** All `tables` bucket ids at once (row-major plane matrix), as
     * `array<long>` — the one-pass form [[lshTopK]]/[[cosineNearDups]] use.
     */

@@ -15,17 +15,6 @@ object TextQueries {
 
   import org.apache.spark.sql.Column
 
-  /** Per-language marker-hit scores over `text`, in language-code order —
-    * shared by `text_langid` and the composite pipeline query so Spark and
-    * oracle tie-break identically. */
-  private def langScores(text: Column): Seq[(String, Column)] = {
-    val toks = TextAnalysis.tokens(lower(text))
-    TextAnalysis.LangMarkers.toSeq.sortBy(_._1).map { case (lang, ws) =>
-      val sw = array(ws.map(lit): _*)
-      lang -> size(filter(toks, t => array_contains(sw, t)))
-    }
-  }
-
   /** First language (in code order) achieving the max score; "und" when no
     * marker hits — the exact CASE order mirrored by [[langPredSql]]. */
   private def langPred(scores: Seq[(String, Column)]): Column = {

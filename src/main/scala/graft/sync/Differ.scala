@@ -1,11 +1,9 @@
 package graft.sync
 
 import graft.functions.Hashing
-import org.apache.spark.sql.{DataFrame, Observation, Row}
+import graft.util.Observed
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
-
-import scala.concurrent.Await
-import scala.concurrent.duration.Duration
 
 /** The delta needed to converge slave → master, as ONE legs frame:
   * `(key…, __leg)` where `__leg = 'd'` marks key tuples to remove from the
@@ -201,26 +199,6 @@ object Differ {
     df.sparkSession.read.schema(df.schema).parquet(path)
   }
 
-  /** Upper bound on the wait for a write's observed metrics. They reach
-    * the driver through Spark's asynchronous query-execution listener, and
-    * `Observation.get` would wait forever if that delivery never came.
-    */
-  private val ObservedMetricsTimeout = Duration(5, "min")
-
-  /** The metrics row `obs` observed on a write that has returned. Throws
-    * `IllegalStateException` naming `table` when it does not arrive within
-    * `timeout`; callers read it before any slave mutation, so the cycle
-    * fails for this table and the next one retries.
-    */
-  private[graft] def observed(obs: Observation, table: String,
-                              timeout: Duration = ObservedMetricsTimeout): Row =
-    try Await.result(obs.future, timeout)
-    catch {
-      case _: java.util.concurrent.TimeoutException =>
-        throw new IllegalStateException(
-          s"sync of $table: the delta spill's row counts did not arrive within $timeout")
-    }
-
   private[sync] def rmScratch(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
@@ -306,7 +284,7 @@ object Differ {
             .map(r => r.getString(0) -> r.getLong(1)).toMap
           (legCounts.getOrElse("d", 0L), legCounts.getOrElse("k", 0L))
         } else {
-          val r = observed(legObs, table)
+          val r = Observed.row(legObs, table, "delta key spill")
           (r.getLong(0), r.getLong(1))
         }
 
@@ -334,7 +312,7 @@ object Differ {
             .getOrElse(delta.source.join(keyList, delta.keyCols, "left_semi"))
           val insObs = Observation()
           val spilled = spill(insertPlan.observe(insObs, count(lit(1))), s"$scratch/inserts")
-          (observed(insObs, table).getLong(0), Some(spilled))
+          (Observed.row(insObs, table, "insert spill").getLong(0), Some(spilled))
         }
       }
       val spilledInserts = insertSpill.filter(_ => nIns > 0).getOrElse(

@@ -82,8 +82,9 @@ class DifferSpec extends SparkSpec {
   }
 
   test("observed spill counts: a metrics row that never arrives fails typed, naming the table") {
-    val e = intercept[IllegalStateException](Differ.observed(
-      org.apache.spark.sql.Observation(), "orders", scala.concurrent.duration.Duration(50, "ms")))
+    val e = intercept[IllegalStateException](graft.util.Observed.row(
+      org.apache.spark.sql.Observation(), "orders", "delta key spill",
+      scala.concurrent.duration.Duration(50, "ms")))
     assert(e.getMessage.contains("orders"), e.getMessage)
   }
 

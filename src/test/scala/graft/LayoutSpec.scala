@@ -30,6 +30,32 @@ class LayoutSpec extends SparkSpec {
     stage
   }
 
+  test("RangePick: picks exactly the files a BETWEEN semi-join over their bounds picks") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    def bound(): java.lang.Long = rnd.nextInt(12) match {
+      case 0 => null
+      case 1 => Long.MaxValue
+      case 2 => Long.MinValue
+      case _ => rnd.nextInt(400).toLong - 200
+    }
+    (1 to 6).foreach { round =>
+      // Overlapping, nested, inverted, point and NULL-bounded ranges.
+      val files = (0 until 3 + rnd.nextInt(30)).map { i =>
+        val lo = bound()
+        (s"f$i", lo, if (rnd.nextInt(4) == 0) lo else bound())
+      }
+      val keys = Seq.fill(1 + rnd.nextInt(40))(bound()).filter(_ != null).map(_.longValue) ++
+        Seq(Long.MinValue, Long.MaxValue)
+      val f = files.toDF("file", "min_k", "max_k")
+      val pick = Layout.RangePick.of(f, "k")
+      val segs = keys.toDF("k").agg(collect_set(pick.segment(col("k")))).head().getSeq[Int](0)
+      val want = files.collect { case (n, lo, hi) if lo != null && hi != null &&
+          keys.exists(k => lo <= k && k <= hi) => n }
+      assert(pick.files(segs) == want, s"round $round: $files vs keys $keys")
+    }
+  }
+
   test("compactTable: content invariant, file count collapses to the byte target") {
     val stage = stageDocs("layout_compact", 16)
     assert(fileCount(stage) == 16)

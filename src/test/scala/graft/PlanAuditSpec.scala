@@ -459,6 +459,9 @@ class PlanAuditSpec extends SparkSpec {
     val tableData = scans.filter(p =>
       p.contains(dir) && !p.contains("_graft_manifest") && !p.contains("__sinkstage"))
     assert(tableData.isEmpty, s"sink batch planned table files\n${scans.mkString("\n")}")
+    // Whether the batch is empty comes from the staged files' footers too.
+    assert(!scans.exists(_.contains("__sinkstage")),
+      s"sink batch scanned its stage\n${scans.mkString("\n")}")
     // The commit profiled exactly the batch's deterministic part-sink files.
     val before = statsByName(dir, id)
     val after = statsByName(dir, graft.ops.Manifest.latestSnapshotId(spark, dir).get)

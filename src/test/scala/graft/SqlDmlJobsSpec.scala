@@ -121,6 +121,10 @@ class SqlDmlJobsSpec extends SparkSpec {
     }
     val counts = perKind.map { case (k, js) => k -> js.length }.toMap
     assert(counts("DELETE") == 1 && counts("INSERT") == 1, report)
+    // UPDATE and MERGE: the action pass (its shuffle and its observed
+    // totals, the file pick among them) and the survivor write (the key
+    // broadcast and the write, the matched counts observed on it).
+    assert(counts("UPDATE") <= 4 && counts("MERGE") <= 4, report)
     // The statements did what they say.
     val got = spark.sql(s"SELECT k, qty, note FROM $t WHERE k BETWEEN 4000 AND 4700")
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
@@ -128,6 +132,50 @@ class SqlDmlJobsSpec extends SparkSpec {
     assert(got.get(4001L).contains((0L, "i1")))
     assert(got.get(4400L).contains((101L, "u1")))
     assert(got.get(4602L).contains((1L, "m1")) && got.get(4600L).contains((0L, "m1")))
+  }
+
+  /** The data files each SQL execution `body` runs scans, by file name, one
+    * set per execution. Work inside a local checkpoint (the action pass's
+    * materialization) runs no execution of its own and is not seen.
+    */
+  private def scansPerExecution(body: => Unit): Seq[Set[String]] = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    val scans = new java.util.concurrent.ConcurrentLinkedQueue[Set[String]]
+    def walk(p: SparkPlan): Seq[String] = p match {
+      case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.getName)
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case other => other.children.flatMap(walk) ++ other.subqueries.flatMap(walk)
+    }
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        scans.add(walk(qe.executedPlan).toSet): Unit
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try body finally {
+      org.apache.spark.GraftSparkTestAccess.flushListenerBus(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    scans.asScala.toSeq
+  }
+
+  test("COW UPDATE and MERGE read each rewritten file in one execution after the action pass") {
+    val dir = stage(tmpDir("dml_scans") + "/t")
+    val t = s"graft.`$dir`"
+    def liveFiles: Set[String] = Manifest.files(spark, dir).select("file").collect()
+      .map(r => Manifest.decodePath(r.getString(0)).getName).toSet
+    statements(t, 0).filter(s => s._1 == "UPDATE" || s._1 == "MERGE").foreach { case (kind, run) =>
+      val before = liveFiles
+      val scans = scansPerExecution(run())
+      val rewritten = before -- liveFiles
+      assert(rewritten.nonEmpty, s"$kind rewrote no file")
+      rewritten.foreach { f =>
+        val n = scans.count(_.contains(f))
+        assert(n == 1, s"$kind scanned rewritten $f in $n executions\n" + scans.mkString("\n"))
+      }
+    }
   }
 }
 

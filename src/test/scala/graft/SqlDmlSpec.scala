@@ -789,6 +789,76 @@ class SqlDmlSpec extends SparkSpec {
     assert(spark.read.parquet(dup).count() == 3L, "refused merge must touch nothing")
   }
 
+  test("duplicate affected key across two files: UPDATE, MERGE and mergeKeyed refuse typed, publish nothing") {
+    spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
+    import spark.implicits._
+    // Two files whose key ranges overlap ([0, 99] and [50, 299]): keys 50
+    // and 60 sit once in each, so the survivor read sees each copy in a
+    // different task and the duplicate shows only once the tasks' metrics
+    // merge. The partitioned table puts the two files in two partitions.
+    def fixture(tag: String, partitioned: Boolean): String = {
+      val dir = tmpDir(tag) + "/t"
+      val a = (0L until 100L).map(k => (k, s"a$k", "x"))
+      val b = (Seq(50L, 60L) ++ (200L until 300L)).map(k => (k, s"b$k", "y"))
+      Seq(a, b).foreach { rows =>
+        val w = rows.toDF("k", "v", "p").coalesce(1).write.mode("append")
+        if (partitioned) w.partitionBy("p").parquet(dir) else w.parquet(dir)
+      }
+      Manifest.create(spark, dir, "k")
+      dir
+    }
+    def content(dir: String) = spark.read.parquet(dir).select("k", "v", "p")
+      .collect().map(_.toString).sorted.toSeq
+    def refused(dir: String, what: String)(stmt: => Unit): Unit = {
+      val id = Manifest.latestSnapshotId(spark, dir)
+      val rows = content(dir)
+      val e = intercept[IllegalArgumentException](stmt)
+      assert(e.getMessage.contains("not unique"), s"$what: ${e.getMessage}")
+      assert(Manifest.latestSnapshotId(spark, dir) == id, s"$what published a snapshot")
+      Seq("__delnew", "__delnewp").foreach(sfx =>
+        assert(!new java.io.File(dir + sfx).exists, s"$what left its stage $sfx"))
+      assert(content(dir) == rows, s"$what changed the table")
+    }
+    val dir = fixture("dml_dupwit", partitioned = false)
+    val t = s"graft.`$dir`"
+    // The WHERE picks one of key 50's two rows: one action row, two targets.
+    refused(dir, "UPDATE")(spark.sql(s"UPDATE $t SET v = 'u' WHERE k = 50 AND v = 'a50'"): Unit)
+    Seq((50L, "m", "x")).toDF("k", "v", "p").createOrReplaceTempView("dup_wit_src")
+    refused(dir, "MERGE")(spark.sql(s"MERGE INTO $t t USING dup_wit_src s ON t.k = s.k " +
+      "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"): Unit)
+    refused(dir, "mergeKeyed")(
+      Layout.mergeKeyed(spark, dir, "k", Seq((60L, "z", "x")).toDF("k", "v", "p")): Unit)
+    // An UNaffected duplicate does not refuse, though both files rewrite.
+    val r = spark.sql(s"UPDATE $t SET v = 'u' WHERE k = 70").head()
+    assert(r.getInt(0) == 2 && r.getLong(2) == 1L, r.toString)
+    val after = spark.read.parquet(dir)
+    assert(after.filter(col("k") === 70L).select("v").as[String].collect().toSeq == Seq("u"))
+    assert(after.filter(col("k").isin(50L, 60L)).count() == 4L && after.count() == 202L)
+    val pdir = fixture("dml_dupwit_part", partitioned = true)
+    refused(pdir, "partitioned mergeKeyed")(
+      Layout.mergeKeyed(spark, pdir, "k", Seq((50L, "z", "x")).toDF("k", "v", "p")): Unit)
+  }
+
+  test("empty action sets: UPDATE, MERGE and mergeKeyed over no row change nothing") {
+    spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
+    import spark.implicits._
+    val dir = tmpDir("dml_empty_acts") + "/t"
+    (0L until 100L).map(k => (k, s"a$k")).toDF("k", "v").coalesce(1).write.parquet(dir)
+    Manifest.create(spark, dir, "k")
+    val t = s"graft.`$dir`"
+    val id = Manifest.latestSnapshotId(spark, dir)
+    // The observed key passes see no row at all: their totals still arrive.
+    assert(spark.sql(s"UPDATE $t SET v = 'u' WHERE k > 1000").head().getLong(2) == 0L)
+    Seq.empty[(Long, String)].toDF("k", "v").createOrReplaceTempView("empty_acts_src")
+    val m = spark.sql(s"MERGE INTO $t t USING empty_acts_src s ON t.k = s.k " +
+      "WHEN MATCHED AND s.v = 'x' THEN DELETE WHEN NOT MATCHED THEN INSERT *").head()
+    assert(m.getLong(2) == 0L && m.getLong(3) == 0L && m.getLong(4) == 0L, m.toString)
+    assert(Layout.mergeKeyed(spark, dir, "k", Seq.empty[(Long, String)].toDF("k", "v"))
+      .filesRewritten == 0)
+    assert(Manifest.latestSnapshotId(spark, dir) == id)
+    assert(spark.read.parquet(dir).count() == 100L)
+  }
+
   test("INSERT with an incompatible schema fails BEFORE any file lands (no orphan appends)") {
     spark.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
     val dir = tmpDir("dml_badinsert") + "/docs"
